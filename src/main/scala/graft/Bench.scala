@@ -190,7 +190,10 @@ object Bench {
     // later text_*/incr_cc_merge entries read stay put.
     val pairReleaseAfter: Option[String] =
       pairReleasePoint(selected.map(_._1))
-    val results = selected.map { case (name, fn) =>
+    // Failed entries are kept apart with their causes: never timed, never
+    // in the total, each printed to stderr with its progress line.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[(String, Throwable)]
+    val results = selected.zipWithIndex.flatMap { case ((name, fn), idx) =>
       // noop-format write drains every partition through the full plan
       // (ordering, projection, expression work all billed) without paying
       // for an output sink — unlike count(), which lets Catalyst drop
@@ -204,11 +207,10 @@ object Bench {
       // quiet-machine re-run of identical code purely from host
       // contention; a second pass absorbs one-off scheduler/GC/IO spikes
       // so the recorded number tracks the code, not the neighbor.
-      // A failed query records -1, never a plausible-looking small time.
       // The spread is RECORDED (r11 self-assessment #4): a big spread
       // marks the entry's number as host-noise-limited, so cross-round
       // comparisons of it should be read loosely.
-      val (t, spread) = try {
+      val timed = try Some {
         if (medianOf3(name)) {
           // Spread-triggered escalation (r13 verdict item 5): the r13
           // driver window recorded 20–88s spreads WITHIN a 3-sample
@@ -226,7 +228,9 @@ object Bench {
           val a = once(); val b = once()
           (math.min(a, b), math.abs(a - b))
         }
-      } catch { case _: Throwable => (-1.0, 0.0) }
+      } catch { case e: Throwable => failed += name -> e; None }
+      System.err.println(s"[bench] ${idx + 1}/${selected.size} $name " +
+        timed.fold(s"FAILED: ${failed.last._2}")(r => f"${r._1}%.3f s"))
       // Release the session-scoped persisted relations right after their
       // LAST name-sorted consumer: later families then time on a quiet
       // JVM instead of competing with ~GBs of parked storage memory.
@@ -241,7 +245,7 @@ object Bench {
       if (name == "embed_knn_join") graft.ext.Similarity.clearCaches(spark)
       if (name == "graph_triangles") graft.ext.Graphs.clearCaches(spark)
       if (name == "curation_dsir_weights") graft.ext.LangModel.clearCaches(spark)
-      (name, t, spread)
+      timed.map { case (t, spread) => (name, t, spread) }
     }
     // The driver tail-captures the LAST 2000 bytes of stdout, so the line
     // it parses must be the final one and short: a full 100-query map
@@ -260,16 +264,21 @@ object Bench {
     // noisy = best-of-2 entries whose two runs differed by >50% of the
     // kept time AND >0.5s absolute (sub-second jitter isn't signal)
     val noisy = results.collect {
-      case (k, v, sp) if v > 0 && sp > 0.5 && sp > 0.5 * v &&
+      case (k, v, sp) if sp > 0.5 && sp > 0.5 * v &&
         !medianOf3(k) => k -> sp
     }
     // every median-of-3 entry reports its max−min spread unconditionally
     // — the notes quote medians WITH their spread, never a bare number
     val medianSpread = results.collect {
-      case (k, v, sp) if v >= 0 && medianOf3(k) => k -> sp
+      case (k, _, sp) if medianOf3(k) => k -> sp
     }
+    val failedJson = failed.map { case (k, e) =>
+      Verify.jsonString(k) + ":" + Verify.jsonString(e.toString)
+    }.mkString("{", ",", "}")
+    if (failed.nonEmpty) System.err.println(
+      s"[bench] ${failed.size} failed, not timed: ${failed.map(_._1).mkString(", ")}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"shared_builds":${toJson(sharedBuilds.toSeq)},"best_of_2_spread_noisy":${toJson(noisy)},"median_of_3_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"failed":$failedJson,"shared_builds":${toJson(sharedBuilds.toSeq)},"best_of_2_spread_noisy":${toJson(noisy)},"median_of_3_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
     // cwd is the sbt project base when launched via `sbt runMain`
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))

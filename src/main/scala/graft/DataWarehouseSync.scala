@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.FileInventory
-import graft.sync.{Categories, Matching, Pipeline, SyncResult}
+import graft.sync.{Categories, Pipeline, SyncResult}
 
 /** Engine configuration — the reference's `config.json` shape
   * (`example.config.json`: path + rootCategory; iam from DW.js:359).
@@ -63,6 +63,12 @@ object DataWarehouseSync {
 class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
                         client: GatherClient) {
 
+  // The one run this instance holds: the last syncFilesystem's relations
+  // and the last syncCategories' matched ids, each released by the next
+  // call of the same method.
+  private var run: Option[SyncResult] = None
+  private var matched: Option[DataFrame] = None
+
   /** P1/P2 normalization of a nested project list (DW.js:79-84): drop null
     * metadata.file, flatten for the match core.
     */
@@ -84,8 +90,18 @@ class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
 
   /** E2 (DW.js:67-258): scan -> dedup -> match -> apply actions. Returns
     * the computed [[SyncResult]] so callers can inspect/report (A2).
+    *
+    * Lifecycle: the tree is read and hashed once, and the dedup + match
+    * relations (`marked`, `pass1`, `pass2`) are materialized once, before
+    * any delivery; the three action tables are small plans over them. The
+    * returned result is this instance's one materialized run: it holds the
+    * scanned state the actions were computed from, whatever happens to the
+    * tree afterwards, and stays valid until the next call, which releases
+    * it (see [[SyncResult]]).
     */
   def syncFilesystem(): SyncResult = {
+    run.foreach(Pipeline.release)
+    run = None
     val files = FileInventory.scan(spark, config.path, config.fileGlob)
     // mirrors the reference's fetch-then-ignore of archived projects
     // (DW.js:74,85-89): the relation is built but, like there, unused
@@ -93,43 +109,51 @@ class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
     // ST3 snapshot isolation: the V2 list relations are lazy (each job
     // re-reads the endpoint), so pin one remote snapshot per run — every
     // action table of this sync is computed against the same list state,
-    // like the reference's single Promise.all fetch (DW.js:74). The action
-    // tables themselves stay persisted (they are small — the run's output)
-    // so the returned SyncResult remains consistent with what was applied;
-    // the input lists are released once the actions are materialized.
+    // like the reference's single Promise.all fetch (DW.js:74). The pin is
+    // released once the actions are delivered: the run's own relations
+    // hold what was computed from it.
     val projects = normalizedProjects().persist()
-    val cats = client.listCategories().persist()
     try {
-      val r = Pipeline.sync(files, projects, cats, config.rootCategory)
-      Seq(r.updates, r.archives, r.creates).foreach(_.persist())
+      val r = Pipeline.materialize(Pipeline.sync(
+        files, projects, client.listCategories(), config.rootCategory))
+      run = Some(r)
       client.applyUpdates(r.updates)
       client.applyArchives(r.archives)
       client.applyCreates(r.creates)
       r
-    } finally { projects.unpersist(); cats.unpersist() }
+    } finally projects.unpersist()
   }
 
   /** E3 (DW.js:392-463): folder hierarchy vs server categories; returns
     * matched ids (the reference's resolve value, DW.js:455). Throws on
     * duplicate server keys like the reference (DW.js:432-434).
+    *
+    * Lifecycle: the hierarchy comes from the tree's listing alone, so no
+    * file is read. The returned ids are materialized and stay valid until
+    * the next call, which releases them.
     */
   def syncCategories(): DataFrame = {
-    val files = FileInventory.scan(spark, config.path, config.fileGlob)
-    val folder = Categories.folderCats(files, config.rootCategory)
+    matched.foreach(_.unpersist())
+    matched = None
+    val folder = Categories.folderCats(
+      FileInventory.paths(spark, config.path, config.fileGlob),
+      config.rootCategory).persist()
     // one remote snapshot for the whole pass (ST3): the guard, create,
     // remove and matched relations must all see the same list state —
     // unpinned, toRemove/matched would re-fetch a list already mutated
     // by applyCategoryCreates above
     val server = client.listCategories().persist()
-    val dups = Categories.duplicateKeyGuard(server)
-    if (!dups.isEmpty)
-      throw new IllegalStateException(
-        "Unexpected multiple results: " + dups.collect().mkString(", "))
-    client.applyCategoryCreates(Categories.toCreate(folder, server))
-    client.applyCategoryRemoves(Categories.toRemove(folder, server))
-    val matched = Categories.matched(folder, server).select("id").persist()
-    matched.count() // materialize under the snapshot before releasing it
-    server.unpersist()
-    matched
+    try {
+      val dups = Categories.duplicateKeyGuard(server)
+      if (!dups.isEmpty)
+        throw new IllegalStateException(
+          "Unexpected multiple results: " + dups.collect().mkString(", "))
+      client.applyCategoryCreates(Categories.toCreate(folder, server))
+      client.applyCategoryRemoves(Categories.toRemove(folder, server))
+      val m = Categories.matched(folder, server).select("id").persist()
+      matched = Some(m)
+      m.count() // materialize under the snapshot before releasing it
+      m
+    } finally { server.unpersist(); folder.unpersist() }
   }
 }

@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.RangePartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField,
+  StructType, TimestampType}
 
 /** S1-S5 — the file-inventory source: what the reference's chokidar watcher
   * + md5-file + fs.statSync pipeline produces (DW.js:32-63), restated as a
@@ -29,16 +33,26 @@ import org.apache.spark.sql.functions._
 object FileInventory {
 
   /** binaryFile's fixed schema (streaming sources require it explicitly). */
-  val binaryFileSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("modificationTime",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("length",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.BinaryType)))
+  val binaryFileSchema: StructType = StructType(Seq(
+    StructField("path", StringType),
+    StructField("modificationTime", TimestampType),
+    StructField("length", LongType),
+    StructField("content", BinaryType)))
+
+  /** S5 — the scan-root-relative path of a binaryFile `path` column.
+    * The root is \Q...\E-quoted: a scan path containing regex
+    * metacharacters (+, (, [, ...) must strip literally, not as a pattern.
+    */
+  def relativePath(root: String): Column =
+    regexp_replace(col("path"),
+      "^file:" + java.util.regex.Pattern.quote(root) + "/?", "")
+
+  private def binaryFiles(spark: SparkSession, root: String,
+                          glob: String): DataFrame =
+    spark.read.format("binaryFile")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", glob)
+      .load(root)
 
   /** Scan `root` for files matching `glob` (default: the reference's
     * `.shp` test, case handled by a double glob since globs are
@@ -47,20 +61,28 @@ object FileInventory {
     */
   def scan(spark: SparkSession, root: String,
            glob: String = "*.{shp,SHP}"): DataFrame =
-    enrich(spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", glob)
-      .load(root), root)
+    enrich(binaryFiles(spark, root, glob), root)
+
+  /** The relative paths (`file`) of the files [[scan]] would see, from the
+    * listing alone: `content` is pruned, so no file is opened or hashed.
+    * Enough for anything that needs only the tree's shape (the folder
+    * hierarchy, [[graft.sync.Categories.folderCats]]).
+    */
+  def paths(spark: SparkSession, root: String,
+            glob: String = "*.{shp,SHP}"): DataFrame =
+    binaryFiles(spark, root, glob).select(relativePath(root).as("file"))
 
   /** Derive the (file, md5, size, ino, ord) sync input relation from a raw
     * binaryFile relation — shared by the batch [[scan]] and the per-batch
     * streaming path ([[graft.streaming.StreamingSync]]).
+    *
+    * Every file is read and hashed once, by the sort's shuffle, which the
+    * zipWithIndex job runs before this returns (whenever the sort has more
+    * than one partition). Later consumers read the shuffle's output, not
+    * the files.
     */
   def enrich(raw: DataFrame, root: String): DataFrame = {
-    // \Q...\E-quote the root: a scan path containing regex metacharacters
-    // (+, (, [, ...) must strip literally, not as a pattern
-    val rel = regexp_replace(col("path"),
-      "^file:" + java.util.regex.Pattern.quote(root) + "/?", "")
+    val rel = relativePath(root)
     val base = raw.select(
       rel.as("file"),
       md5(col("content")).as("md5"),
@@ -70,17 +92,23 @@ object FileInventory {
       pmod(xxhash64(rel), lit(Long.MaxValue)).as("ino"))
     // Deterministic scan-order surrogate (the reference's array order is
     // fs-event arrival; we define lexicographic path order, §7.4#1).
-    // Range-partitioned sort + zipWithIndex: two distributed passes —
-    // NOT a single-partition global window, which would serialize the
-    // scan at scale.
-    val spark2 = base.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(
-      base.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "ord", org.apache.spark.sql.types.LongType, nullable = false))
-    val indexed = base.orderBy("file").rdd.zipWithIndex.map {
-      case (r, i) => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-    }
-    spark2.createDataFrame(indexed, schema)
+    // Range-partitioned sort + zipWithIndex: distributed passes — NOT a
+    // single-partition global window, which would serialize the scan at
+    // scale. The range bounds are sampled from the listing alone (`content`
+    // pruned, no file opened), so the sort's shuffle, run by the
+    // zipWithIndex job, is the one pass that reads and hashes the files.
+    // Keys are UTF-8 bytes in unsigned order: SQL's string order, which
+    // String's own (UTF-16) order is not.
+    implicit val utf8Order: Ordering[Array[Byte]] =
+      (a, b) => java.util.Arrays.compareUnsigned(a, b)
+    def key(r: Row): Array[Byte] = r.getString(0).getBytes(UTF_8)
+    val spark = raw.sparkSession
+    val byPath = new RangePartitioner(spark.sparkContext.defaultParallelism,
+      raw.select(rel).rdd.map(r => (key(r), ())))
+    val indexed = base.rdd.keyBy(key).repartitionAndSortWithinPartitions(byPath)
+      .values.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+    spark.createDataFrame(indexed, StructType(base.schema.fields :+
+      StructField("ord", LongType, nullable = false)))
   }
 
   /** Inventory scan of arbitrary files (no extension filter) — metadata
@@ -89,10 +117,7 @@ object FileInventory {
     */
   def inventory(spark: SparkSession, root: String,
                 glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", glob)
-      .load(root)
+    binaryFiles(spark, root, glob)
       .select(
         regexp_replace(col("path"), "^file:", "").as("path"),
         col("length"),

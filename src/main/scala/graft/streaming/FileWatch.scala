@@ -25,9 +25,7 @@ object FileWatch {
       .option("pathGlobFilter", glob)
       .load(root)
       .select(
-        // literal (\Q...\E-quoted) prefix strip — see FileInventory.scan
-        regexp_replace(col("path"),
-          "^file:" + java.util.regex.Pattern.quote(root) + "/?", "").as("file"),
+        graft.sources.FileInventory.relativePath(root).as("file"),
         md5(col("content")).as("md5"),
         col("length").as("size"))
 

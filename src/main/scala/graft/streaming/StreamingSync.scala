@@ -84,11 +84,14 @@ object StreamingSync {
     // argument (a replay must rebuild the same batch payloads)
     val projects = DataWarehouseSync.normalizeProjects(
       client.listProjects(), config.iam).persist()
-    val cats = client.listCategories().persist()
     try {
-      val r = Pipeline.sync(files, projects, cats, config.rootCategory)
-      client.applyUpdates(r.updates)
-      client.applyCreates(r.creates)
-    } finally { projects.unpersist(); cats.unpersist() }
+      // computed once for both deliveries, released with the epoch
+      val r = Pipeline.materialize(Pipeline.sync(
+        files, projects, client.listCategories(), config.rootCategory))
+      try {
+        client.applyUpdates(r.updates)
+        client.applyCreates(r.creates)
+      } finally Pipeline.release(r)
+    } finally projects.unpersist()
   }
 }

@@ -10,6 +10,17 @@ import org.apache.spark.sql.functions._
   * DW.js:238-244); here a run *computes* all action tables first —
   * deterministic, idempotent, replayable — and sinks apply them afterwards
   * (see [[graft.sink.Actions]]). Documented deviation (SURVEY.md §7.4#3).
+  *
+  * Lifecycle: a result from [[Pipeline.sync]] is lazy. One from
+  * [[graft.DataWarehouseSync.syncFilesystem]] is that instance's one
+  * materialized run ([[Pipeline.materialize]]): `marked`, `pass1`, `pass2`
+  * and the three action tables hold the scanned state the actions were
+  * delivered from, however the tree or the remote change afterwards. It
+  * stays valid until the instance's next `syncFilesystem`, which releases
+  * it; reading it after that recomputes from the live inputs. The category
+  * fields are not part of the run: they stay lazy over the remote's live
+  * category list ([[graft.DataWarehouseSync.syncCategories]] reconciles
+  * categories).
   */
 final case class SyncResult(
     marked: DataFrame,          // J7/A1 dedup-marked file inventory
@@ -49,6 +60,33 @@ object Pipeline {
       catMatched = Categories.matched(folder, serverCats))
   }
 
+  /** A run's core relations — everything the action tables read — in
+    * dependency order.
+    */
+  private def core(r: SyncResult): Seq[DataFrame] = Seq(r.marked, r.pass1, r.pass2)
+
+  private def actionTables(r: SyncResult): Seq[DataFrame] =
+    Seq(r.updates, r.archives, r.creates)
+
+  /** Compute `r`'s run once: persist `marked`, `pass1` and `pass2` and
+    * materialize them, so each action table becomes a small plan over
+    * cached relations instead of its own dedup + match DAG (scan included).
+    * The action tables are persisted too and materialize on first read —
+    * their delivery. All are registered before the first job, so each core
+    * relation builds on the cache of the one before it. Returns `r`; free
+    * it with [[release]].
+    */
+  def materialize(r: SyncResult): SyncResult = {
+    (core(r) ++ actionTables(r)).foreach(_.persist())
+    try core(r).foreach(_.count())
+    catch { case e: Throwable => release(r); throw e }
+    r
+  }
+
+  /** Free what [[materialize]] holds, dependents first. */
+  def release(r: SyncResult): Unit =
+    (actionTables(r) ++ core(r).reverse).foreach(_.unpersist())
+
   private val fixtureCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), SyncResult]
 
@@ -65,9 +103,7 @@ object Pipeline {
     fixtureCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
       val r = sync(SyncInputs.files(spark, dir), SyncInputs.projects(spark, dir),
         SyncInputs.serverCats(spark, dir))
-      r.marked.persist()
-      r.pass1.persist()
-      r.pass2.persist()
+      core(r).foreach(_.persist())
       r
     })
 

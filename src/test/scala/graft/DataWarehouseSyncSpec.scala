@@ -1,27 +1,34 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.client.HttpGatherClient
 
 /** In-memory remote CMS: applies action tables to its own state so a
-  * second sync run can verify convergence end-to-end.
+  * second sync run can verify convergence end-to-end. Like a real server,
+  * every apply reads its action table's rows at once into local state:
+  * nothing it holds is a lazy plan over the engine's relations, and each
+  * list call returns a snapshot of the state at that call.
   */
 class InMemoryGatherClient(spark: SparkSession) extends GatherClient {
   import spark.implicits._
 
   // flat internal state (id, iam, p_file, p_md5, title, is_dataset)
-  var projects: DataFrame = Seq.empty[(Long, String, String, String, String, Boolean)]
-    .toDF("id", "iam", "p_file", "p_md5", "title", "is_dataset")
-  var categories: DataFrame = Seq.empty[(Long, String, String, String, String, String)]
-    .toDF("id", "category", "name", "short_name", "path", "iam")
+  private var projectRows = Vector.empty[(Long, String, String, String, String, Boolean)]
+  // (id, category, name, short_name, path, iam)
+  private var categoryRows = Vector.empty[(Long, String, String, String, String, String)]
   var archived: Seq[Long] = Nil
   private var nextId = 1000L
 
+  def projects: DataFrame =
+    projectRows.toDF("id", "iam", "p_file", "p_md5", "title", "is_dataset")
+  def categories: DataFrame =
+    categoryRows.toDF("id", "category", "name", "short_name", "path", "iam")
+
   def seedProject(id: Long, file: String, md5: String): Unit =
-    projects = projects.unionByName(
-      Seq((id, "gatherbot", file, md5, "seeded", true))
-        .toDF("id", "iam", "p_file", "p_md5", "title", "is_dataset"))
+    projectRows :+= ((id, "gatherbot", file, md5, "seeded", true))
 
   override def listProjects(): DataFrame = projects.select(
     col("id"),
@@ -31,43 +38,40 @@ class InMemoryGatherClient(spark: SparkSession) extends GatherClient {
   override def listArchivedProjects(): DataFrame = listProjects().limit(0)
   override def listCategories(): DataFrame = categories
 
-  override def applyCreates(creates: DataFrame): Unit = {
-    val rows = creates.collect().toSeq.map { r =>
+  override def applyCreates(creates: DataFrame): Unit =
+    projectRows ++= creates.collect().toSeq.map { r =>
       nextId += 1
       (nextId, "gatherbot", r.getAs[String]("file"), r.getAs[String]("md5"),
         r.getAs[String]("title"), r.getAs[Boolean]("is_dataset"))
     }
-    projects = projects.unionByName(
-      rows.toDF("id", "iam", "p_file", "p_md5", "title", "is_dataset"))
-  }
 
   override def applyUpdates(updates: DataFrame): Unit = {
-    val u = updates.select(col("id"), col("new_file"), col("md5").as("upd_md5"))
-      .dropDuplicates("id")
-    projects = projects.join(u, Seq("id"), "left")
-      .select(col("id"), col("iam"),
-        coalesce(col("new_file"), col("p_file")).as("p_file"),
-        coalesce(col("upd_md5"), col("p_md5")).as("p_md5"),
-        col("title"), col("is_dataset"))
+    // first update per id wins, like the dropDuplicates("id") it replaces
+    val u = updates.select("id", "new_file", "md5").collect().toSeq
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2)))
+      .reverse.toMap
+    projectRows = projectRows.map { p =>
+      u.get(p._1).fold(p) { case (file, md5) => p.copy(_3 = file, _4 = md5) }
+    }
   }
 
   override def applyArchives(archives: DataFrame): Unit = {
-    archived = archived ++ archives.select("id").collect().map(_.getLong(0))
-    projects = projects.join(archives.select("id"), Seq("id"), "left_anti")
+    val ids = archives.select("id").collect().map(_.getLong(0)).toSeq
+    archived = archived ++ ids
+    projectRows = projectRows.filterNot(p => ids.contains(p._1))
   }
 
-  override def applyCategoryCreates(cats: DataFrame): Unit = {
-    val rows = cats.collect().toSeq.map { r =>
+  override def applyCategoryCreates(cats: DataFrame): Unit =
+    categoryRows ++= cats.collect().toSeq.map { r =>
       nextId += 1
       (nextId, r.getAs[String]("category"), r.getAs[String]("name"),
         r.getAs[String]("short_name"), r.getAs[String]("path"), "gatherbot")
     }
-    categories = categories.unionByName(
-      rows.toDF("id", "category", "name", "short_name", "path", "iam"))
-  }
 
-  override def applyCategoryRemoves(cats: DataFrame): Unit =
-    categories = categories.join(cats.select("id"), Seq("id"), "left_anti")
+  override def applyCategoryRemoves(cats: DataFrame): Unit = {
+    val ids = cats.select("id").collect().map(_.getLong(0)).toSet
+    categoryRows = categoryRows.filterNot(c => ids.contains(c._1))
+  }
 }
 
 /** End-to-end: a reference user's whole workflow — scan a real directory,
@@ -123,5 +127,70 @@ class DataWarehouseSyncSpec extends SparkSpec {
         .toDF("category", "name", "short_name", "path"))
     val dw = new DataWarehouseSync(spark, GraftConfig(root.toString), client)
     intercept[IllegalStateException] { dw.syncCategories() }
+  }
+
+  private def write(root: Path, rel: String, body: String): Unit = {
+    val p = root.resolve(rel)
+    Files.createDirectories(p.getParent)
+    Files.write(p, body.getBytes("UTF-8"))
+    ()
+  }
+
+  test("a run's snapshot stays what its actions were computed from") {
+    val root = Files.createTempDirectory("graft-snap")
+    write(root, "A/one.shp", "one")
+    write(root, "A/two.shp", "two")
+    write(root, "B/three.shp", "three")
+    // a live remote: the list endpoints are files the "server" rewrites
+    val cms = Files.createTempDirectory("graft-snap-cms")
+    def serve(files: Seq[String]): Unit = {
+      write(cms, "projects/part-00000.jsonl", files.zipWithIndex.map { case (f, i) =>
+        s"""{"id":${i + 1},"iam":"gatherbot","p_file":"$f","p_md5":"x","title":"t","is_dataset":true}"""
+      }.mkString("\n"))
+      write(cms, "categories/part-00000.jsonl", "")
+    }
+    serve(Nil)
+    val dw = new DataWarehouseSync(spark, GraftConfig(root.toString),
+      new HttpGatherClient(spark, "file:" + cms))
+    val r = dw.syncFilesystem()
+    def marked = r.marked.select("ord", "file", "md5").collect().toSet
+    def pass1 = r.pass1.select("file", "md5", "project", "match").collect().toSet
+    val (marked0, pass10) = (marked, pass1)
+    assert(marked0.map(_.getString(1)) == Set("A/one.shp", "A/two.shp", "B/three.shp"))
+    assert(pass10.forall(_.isNullAt(2)), "empty remote: nothing matches")
+
+    // after the run: the server applies the creates, and the tree moves on
+    serve(Seq("A/one.shp", "A/two.shp", "B/three.shp"))
+    write(root, "C/four.shp", "four")
+    Files.move(root.resolve("A/two.shp"), root.resolve("C/two.shp"))
+    write(root, "B/three.shp", "three, edited")
+    assert(marked == marked0)
+    assert(pass1 == pass10)
+    assert(r.creates.count() == 3)
+  }
+
+  test("one instance holds one run: each call releases the previous one's relations") {
+    val root = Files.createTempDirectory("graft-held")
+    write(root, "A/one.shp", "one")
+    write(root, "B/two.shp", "two")
+    val client = new InMemoryGatherClient(spark)
+    val dw = new DataWarehouseSync(spark, GraftConfig(root.toString), client)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val runs = (1 to 3).map { i =>
+      write(root, s"C$i/new.shp", s"new $i")
+      val r = dw.syncFilesystem()
+      val m = dw.syncCategories()
+      (r, m, persisted -- before)
+    }
+    val (r1, m1, held1) = runs.head
+    val (r3, m3, held3) = runs.last
+    def relations(r: graft.sync.SyncResult, m: DataFrame) =
+      Seq(r.marked, r.pass1, r.pass2, r.updates, r.archives, r.creates, m)
+    assert(relations(r1, m1).forall(_.storageLevel == StorageLevel.NONE))
+    assert(relations(r3, m3).forall(_.storageLevel != StorageLevel.NONE))
+    assert(held1.nonEmpty && held3.size == held1.size, s"$held1 vs $held3")
+    assert((held1 intersect held3).isEmpty)
+    assert(client.projects.count() == 5 && client.categories.count() == 5)
   }
 }

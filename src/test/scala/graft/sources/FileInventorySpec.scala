@@ -2,8 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 import java.security.MessageDigest
-import graft.SparkSpec
+import java.util.concurrent.atomic.AtomicLong
+import graft.{DataWarehouseSync, GraftConfig, InMemoryGatherClient, SparkSpec}
 import graft.sink.Actions
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.Row
 
 /** S1-S5 over a real temp directory (mirrors the reference's example-dir)
@@ -49,6 +52,44 @@ class FileInventorySpec extends SparkSpec {
     assert(rows(0).getAs[Long]("ino") != rows(2).getAs[Long]("ino"))
     // ord is a dense 0-based lexicographic rank
     assert(rows.map(_.getAs[Long]("ord")).toSeq == Seq(0L, 1L, 2L))
+  }
+
+  /** Bytes the tasks of the jobs `f` runs report as read (input metrics). */
+  private def bytesRead(f: => Unit): Long = {
+    val n = new AtomicLong
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) n.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { f; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("scan reads each file once; syncCategories reads none") {
+    val root = Files.createTempDirectory("graft-read-once")
+    val rnd = new scala.util.Random(5)
+    val file = 32 * 1024
+    for (d <- Seq("a", "a/x", "b"); i <- 0 until 4) {
+      val p = root.resolve(s"$d/f$i.shp")
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array.fill(file)(rnd.nextInt(256).toByte))
+      Files.write(root.resolve(s"$d/f$i.dbf"), Array.fill(file)(1.toByte))
+    }
+    val tree = 12L * file
+    val scanned = bytesRead { FileInventory.scan(spark, root.toString).count() }
+    assert(scanned == tree, s"scan read $scanned bytes of a $tree-byte tree")
+
+    val client = new InMemoryGatherClient(spark)
+    val dw = new DataWarehouseSync(spark, GraftConfig(root.toString), client)
+    val cats = bytesRead { dw.syncCategories() }
+    assert(client.categories.count() == 3) // files/a, files/a/x, files/b
+    // input metrics count reads of Spark's own cached blocks too (here the
+    // folder rows); binaryFile reads whole files, so reading any would add
+    // `file` bytes
+    assert(cats < file, s"syncCategories read $cats bytes")
   }
 
   test("scan feeds the sync pipeline end-to-end (scan -> dedup -> match)") {
