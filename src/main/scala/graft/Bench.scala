@@ -1,26 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  // Staged partial release (r11 verdict item 3, point DERIVED r13,
-  // derivation SHARED with ReleaseInvariantSpec r14): the consumer set
-  // is every dedup_ entry plus the non-dedup consumers of the RELEASED
-  // pair/prefix/cluster memo keys (consumers of only the surviving
-  // late keys are deliberately absent: listing them would just delay
-  // the release) — so renaming or adding a consumer moves the release
-  // point automatically instead of silently double-building.
-  val pairCacheConsumers: Set[String] = Set("curation_contamination",
-    "curation_pipeline", "curation_dup_rate_by_source",
-    "curation_soft_dedup_weights", "curation_split_leakage",
-    "analytics_source_overlap", "dq_blocking_quality")
-  /** The staged-release point: the LAST name-sorted selected consumer.
-    * ReleaseInvariantSpec computes its post-release sweep boundary with
-    * this same function, so a consumer added after today's point moves
-    * both the release and the guard together (r13 advice).
-    */
-  def pairReleasePoint(names: Iterable[String]): Option[String] =
-    names.filter(n => n.startsWith("dedup_") || pairCacheConsumers(n))
-      .toSeq.sorted.lastOption
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -32,34 +12,18 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalesce posture (r15, measured): the r13 "advisory-size
-      // first" posture (parallelismFirst=false, the docs' ETL
-      // recommendation) assumes per-byte work is uniform — but the
-      // dedup/jaccard verify stages are CPU-DENSE at small byte sizes
-      // (a 5.7 MB set-intersect stage carries ~1.8 s of kernel work),
-      // and the advisory coalesce collapses them to ONE task,
-      // serializing the hot stage (stage metrics: 2×1-task×1.8 s inside
-      // a 4.9 s entry; parallelismFirst=true → the same entry in 2.0 s).
-      // Spark's DEFAULT (true — respect default parallelism, coalesce
-      // only by minPartitionSize) is the right posture for this engine's
-      // kernel-heavy profile; deployments with uniform byte-bound
-      // reducers can restore the advisory posture via the env override.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+      // AQE coalescing relies on Spark's default (parallelismFirst=true).
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Name-sorted so shared materializations (memoized sync pipeline,
-    // serverCats, shingle/minhash relations) are billed to the same query
-    // every run — per-query numbers stay comparable across rounds.
+    // Name-sorted so each family's entries run together: its memos
+    // (graft.Memo) are built by whichever entry needs them first, billed
+    // by memo name and subtracted from that entry's time, and released
+    // when the sweep moves on to the next family.
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Untimed-by-the-entries warmup, BILLED EXPLICITLY: each shared
-    // build below is timed into the `shared_builds` section of
-    // bench_detail.json, so memo construction has one attribution
-    // regime (the r8 verdict's ask) — per-entry numbers time only the
-    // entry's own work, the build cost is visible by name, and total
-    // wall-clock still contains everything.
+    // One-time session costs that are not memos are warmed up front,
+    // each timed into the `shared_builds` section of bench_detail.json.
     val sharedBuilds = scala.collection.mutable.LinkedHashMap[String, Double]()
     def warmed(name: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime()
@@ -95,56 +59,6 @@ object Bench {
         graft.streaming.EventStream.tumblingHourly(spark, sfDir).count()
         graft.streaming.EventStream.transformStateUserCounts(spark, sfDir).count()
       }
-      // Shared-relation warmup, same rationale: the memoized shingle/
-      // signature/prefix relations serve many dedup/curation/text
-      // entries, and their first BUILD was billed to whichever consumer
-      // ran first in a given capture (method_report swung 3.2s↔12.8s on
-      // identical code). Built untimed here, every consumer times its
-      // own work; the build cost remains in total wall-clock. Gated on
-      // the ACTUAL memo-cache consumers — text_langid/quality/etc. and
-      // the sampling/split curation entries never touch these relations
-      // and must not pay eight corpus-wide warmup shuffles for nothing.
-      val sharedRelConsumers = Set("curation_contamination",
-        "curation_pipeline", "text_dup_coverage", "text_strip_boilerplate",
-        "text_novelty", "analytics_source_overlap",
-        // consumers of the memoized nearDupClusters fixpoint that are
-        // not dedup_-prefixed (r9 advice: an ONLY-filtered run of one
-        // of these must not absorb the cluster-propagation build)
-        "curation_dup_rate_by_source", "curation_soft_dedup_weights",
-        // rides the verified jaccard pair table (r10)
-        "dq_blocking_quality")
-      if (selected.exists { case (n, _) =>
-        n.startsWith("dedup_") || sharedRelConsumers(n) })
-        warmed("dedup_shared_relations") {
-          graft.ext.TextDedup.warmSharedRelations(spark, sfDir)
-        }
-      // Co-order edge warmup: the graph entries share the memoized
-      // part-pair edge relation and the listed-triangle kernel
-      // (pagerank runs on a different graph and must not trigger the
-      // build; adamic_adar/edge_jaccard ride the triangle listing).
-      // graph_bipartite_project is deliberately absent: it builds its
-      // own customer↔supplier relation (no shared memo) — its per-entry
-      // number IS its own work already.
-      val edgeConsumers = Set("graph_bfs_hops", "graph_clustering_coeff",
-        "graph_degree_dist", "graph_label_prop", "graph_triangles",
-        "graph_adamic_adar", "graph_edge_jaccard",
-        // r10 verdict: the heavy r9/r10 additions share edge memos too —
-        // components peels edges_w2, hyperball/assortativity ride
-        // symEdges/coOrderEdges; unwarmed, each self-paid a shared build
-        "graph_components", "graph_assortativity", "graph_hyperball",
-        // r11 verdict: HITS's private bipartite edge memo was the one
-        // heavy graph relation outside the warm set (60.3s in-sweep vs
-        // 4.65s fresh)
-        "graph_hits",
-        // r15: the rank loops' deg-attached src-partitioned edge memo
-        // (pr_edges_deg) is warmed with the family so its one-time
-        // build isn't billed to whichever rank entry runs first
-        "graph_pagerank", "graph_ppr")
-      if (selected.exists { case (n, _) => edgeConsumers(n) })
-        warmed("graph_shared_relations") {
-          graft.ext.Graphs.warmSharedRelations(spark, sfDir,
-            selected.map(_._1).toSet)
-        }
     }
     // The heavy tail is where host noise dominates (three r12 sweeps of
     // near-identical code spread ±12%; the driver capture disagreed by
@@ -181,15 +95,16 @@ object Bench {
       "dedup_lsh_pr_matrix", "curation_quality_calibration",
       "analytics_theil", "dedup_jaccard_pairs", "window_topk_orders",
       "tpch_q1", "tpch_q18_large")
-    // Staged partial release: the pair/prefix/cluster memos are dropped
-    // right after their LAST name-sorted consumer actually selected in
-    // this sweep (pairReleasePoint above — derivation shared with
-    // ReleaseInvariantSpec), freeing ~GBs of parked storage before the
-    // embed/events/graph families (the r11 graph_hits 60s pathology)
-    // while the occ5/chunks5/doc_sets/minhash/simhash relations the
-    // later text_*/incr_cc_merge entries read stay put.
-    val pairReleaseAfter: Option[String] =
-      pairReleasePoint(selected.map(_._1))
+    // Release rule: all memos go when the sweep moves to a new family
+    // (name prefix before the first `_`). Their live bytes are read just
+    // before, so bench_detail.json can report each memo's footprint.
+    def family(name: String): String = name.takeWhile(_ != '_')
+    val memoBytes = scala.collection.mutable.Map[String, Long]()
+    def releaseMemos(): Unit = {
+      Memo.bytes(spark).foreach { case (k, b) =>
+        memoBytes(k) = math.max(b, memoBytes.getOrElse(k, 0L)) }
+      Memo.clear(spark)
+    }
     // Failed entries are kept apart with their causes: never timed, never
     // in the total, each printed to stderr with its progress line.
     val failed = scala.collection.mutable.ArrayBuffer.empty[(String, Throwable)]
@@ -198,10 +113,12 @@ object Bench {
       // (ordering, projection, expression work all billed) without paying
       // for an output sink — unlike count(), which lets Catalyst drop
       // unreferenced columns and skip result materialization.
+      // Memo builds met on the way are billed by memo name, not here.
       def once(): Double = {
+        val built0 = Memo.buildSeconds(spark)
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        (System.nanoTime() - t0) / 1e9 - (Memo.buildSeconds(spark) - built0)
       }
       // Best-of-2 per query: the r5 capture ran 2.4× slower than a
       // quiet-machine re-run of identical code purely from host
@@ -231,20 +148,8 @@ object Bench {
       } catch { case e: Throwable => failed += name -> e; None }
       System.err.println(s"[bench] ${idx + 1}/${selected.size} $name " +
         timed.fold(s"FAILED: ${failed.last._2}")(r => f"${r._1}%.3f s"))
-      // Release the session-scoped persisted relations right after their
-      // LAST name-sorted consumer: later families then time on a quiet
-      // JVM instead of competing with ~GBs of parked storage memory.
-      // SPARK_GRAFT_NO_STAGED_RELEASE disables it for A/B attribution
-      // runs ONLY (the driver never sets it).
-      if (pairReleaseAfter.contains(name) &&
-          !sys.env.contains("SPARK_GRAFT_NO_STAGED_RELEASE"))
-        graft.ext.TextDedup.releasePairCaches(spark)
-      if (name == "text_strip_boilerplate") graft.ext.TextDedup.clearCaches(spark)
-      if (name == "agg_hll_rollup") graft.ext.Sketches.clearCaches(spark)
-      if (name == "events_autocorr") graft.ext.Events.clearCaches(spark)
-      if (name == "embed_knn_join") graft.ext.Similarity.clearCaches(spark)
-      if (name == "graph_triangles") graft.ext.Graphs.clearCaches(spark)
-      if (name == "curation_dsir_weights") graft.ext.LangModel.clearCaches(spark)
+      if (selected.lift(idx + 1).forall { case (next, _) =>
+        family(next) != family(name) }) releaseMemos()
       timed.map { case (t, spread) => (name, t, spread) }
     }
     // The driver tail-captures the LAST 2000 bytes of stdout, so the line
@@ -277,8 +182,14 @@ object Bench {
     }.mkString("{", ",", "}")
     if (failed.nonEmpty) System.err.println(
       s"[bench] ${failed.size} failed, not timed: ${failed.map(_._1).mkString(", ")}")
+    // every memo by name: builds, build seconds (nested memo builds
+    // excluded), hits and the largest footprint seen at a release
+    val memoJson = Memo.stats(spark).toSeq.sortBy(_._1).map { case (k, m) =>
+      Verify.jsonString(k) + s""":{"builds":${m.builds},"s":${fmt(m.buildS)},""" +
+        s""""hits":${m.hits},"bytes":${memoBytes.getOrElse(k, 0L)}}"""
+    }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"failed":$failedJson,"shared_builds":${toJson(sharedBuilds.toSeq)},"best_of_2_spread_noisy":${toJson(noisy)},"median_of_3_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"failed":$failedJson,"shared_builds":${toJson(sharedBuilds.toSeq)},"memo_builds":$memoJson,"best_of_2_spread_noisy":${toJson(noisy)},"median_of_3_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
     // cwd is the sbt project base when launched via `sbt runMain`
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))

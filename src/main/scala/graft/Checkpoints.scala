@@ -61,14 +61,14 @@ object Checkpoints {
     * relation would have produced), then cut, then drop the inner cache
     * so the blocks live exactly once, in the checkpointed RDD.
     * Release with [[release]] — a plain `unpersist()` cannot see the
-    * checkpoint blocks.
+    * checkpoint blocks. A build that throws leaves no cache entry behind.
     */
   def materialize(df: DataFrame): DataFrame = {
     val cached = df.persist()
-    cached.count()
-    val out = cut(cached)
-    cached.unpersist()
-    out
+    try {
+      cached.count()
+      cut(cached)
+    } finally cached.unpersist()
   }
 
   /** Free a [[materialize]]d relation's storage: the checkpoint blocks

@@ -87,7 +87,7 @@ object ScaleRehearsal {
     "embed_ann_hnsw",
     // r13: both graph-ANN entries re-audited on the occupancy-bounded
     // build (bits grow log n: sf0.1 stays at 4 bits, sf1 crosses to 7 —
-    // the exponent now measures the LINEAR pair-space build; clearAll
+    // the exponent now measures the LINEAR pair-space build; Memo.clear
     // between runs makes each timed run pay its own graph build), plus
     // the NN-Descent round (two seed builds + the Σ deg² 2-hop join —
     // must stay linear)
@@ -186,22 +186,25 @@ object ScaleRehearsal {
     val nHot = spark.read.parquet(s"$SfSkew/documents.parquet")
       .filter(col("doc_id") % 100 === 7).count()
     // stage split (r9 self-assessment #1): the shared shingle/signature/
-    // prefix memos are built UNTIMED-from-the-pair-pass's-view first and
-    // billed to their own stage, so the candidate-generation figure
-    // measures the banded join itself, not memo construction
-    val tMemo0 = System.nanoTime()
-    graft.ext.TextDedup.warmSharedRelations(spark, SfSkew)
-    val tMemo = (System.nanoTime() - tMemo0) / 1e9
-    val tPairs0 = System.nanoTime()
-    val nCand = graft.ext.TextDedup.minhashPairs(spark, SfSkew).count()
-    val tPairs = (System.nanoTime() - tPairs0) / 1e9
-    val tClust0 = System.nanoTime()
-    val clusters = graft.ext.TextDedup.nearDupClustersStar(spark, SfSkew)
-      .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
-      .agg(count(lit(1)).as("n_clusters"), max("sz").as("max_sz"))
-      .collect()(0)
-    val tClust = (System.nanoTime() - tClust0) / 1e9
-    clearAll(spark)
+    // prefix memo builds are read from Memo's build record and billed to
+    // their own stage, so the candidate-generation and clustering figures
+    // measure the banded join and the contraction, not memo construction
+    val memo0 = Memo.buildSeconds(spark)
+    def stage[A](f: => A): (A, Double) = {
+      val built0 = Memo.buildSeconds(spark)
+      val t0 = System.nanoTime()
+      val a = f
+      (a, (System.nanoTime() - t0) / 1e9 - (Memo.buildSeconds(spark) - built0))
+    }
+    val (nCand, tPairs) =
+      stage(graft.ext.TextDedup.minhashPairs(spark, SfSkew).count())
+    val (clusters, tClust) = stage(
+      graft.ext.TextDedup.nearDupClustersStar(spark, SfSkew)
+        .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
+        .agg(count(lit(1)).as("n_clusters"), max("sz").as("max_sz"))
+        .collect()(0))
+    val tMemo = Memo.buildSeconds(spark) - memo0
+    Memo.clear(spark)
     println(f"[rehearse] skew: hot=$nHot%d memo=$tMemo%.2fs cand=$nCand%d " +
       f"pairs=$tPairs%.2fs clusters=${clusters.getLong(0)}%d " +
       f"max=${clusters.getLong(1)}%d star=$tClust%.2fs")
@@ -219,15 +222,6 @@ object ScaleRehearsal {
     SparkEntry.queries(name)(spark, dir)
       .write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
-  }
-
-  private def clearAll(spark: SparkSession): Unit = {
-    graft.ext.TextDedup.clearCaches(spark)
-    graft.ext.Events.clearCaches(spark)
-    graft.ext.Similarity.clearCaches(spark)
-    graft.ext.Graphs.clearCaches(spark)
-    graft.ext.LangModel.clearCaches(spark)
-    graft.ext.Sketches.clearCaches(spark)
   }
 
   def main(args: Array[String]): Unit = {
@@ -257,17 +251,17 @@ object ScaleRehearsal {
       // dominate a cold session's first build (a cold-first capture
       // read sf0.1 SLOWER than sf1), then best-of-2 per scale
       graft.ext.Similarity.warmKnnGraph(spark, Sf01)
-      graft.ext.Similarity.clearCaches(spark)
+      Memo.clear(spark)
       val rows = Seq(Sf01, Sf1).map { dir =>
         def once(): (Double, Long) = {
-          graft.ext.Similarity.clearCaches(spark)
+          Memo.clear(spark)
           val t0 = System.nanoTime()
           val edges = graft.ext.Similarity.warmKnnGraph(spark, dir)
           ((System.nanoTime() - t0) / 1e9, edges)
         }
         val (ta, edges) = once()
         val (tb, _) = once()
-        graft.ext.Similarity.clearCaches(spark)
+        Memo.clear(spark)
         val t = math.min(ta, tb)
         println(f"[rehearse] knn build $dir%-22s t=$t%7.2fs edges=$edges%d")
         (t, edges)
@@ -290,9 +284,9 @@ object ScaleRehearsal {
         else ""
       val rows = Entries.map { e =>
         val t01 = time(spark, e, Sf01)
-        clearAll(spark)
+        Memo.clear(spark)
         val t1 = time(spark, e, Sf1)
-        clearAll(spark)
+        Memo.clear(spark)
         val exp = math.log(t1 / t01) / math.log(Replicas.toDouble)
         println(f"[rehearse] $e%-28s sf0.1=$t01%7.2fs  sf1=$t1%8.2fs  exponent=$exp%5.2f")
         f"""  "$e": {"sf01_s": $t01%.2f, "sf1_s": $t1%.2f, "exponent": $exp%.3f}"""
@@ -337,7 +331,7 @@ object ScaleRehearsal {
         val nRows = graft.streaming.EventStream
           .streamNearDupGatePreSigned(spark, bandsOut).count()
         val tGate = (System.nanoTime() - tGate0) / 1e9
-        graft.ext.TextDedup.clearCaches(spark)
+        Memo.clear(spark)
         println(f"[rehearse] presigned gate $dir%-14s sign=$tSign%6.2fs " +
           f"gate=$tGate%6.2fs docs=$nRows%d (${nRows / tGate}%.0f docs/s gate-only)")
         (tSign, tGate, nRows)
@@ -353,7 +347,7 @@ object ScaleRehearsal {
       }
       val json =
         s"""{"replicas": $Replicas, "note": "exponent = log10(t_sf1/t_sf0.1); linear work at 10x data with fixed cores lands near 1.0, sublinear means fixed overheads still dominate",
- "cache_state": "rehearsal timings run after per-family shared-relation warmup (same memo regime as Bench's shared_builds) but in a FRESH session with its own JIT/codegen state and NO best-of-2 pass - a rehearsal number is comparable to another rehearsal number, never to bench_detail.json (best-of-2, long-lived warmed session); exponents are the rehearsal's only cross-artifact claim",
+ "cache_state": "each rehearsal timing pays its own memo builds (Memo.clear between runs, unlike Bench, which bills builds by memo name) in a FRESH session with its own JIT/codegen state and NO best-of-2 pass - a rehearsal number is comparable to another rehearsal number, never to bench_detail.json (best-of-2, long-lived warmed session); exponents are the rehearsal's only cross-artifact claim",
 $psJson
 $skewJson "entries": {
 ${rows.mkString(",\n")}

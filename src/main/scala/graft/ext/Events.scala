@@ -20,25 +20,6 @@ object Events {
 
   private val D2 = DecimalType(18, 2)
 
-  /** Session-scoped memo for the densified hourly-volume series (X104):
-    * a per-call persist parked one unreleasable copy per invocation
-    * (two per bench best-of-2 pass) — the exact leak the Graphs /
-    * LangModel memos exist to prevent. Keyed (applicationId, dir),
-    * released by [[clearCaches]].
-    */
-  private val relCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
-  /** Release this app's memoized relations (Bench staged release /
-    * long-lived services).
-    */
-  def clearCaches(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    relCache.keys.filter(_._1 == app).foreach { k =>
-      relCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-  }
-
   /** Tumbling 1-hour windows via the native `window()` operator. The
     * window struct is surfaced as a formatted string for cross-engine
     * comparison (DuckDB: `date_trunc('hour', ts)`).
@@ -804,17 +785,18 @@ object Events {
     */
   def autocorr(spark: SparkSession, dir: String,
                lags: Seq[Int] = Seq(1, 24)): DataFrame = {
-    val series = relCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir), graft.Checkpoints.materialize {
-        val counts = Tables.events(spark, dir)
-          .select(expr("unix_micros(ts) div 3600000000").as("h"))
-          .groupBy("h").agg(count(lit(1)).as("c"))
-        val grid = counts.agg(min("h").as("h0"), max("h").as("h1"))
-          .select(explode(sequence(col("h0"), col("h1"))).as("h"))
-        grid.join(counts, Seq("h"), "left")
-          .select(col("h"), coalesce(col("c"), lit(0L)).as("c"))
-          .persist()
-      })
+    // the densified hourly-volume series, memoized: every lag's join
+    // reads it twice, and a per-call persist parked one unreleasable
+    // copy per invocation
+    val series = graft.Memo(spark, dir, "events.hourly_series") {
+      val counts = Tables.events(spark, dir)
+        .select(expr("unix_micros(ts) div 3600000000").as("h"))
+        .groupBy("h").agg(count(lit(1)).as("c"))
+      val grid = counts.agg(min("h").as("h0"), max("h").as("h1"))
+        .select(explode(sequence(col("h0"), col("h1"))).as("h"))
+      grid.join(counts, Seq("h"), "left")
+        .select(col("h"), coalesce(col("c"), lit(0L)).as("c"))
+    }
     lags.map { lag =>
       val a = series.select(col("h"), col("c").as("x"))
       val sh = series.select((col("h") + lag).as("h"), col("c").as("y"))

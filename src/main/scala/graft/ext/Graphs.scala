@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.tables.Tables
 
 /** Iterative graph analytics over relationship graphs derived from the
@@ -54,9 +55,9 @@ object Graphs {
     * exchange left per round is the dst-keyed contribution aggregate.
     */
   private def prEdgesDeg(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "pr_edges_deg") {
+    Memo(spark, dir, "graph.pr_edges_deg") {
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = memo(spark, dir, "pr_edges")(prEdges(spark, dir))
+      val edges = Memo(spark, dir, "graph.pr_edges")(prEdges(spark, dir))
       val outdeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       edges.join(outdeg, Seq("src"))
         .repartition(parts, col("src"))
@@ -66,11 +67,10 @@ object Graphs {
   def pagerank(spark: SparkSession, dir: String,
                iters: Int = 3, d: Double = 0.85): DataFrame = {
     // memoized (not per-call persisted) so repeated calls share one copy
-    // and clearCaches releases them — same discipline as the co-order
-    // edge family below
-    val edges = memo(spark, dir, "pr_edges")(prEdges(spark, dir))
+    // — same discipline as the co-order edge family below
+    val edges = Memo(spark, dir, "graph.pr_edges")(prEdges(spark, dir))
     val edgesDeg = prEdgesDeg(spark, dir)
-    val nodes = memo(spark, dir, "pr_nodes")(
+    val nodes = Memo(spark, dir, "graph.pr_nodes")(
       edges.select(col("src").as("id")).distinct())
     val nRow = nodes.agg(count(lit(1)).cast("double").as("n"))
     // rank vector carries n so every round's teleport term is plan-side
@@ -92,32 +92,6 @@ object Graphs {
     out
   }
 
-  /** The distinct co-order part graph: an undirected edge per pair of
-    * parts appearing in the same order. The per-order self-join is
-    * bounded by order size (≤7 lines in the fixture, small everywhere in
-    * practice), so the pair space is Σ|order|² — never corpus².
-    *
-    * MEMOIZED + persisted once per (session, corpus) like the dedup
-    * family's shingle relations: five graph entries (triangles,
-    * clustering coefficient, BFS, label propagation, degree
-    * distribution) consume the same edge set, and unmemoized each paid
-    * the full pair-join + distinct build (~4 s of every graph entry at
-    * sf0.1 was this). At 100 TB this relation is what you'd bucket to
-    * parquet by node id.
-    */
-  private val relCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
-  // materialize (not persist): lineage-cut memo — consumers plan
-  // against a LogicalRDD leaf (partitioning + materialized stats
-  // preserved) instead of re-walking the build DAG per run (r15; see
-  // Checkpoints.materialize).
-  private def memo(spark: SparkSession, dir: String, key: String)
-                  (build: => DataFrame): DataFrame =
-    relCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, key),
-      graft.Checkpoints.materialize(build))
-
   /** The min-support-2 co-order edge relation: a pair of parts is an
     * edge only when AT LEAST TWO distinct orders contain both — the
     * market-basket support cut that removes single-co-occurrence noise
@@ -125,7 +99,7 @@ object Graphs {
     * aggregate instead of a distinct; memoized for the same reason.
     */
   private def minSupportEdges(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "edges_w2") {
+    Memo(spark, dir, "graph.edges_w2") {
       val li = Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -137,8 +111,20 @@ object Graphs {
         .select("a", "b")
     }
 
+  /** The distinct co-order part graph: an undirected edge per pair of
+    * parts appearing in the same order. The per-order self-join is
+    * bounded by order size (≤7 lines in the fixture, small everywhere in
+    * practice), so the pair space is Σ|order|² — never corpus².
+    *
+    * MEMOIZED once per (session, corpus) like the dedup family's shingle
+    * relations: five graph entries (triangles, clustering coefficient,
+    * BFS, label propagation, degree distribution) consume the same edge
+    * set, and unmemoized each paid the full pair-join + distinct build
+    * (~4 s of every graph entry at sf0.1 was this). At 100 TB this
+    * relation is what you'd bucket to parquet by node id.
+    */
   private def coOrderEdges(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "edges") {
+    Memo(spark, dir, "graph.edges") {
       val li = Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()
@@ -157,85 +143,13 @@ object Graphs {
     * sharing saves BFS the private symmetrize+persist it used to do.
     */
   private def symEdges(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "sym") {
+    Memo(spark, dir, "graph.sym") {
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val und = coOrderEdges(spark, dir)
       und.select(col("a").as("u"), col("b").as("v"))
         .unionByName(und.select(col("b").as("u"), col("a").as("v")))
         .repartition(parts, col("v"))
     }
-
-  /** Materialize the memoized shared relations untimed (Bench warmup
-    * hook — same rationale as [[TextDedup.warmSharedRelations]]: the
-    * first consumer otherwise gets billed for the shared build and the
-    * recorded number swings with execution order). `names` gates each
-    * derived relation on its ACTUAL consumers so a subset bench run
-    * doesn't pay for relations nobody reads; the base edge relation is
-    * always built (every consumer needs it).
-    */
-  def warmSharedRelations(spark: SparkSession, dir: String,
-                          names: Set[String] = Set.empty): Unit = {
-    // Base edge relation FIRST, serially: several chains below derive
-    // from it and a pooled first-build would race its memo key.
-    coOrderEdges(spark, dir).count()
-    // Independent memo chains overlap on a small pool (guide §2.6; see
-    // TextDedup.warmSharedRelations) — wall-clock only, same relations,
-    // same shared_builds billing. None of these builders mutates
-    // session confs (the conf-mutating fixpoints are entry-side).
-    val chains = Seq.newBuilder[() => Unit]
-    if (names.exists(Set("graph_bfs_hops", "graph_label_prop",
-      "graph_hyperball")))
-      chains += (() => {
-        symEdges(spark, dir).count()
-        // hyperball's src-partitioned self-loop edge stream (r15):
-        // derived from symEdges (chained), reused every round of every
-        // call — warmed with the family so the one-time repartition
-        // isn't billed to sample 1
-        if (names.contains("graph_hyperball"))
-          hyperEloop(spark, dir).count()
-      })
-    // the star-CC entry peels the min-support (w >= 2) edge memo — the
-    // r10 bench billed that build to graph_components itself (19.7s of
-    // which ~half was memo construction)
-    if (names.contains("graph_components"))
-      chains += (() => minSupportEdges(spark, dir).count())
-    // tri_counts materializes the memoized tri_list too — the listing
-    // the whole triangle family (counts, edge-Jaccard, Adamic-Adar)
-    // shares; without adamic_adar/edge_jaccard in the trigger set the
-    // alphabetically-first consumer absorbed an ~11 s shared build
-    if (names.exists(Set("graph_triangles", "graph_clustering_coeff",
-      "graph_adamic_adar", "graph_edge_jaccard")))
-      chains += (() => triangleCounts(spark, dir).count())
-    // HITS iterates on its own bipartite cust→part relation (not the
-    // co-order part graph); its four plan references made the unwarmed
-    // build the sweep's costliest attribution miss (r11: 60.3 s)
-    if (names.contains("graph_hits"))
-      chains += (() => {
-        hitsEdges(spark, dir).count()
-        // the two key-partitioned copies the half-rounds join (r15)
-        val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        memo(spark, dir, "hits_edges_bypart")(
-          hitsEdges(spark, dir).repartition(parts, col("part"))
-            .sortWithinPartitions("part")).count()
-        memo(spark, dir, "hits_edges_bycust")(
-          hitsEdges(spark, dir).repartition(parts, col("cust"))
-            .sortWithinPartitions("cust")).count()
-      })
-    // the rank loops' deg-attached, src-partitioned edge relation (r15)
-    if (names.exists(Set("graph_pagerank", "graph_ppr")))
-      chains += (() => prEdgesDeg(spark, dir).count())
-    graft.ext.TextDedup.runPooled(chains.result())
-  }
-
-  /** Release the session-scoped edge relation (Bench staged release /
-    * long-lived services).
-    */
-  def clearCaches(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    relCache.keys.filter(_._1 == app).foreach { k =>
-      relCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-  }
 
   /** X59: triangle counting on the co-order part graph via the
     * degree-oriented node-iterator (the MapReduce-classic of Suri &
@@ -298,14 +212,14 @@ object Graphs {
     * second caller reuses one persisted node-sized count relation
     * instead of re-running orientation + adjacency + intersection
     * (~7 s at sf0.1). The intermediate oriented edge list is memoized
-    * too (rather than persisted per call) so `clearCaches` releases it —
+    * too (rather than persisted per call) so `Memo.clear` releases it —
     * a per-call persist parked an unreleasable copy per invocation.
     */
   /** Sorted out-adjacency arrays over the oriented edges — memoized:
     * the triangle kernel and the edge-Jaccard kernel share it.
     */
   private def outAdjacency(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "adj") {
+    Memo(spark, dir, "graph.adj") {
       orientedEdges(spark, dir).groupBy("src")
         .agg(sort_array(collect_set(col("dst"))).as("nbrs"))
     }
@@ -318,7 +232,7 @@ object Graphs {
     * (app, dir) instead of once per consumer — the same shared-kernel
     * rule that fixed label-prop/modularity. The persisted relation is
     * O(#triangles) rows of three BIGINTs (spillable MEMORY_AND_DISK,
-    * released by `clearCaches` with the rest of the family), versus
+    * released by `Memo.clear` with the rest of the family), versus
     * re-running the intersection join whose input is the same size.
     *
     * Triangles closed at edge (u,v) are the common out-neighbors of u
@@ -327,7 +241,7 @@ object Graphs {
     * boxed hash set dominated the profile over Σ outdeg² cells.
     */
   private def triangleList(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "tri_list") {
+    Memo(spark, dir, "graph.tri_list") {
       val oriented = orientedEdges(spark, dir)
       val adj = outAdjacency(spark, dir)
       graft.functions.SortedIntersectLongs.register(spark)
@@ -342,7 +256,7 @@ object Graphs {
     }
 
   private def triangleCounts(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "tri_counts") {
+    Memo(spark, dir, "graph.tri_counts") {
       // per-corner attribution: each listed triangle counts once at each
       // of its three corners
       triangleList(spark, dir)
@@ -351,11 +265,11 @@ object Graphs {
     }
 
   /** Degree-oriented edges: each undirected edge pointed from its
-    * lower-(deg, id) endpoint. Memoized in relCache (not per-call
-    * persisted) so the Bench staged release covers it.
+    * lower-(deg, id) endpoint. Memoized (not per-call persisted) so
+    * `Memo.clear` releases it.
     */
   private def orientedEdges(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "oriented") {
+    Memo(spark, dir, "graph.oriented") {
       val und = coOrderEdges(spark, dir)
       val deg = und.select(col("a").as("id"))
         .unionByName(und.select(col("b").as("id")))
@@ -459,8 +373,8 @@ object Graphs {
 
   /** The raw (id, lab) assignment under X88's fixed-round propagation —
     * shared by the community listing and the X146 modularity audit.
-    * MEMOIZED (persisted once per session/corpus/round-count, released
-    * by [[clearCaches]]) like the edge relations: label prop and
+    * MEMOIZED (once per session/corpus/round-count, released by
+    * [[graft.Memo.clear]]) like the edge relations: label prop and
     * modularity each consume it, and unmemoized BOTH paid the full
     * `rounds`-pass join-aggregate iteration (21 s of the r7 bench was
     * exactly this duplication; modularity additionally checkpointed its
@@ -468,9 +382,9 @@ object Graphs {
     */
   private def labelPropLabels(spark: SparkSession, dir: String,
                               rounds: Int): DataFrame =
-    memo(spark, dir, s"lplabels:$rounds") {
+    Memo(spark, dir, s"graph.lplabels:$rounds") {
       val sym = symEdges(spark, dir)
-      val nodes = memo(spark, dir, "nodes")(
+      val nodes = Memo(spark, dir, "graph.nodes")(
         sym.select(col("u").as("id")).distinct())
       var labels = nodes.select(col("id"), col("id").as("lab"))
       for (_ <- 1 to rounds) {
@@ -507,7 +421,7 @@ object Graphs {
     */
   def modularity(spark: SparkSession, dir: String,
                  rounds: Int = 3): DataFrame = {
-    // the memoized propagation (persisted in relCache) serves all three
+    // the memoized propagation serves all three
     // consumers below AND graph_label_prop — no private checkpoint copy
     val labels = labelPropLabels(spark, dir, rounds)
     val und = coOrderEdges(spark, dir)
@@ -609,9 +523,9 @@ object Graphs {
                            restart: Double = 0.15,
                            nSeeds: Int = 5,
                            seedIds: Option[Seq[Long]] = None): DataFrame = {
-    val edges = memo(spark, dir, "pr_edges")(prEdges(spark, dir))
+    val edges = Memo(spark, dir, "graph.pr_edges")(prEdges(spark, dir))
     val edgesDeg = prEdgesDeg(spark, dir)
-    val nodes = memo(spark, dir, "pr_nodes")(
+    val nodes = Memo(spark, dir, "graph.pr_nodes")(
       edges.select(col("src").as("id")).distinct())
     // seed set as a LIBRARY parameter (r9 self-assessment #3): callers
     // personalize on any node set; the oracle-pinned entry keeps the
@@ -740,14 +654,10 @@ object Graphs {
     */
   /** The bipartite customer→part purchase edge list HITS iterates on —
     * memoized because the plan references it four times (one join per
-    * half-round); warmed with the rest of the graph family so the
-    * distinct-build isn't billed to graph_hits mid-sweep (r11 verdict
-    * item 3: graph_hits read 60.3 s in the long-sweep capture vs 4.65 s
-    * fresh — the private memo was the one heavy graph relation outside
-    * the warm set).
+    * half-round).
     */
   private def hitsEdges(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "hits_edges") {
+    Memo(spark, dir, "graph.hits_edges") {
       Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("part"))
         .join(Tables.orders(spark, dir)
@@ -764,10 +674,10 @@ object Graphs {
     // node-sized score vectors move, plus the inherent opposite-keyed
     // aggregate exchange. Sums stay DECIMAL(38,0): order-free, exact.
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val byPart = memo(spark, dir, "hits_edges_bypart")(
+    val byPart = Memo(spark, dir, "graph.hits_edges_bypart")(
       hitsEdges(spark, dir).repartition(parts, col("part"))
         .sortWithinPartitions("part"))
-    val byCust = memo(spark, dir, "hits_edges_bycust")(
+    val byCust = Memo(spark, dir, "graph.hits_edges_bycust")(
       hitsEdges(spark, dir).repartition(parts, col("cust"))
         .sortWithinPartitions("cust"))
     val dec = "decimal(38,0)"
@@ -1004,7 +914,7 @@ object Graphs {
       .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
     val ord = Tables.orders(spark, dir)
       .select(col("o_orderkey").as("ok"), col("o_custkey").as("ck"))
-    val edges = memo(spark, dir, "sssp_edges") {
+    val edges = Memo(spark, dir, "graph.sssp_edges") {
       val trade = li.join(ord, Seq("ok"))
         .groupBy(col("ck").as("cust"), (col("sk") + lit(10000000L)).as("supp"))
         .agg(count(lit(1)).as("n"))
@@ -1298,7 +1208,7 @@ object Graphs {
     // memoized: the walk ENTRY and the X206 co-occurrence table both
     // consume this corpus (the nearDupClusters lesson — unmemoized the
     // second consumer re-ran every frontier join)
-    memo(spark, dir, s"walks:$steps") {
+    Memo(spark, dir, s"graph.walks:$steps") {
       randomWalksUncached(spark, dir, steps)
     }
 
@@ -1504,7 +1414,7 @@ object Graphs {
     * buys that for every round of every call.
     */
   private def hyperEloop(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "hyper_eloop") {
+    Memo(spark, dir, "graph.hyper_eloop") {
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val edges = symEdges(spark, dir)
         .select(col("u").as("src"), col("v").as("dst"))

@@ -22,24 +22,6 @@ import graft.tables.Tables
   */
 object LangModel {
 
-  /** Session-scoped memo for the DSIR per-(doc, bucket) relation —
-    * keyed like [[TextDedup]]'s so repeated calls (bench best-of-2,
-    * warmups) reuse ONE persisted copy instead of parking a fresh one
-    * per invocation.
-    */
-  private val relCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.DataFrame]
-
-  /** Release this app's memoized relations (Bench staged release /
-    * long-lived services).
-    */
-  def clearCaches(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    relCache.keys.filter(_._1 == app).foreach { k =>
-      relCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-  }
-
   /** Lowercased alphabetic word stream — one row per token occurrence.
     * The `[^a-z]+` split matches the oracle's `string_split_regex`
     * tokenization exactly (both emit boundary empties, both drop them).
@@ -144,17 +126,15 @@ object LangModel {
       .withColumn("b",
         conv(substring(md5(col("feat")), 1, 4), 16, 10).cast("long") % buckets)
     // collapse the (corpus-length) feature stream to per-(doc, bucket)
-    // counts FIRST and persist that (memoized per session): both the
-    // model aggregate and the scoring join consume it, and without the
-    // persist each consumer would re-run the full explode+md5 pass
-    // (measured 5.3 s → ~2 s at sf0.1). ≤ |docs|·buckets rows — at
-    // 100 TB these are exactly the partial-aggregate rows a two-level
-    // hash aggregate produces anyway.
-    val perDoc = relCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$dir#$buckets"),
-      graft.Checkpoints.materialize(feats
-        .groupBy("doc_id", "source", "b")
-        .agg(count(lit(1)).as("cnt"))))
+    // counts FIRST and memoize that: both the model aggregate and the
+    // scoring join consume it, and repeated calls reuse ONE copy instead
+    // of each re-running the full explode+md5 pass (measured 5.3 s →
+    // ~2 s at sf0.1). ≤ |docs|·buckets rows — at 100 TB these are
+    // exactly the partial-aggregate rows a two-level hash aggregate
+    // produces anyway.
+    val perDoc = graft.Memo(spark, dir, s"lm.dsir_per_doc_$buckets")(feats
+      .groupBy("doc_id", "source", "b")
+      .agg(count(lit(1)).as("cnt")))
     // bucket-count the two slices in ONE pass (conditional aggregates),
     // then close over the tiny totals row to form smoothed log-ratios
     val tgt = col("source") === "src0"
@@ -214,12 +194,10 @@ object LangModel {
     * and has three consumers (its own entry, the perplexity sweep and
     * the quality-calibration audit), each of which re-ran the whole
     * pipeline per call. Memoized per (app, dir) like the dedup pair
-    * table; released with the rest of the LangModel memos.
+    * table.
     */
   def perplexity3(spark: SparkSession, dir: String): DataFrame =
-    relCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$dir#perplexity3"),
-      graft.Checkpoints.materialize(perplexity3Uncached(spark, dir)))
+    graft.Memo(spark, dir, "lm.perplexity3")(perplexity3Uncached(spark, dir))
 
   private def perplexity3Uncached(spark: SparkSession,
                                   dir: String): DataFrame = {

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Memo
 import graft.tables.Tables
 
 /** X3 — vector similarity search over the `embeddings` table
@@ -240,8 +241,8 @@ object Similarity {
     // sign region and recall was capped at the measured 3/10; the
     // cross-table edges bridge regions. Both memos are shared with
     // hnswTopK's layer 0 and knnDescentAudit's seed.
-    val edges = knnGraphMemo(spark, dir, "all", m)(buildKnnEdges(n, m))
-      .unionByName(knnGraphMemo(spark, dir, "all_alt", m)(
+    val edges = Memo(spark, dir, s"embed.knn_all_m$m")(buildKnnEdges(n, m))
+      .unionByName(Memo(spark, dir, s"embed.knn_all_alt_m$m")(
         buildKnnEdges(n, m, table = 1)))
       .distinct()
     // entry = the min-id SCORED node: the walk must start somewhere it
@@ -327,8 +328,8 @@ object Similarity {
     // capped by whatever of the true top-k happens to share it (the
     // measured 3/10). Cross-table edges bridge regions at every layer.
     def layerEdges(members: DataFrame, cut: String): DataFrame =
-      knnGraphMemo(spark, dir, cut, m)(buildKnnEdges(members, m))
-        .unionByName(knnGraphMemo(spark, dir, cut + "_alt", m)(
+      Memo(spark, dir, s"embed.knn_${cut}_m$m")(buildKnnEdges(members, m))
+        .unionByName(Memo(spark, dir, s"embed.knn_${cut}_alt_m$m")(
           buildKnnEdges(members, m, table = 1)))
         .distinct()
     val e2 = layerEdges(n.filter(col("h") < 16), "h16")
@@ -404,8 +405,8 @@ object Similarity {
     val b = Tables.embeddings(spark, dir)
     val n = b.select(col("vec_id"), dbl(col("embedding")).as("v"),
       col("embedding"))
-    val edges = knnGraphMemo(spark, dir, "all", m)(buildKnnEdges(n, m))
-      .unionByName(knnGraphMemo(spark, dir, "all_alt", m)(
+    val edges = Memo(spark, dir, s"embed.knn_all_m$m")(buildKnnEdges(n, m))
+      .unionByName(Memo(spark, dir, s"embed.knn_all_alt_m$m")(
         buildKnnEdges(n, m, table = 1)))
       .distinct()
     val D96 = org.apache.spark.sql.types.DecimalType(9, 6)
@@ -514,47 +515,6 @@ object Similarity {
     }.reduce(_.unionByName(_)).orderBy("n_probes")
   }
 
-  /** The IVF index, memoized per (application, dir, nCells): a
-    * DETERMINISTIC hash-seeded coarse quantizer -> (cell-assigned
-    * vectors, centroid table). Centroids are the `nCells` corpus vectors
-    * with the smallest md5(vec_id) — an order-free, engine-portable seed
-    * choice (k-means at zero iterations / a Voronoi partition around
-    * random medoids), so cell assignment and therefore the whole probe
-    * result is exactly statable in SQL and hash-oracled; a TRAINED
-    * quantizer would only sharpen the cells (the recall bound entry
-    * guards quality either way), at the price of order-dependent float
-    * centroids no second engine can reproduce. At 100 TB the seed pick
-    * is a top-k by hash (no shuffle beyond it), assignment is one
-    * narrow broadcast pass, and `cell` is the partitioning/bucketing
-    * key of the inverted lists.
-    */
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), (DataFrame, DataFrame)]
-
-  /** The memoized kNN graphs of the graph-ANN tier, keyed
-    * (app, dir, layerCut, m): a deployed graph index is built once per
-    * corpus and queried many times, so the build must not be re-paid
-    * per search — X268's single-layer graph IS X287's layer-0 graph
-    * (same members, same m, same buckets), so the two entries genuinely
-    * share the big build, exactly the ivfCache discipline. The key
-    * carries NO query id (r12 advice): the index covers all vectors and
-    * the query node is filtered at search time, so one persisted graph
-    * serves every query a long-lived service issues instead of
-    * accumulating one near-identical copy per query id. First consumer
-    * pays the billed build; Bench's embed-family release point and
-    * [[clearCaches]] drop them with the other ANN indexes.
-    */
-  private val knnGraphCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String, Int), DataFrame]
-
-  private def knnGraphMemo(spark: SparkSession, dir: String, cut: String,
-                           m: Int)(build: => DataFrame): DataFrame =
-    knnGraphCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, cut, m),
-      // lineage-cut memo (r15): the graph builds are bucket-join +
-      // window towers; consumers now plan against a LogicalRDD leaf
-      graft.Checkpoints.materialize(build))
-
   /** Build-leg instrument (ScaleRehearsal's `knn` mode): construct and
     * materialize the shared layer-0 kNN graph for `dir`, returning the
     * edge count — times the INDEX BUILD alone, with none of the search
@@ -567,58 +527,53 @@ object Similarity {
     val n = Tables.embeddings(spark, dir)
       .select(col("vec_id"), dbl(col("embedding")).as("v"),
         col("embedding"))
-    knnGraphMemo(spark, dir, "all", m)(buildKnnEdges(n, m)).count()
+    Memo(spark, dir, s"embed.knn_all_m$m")(buildKnnEdges(n, m)).count()
   }
 
-  /** Unpersist this app's memoized IVF relations — see
-    * [[TextDedup.clearCaches]] for when a long-lived service needs this.
+  /** The IVF index for `nCells`: a DETERMINISTIC hash-seeded coarse
+    * quantizer -> (cell-assigned vectors, centroid table), two memos.
+    * Centroids are the `nCells` corpus vectors with the smallest
+    * md5(vec_id) — an order-free, engine-portable seed choice (k-means
+    * at zero iterations / a Voronoi partition around random medoids), so
+    * cell assignment and therefore the whole probe result is exactly
+    * statable in SQL and hash-oracled; a TRAINED quantizer would only
+    * sharpen the cells (the recall bound entry guards quality either
+    * way), at the price of order-dependent float centroids no second
+    * engine can reproduce. At 100 TB the seed pick is a top-k by hash
+    * (no shuffle beyond it), assignment is one narrow broadcast pass,
+    * and `cell` is the partitioning/bucketing key of the inverted lists.
     */
-  def clearCaches(spark: SparkSession): Unit = {
-    val appId = spark.sparkContext.applicationId
-    ivfCache.keys.filter(_._1 == appId).foreach { k =>
-      ivfCache.remove(k).foreach { case (a, c) =>
-        a.unpersist(); c.unpersist()
-      }
-    }
-    covCache.keys.filter(_._1 == appId).foreach { k =>
-      covCache.remove(k).foreach(_.unpersist())
-    }
-    knnGraphCache.keys.filter(_._1 == appId).foreach { k =>
-      knnGraphCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-  }
-
   private def ivfIndex(spark: SparkSession, dir: String,
-                       nCells: Int): (DataFrame, DataFrame) =
-    ivfCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, nCells), {
-        import org.apache.spark.sql.expressions.Window
-        graft.functions.CosineSim.register(spark)
-        val emb = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), dbl(col("embedding")).as("v"))
-        // seed pick: nCells smallest md5(vec_id) — top-k by hash (a
-        // TakeOrdered, no full sort), then ranked over the k-row result
-        // (the partitionless window is bounded by nCells; allowlisted)
-        val hashed = emb
-          .withColumn("hk", md5(col("vec_id").cast("string")))
-        val seeds = hashed.orderBy("hk", "vec_id").limit(nCells)
-          .withColumn("cell",
-            (row_number().over(Window.orderBy("hk", "vec_id")) - 1)
-              .cast("long"))
-          .select(col("cell"), col("v").as("centroid"))
-        // nearest-seed assignment: one narrow broadcast pass; argmax as
-        // max(struct(c_sim, -cell)) — map-side combinable, ties to the
-        // smaller cell, matching the oracle's (c_sim DESC, cell) rank
-        val best = emb.crossJoin(broadcast(seeds))
-          .withColumn("c_sim", cosine(col("v"), col("centroid")))
-          .groupBy("vec_id")
-          .agg(max(struct(col("c_sim").as("c"),
-            (col("cell") * -1).as("negc"))).as("m"))
-          .select(col("vec_id"), (col("m.negc") * -1).as("cell"))
-        val assigned = emb.join(best, Seq("vec_id"))
-          .select(col("vec_id"), col("v"), col("cell")).persist()
-        (assigned, seeds.persist())
-      })
+                       nCells: Int): (DataFrame, DataFrame) = {
+    graft.functions.CosineSim.register(spark)
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), dbl(col("embedding")).as("v"))
+    // seed pick: nCells smallest md5(vec_id) — top-k by hash (a
+    // TakeOrdered, no full sort), then ranked over the k-row result
+    // (the partitionless window is bounded by nCells; allowlisted)
+    val seeds = Memo(spark, dir, s"embed.ivf_seeds_$nCells") {
+      emb.withColumn("hk", md5(col("vec_id").cast("string")))
+        .orderBy("hk", "vec_id").limit(nCells)
+        .withColumn("cell",
+          (row_number().over(Window.orderBy("hk", "vec_id")) - 1)
+            .cast("long"))
+        .select(col("cell"), col("v").as("centroid"))
+    }
+    // nearest-seed assignment: one narrow broadcast pass; argmax as
+    // max(struct(c_sim, -cell)) — map-side combinable, ties to the
+    // smaller cell, matching the oracle's (c_sim DESC, cell) rank
+    val assigned = Memo(spark, dir, s"embed.ivf_assigned_$nCells") {
+      val best = emb.crossJoin(broadcast(seeds))
+        .withColumn("c_sim", cosine(col("v"), col("centroid")))
+        .groupBy("vec_id")
+        .agg(max(struct(col("c_sim").as("c"),
+          (col("cell") * -1).as("negc"))).as("m"))
+        .select(col("vec_id"), (col("m.negc") * -1).as("cell"))
+      emb.join(best, Seq("vec_id"))
+        .select(col("vec_id"), col("v"), col("cell"))
+    }
+    (assigned, seeds)
+  }
 
   /** IVF ANN: rank the quantizer cells by centroid similarity to the
     * query, then search only the `nProbe` nearest inverted lists. A probe
@@ -1163,12 +1118,8 @@ object Similarity {
     * and the two-component deflation entry (X224); the build is one
     * corpus pass, everything downstream is dims²-sized.
     */
-  private val covCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
   private[graft] def covMatrix(spark: SparkSession, dir: String): DataFrame =
-    covCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      buildCovMatrix(spark, dir).persist())
+    Memo(spark, dir, "embed.cov")(buildCovMatrix(spark, dir))
 
   private def buildCovMatrix(spark: SparkSession, dir: String): DataFrame = {
     val D6 = org.apache.spark.sql.types.DecimalType(18, 6)

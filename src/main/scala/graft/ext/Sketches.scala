@@ -1,7 +1,5 @@
 package graft.ext
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,16 +39,6 @@ object Sketches {
 
   private val m = 256 // buckets (p = 8); std err 1.04/sqrt(m) = 6.5%
 
-  /** Memoized per-(app, dir): X105 and X106 share one cells pass. */
-  private val relCache = TrieMap.empty[(String, String), DataFrame]
-
-  def clearCaches(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    relCache.keys.filter(_._1 == app).foreach { k =>
-      relCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-  }
-
   /** (bucket, rho) per raw event row — the hash/bucket/rank pipeline
     * shared by the grouped and the direct register builds.
     */
@@ -72,9 +60,8 @@ object Sketches {
     * raw table that X105 and X106's merged leg share (memoized).
     */
   private def cells(spark: SparkSession, dir: String): DataFrame =
-    relCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
-      graft.Checkpoints.materialize(rhoCells(spark, dir)
-        .groupBy("event_type", "b").agg(max("rho").as("rho"))))
+    graft.Memo(spark, dir, "sketch.hll_cells")(rhoCells(spark, dir)
+      .groupBy("event_type", "b").agg(max("rho").as("rho")))
 
   /** The full 0..m-1 register vector for each scope in `regs`
     * (scope, b, rho over PRESENT buckets): empty buckets must

@@ -1,9 +1,9 @@
 package graft.ext
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Memo
 import graft.tables.Tables
 
 /** X1/X2 — document deduplication for large-scale training-data pipelines:
@@ -25,79 +25,18 @@ object TextDedup {
 
   // ------------------------------------------------------ shared relations
 
-  /** Memoized persisted relations per (application, dir). In one harness
-    * run the per-doc shingle-set table feeds MinHash banding, Jaccard
-    * verification, the ml LSH twin, fingerprinting and the curation
-    * pipeline; recomputing the explode+aggregate DAG per consumer would
-    * multiply its shuffle by the consumer count. Same decision as
-    * [[graft.sync.Pipeline.syncFixture]] — and at production scale the
-    * same call a curation run makes when it materializes the shingle
-    * table once per corpus snapshot (bucketed parquet there; in-memory
-    * persist here).
-    */
-  private val relCache = TrieMap.empty[(String, String, String), DataFrame]
+  // The shared relations below are [[graft.Memo]]s: in one harness run
+  // the per-doc shingle-set table feeds MinHash banding, Jaccard
+  // verification, the ml LSH twin, fingerprinting and the curation
+  // pipeline, and recomputing the explode+aggregate DAG per consumer
+  // would multiply its shuffle by the consumer count. At production
+  // scale it is the same call a curation run makes when it materializes
+  // the shingle table once per corpus snapshot.
 
-  // materialize (not persist): the memoized relations' consumers used to
-  // carry the full build DAG in their plans — the fixpoint/explode
-  // towers cost every consumer RUN a fresh analyzer/optimizer/AQE walk
-  // over thousands of nodes (r15, measured via event-log job gaps). The
-  // lineage cut leaves consumers a LogicalRDD leaf with the
-  // materialized stats; Checkpoints.release frees the blocks.
-  private def memo(spark: SparkSession, dir: String, key: String)
-                  (build: => DataFrame): DataFrame =
-    relCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, key),
-      graft.Checkpoints.materialize(build))
-
-  /** Materialize every memoized shared relation — the Bench warmup hook.
-    * The first BUILD of these session-scoped persisted relations
-    * otherwise lands on whichever consumer entry runs first, which made
-    * identical code swing across captures (dedup_method_report
-    * 3.2s↔12.8s, dedup_clusters 3.7s↔10.4s). Warming them untimed makes
-    * every dedup/curation entry time its own work over already-persisted
-    * inputs — the same rationale as the streaming state-store warmup.
-    * The build cost itself stays visible in total wall-clock (nothing is
-    * skipped, only re-billed out of the per-query map).
-    */
-  def warmSharedRelations(spark: SparkSession, dir: String): Unit = {
-    // Base relation FIRST, serially: every chain below derives from it,
-    // and a pooled first-build would race the same memo key.
-    cachedDocSets(spark, dir).count()
-    // Independent memo chains overlap on a small pool (guide §2.6 —
-    // Spark happily runs concurrent jobs; the tail tasks of one build
-    // back-fill cores the others freed). Each thread owns a DISTINCT
-    // memo-key chain with its intra-chain deps ordered, so no key is
-    // ever built twice. This is wall-clock-only: the same relations
-    // materialize, still billed to the same shared_builds section
-    // (r15; the serial form cost ~22 s of the sweep's wall).
-    runPooled(Seq(
-      () => { cachedSigWide(spark, dir).count()
-              cachedMinhashPairs(spark, dir).count() },
-      () => { cachedJaccardPrefix(spark, dir, DefaultJaccardThreshold).count()
-              jaccardPairs(spark, dir).count() },
-      // the containment entry's 0.5-threshold prefix twin (r15 — same
-      // rationale as calSamplePrefix below: the entry then times its
-      // own candidate+verify work, not a one-time index build)
-      () => cachedJaccardPrefix(spark, dir, 0.5).count(),
-      () => cachedSimhash(spark, dir).count(),
-      () => cachedSimhash64(spark, dir).count(),
-      () => memo(spark, dir, "occ5")(occ5(Tables.documents(spark, dir))).count(),
-      () => memo(spark, dir, "chunks5")(chunksOf(Tables.documents(spark, dir))).count(),
-      // the LSH-calibration sample relations (the 0.2-threshold prefix
-      // twin the r8 warmup missed — dedup_lsh_calibration then times only
-      // its own candidate+verify work)
-      () => calSamplePrefix(spark, dir, 2).count()))
-    // the memoized cluster propagation: three consumers (clusters,
-    // soft-dedup weights, the r9 quality audit) — unwarmed, whichever
-    // ran first absorbed the whole fixpoint build. NOT pooled: its
-    // star-contraction fixpoint mutates session confs (loop sizing),
-    // which is only safe single-threaded.
-    nearDupClusters(spark, dir).count()
-  }
-
-  /** Run independent warm-build chains on a small thread pool and wait;
-    * the first failure propagates. Spark schedules concurrent jobs FIFO,
-    * so later chains back-fill executor slots freed by earlier chains'
-    * straggler tails (guide §2.6) — 2–4 in flight is enough.
+  /** Run independent tasks on a small thread pool and wait; the first
+    * failure propagates. Spark schedules concurrent jobs FIFO, so later
+    * tasks back-fill executor slots freed by earlier tasks' straggler
+    * tails (guide §2.6) — 2–4 in flight is enough.
     */
   private[graft] def runPooled(tasks: Seq[() => Unit], threads: Int = 4): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
@@ -108,62 +47,13 @@ object TextDedup {
     } finally pool.shutdown()
   }
 
-  /** Single source of the Jaccard threshold so [[warmSharedRelations]]
-    * warms the same memo key [[jaccardPairs]] consumes.
-    */
+  /** The default Jaccard threshold of [[jaccardPairs]]. */
   val DefaultJaccardThreshold = 0.6
 
-  /** Unpersist and drop every memoized relation built by this application.
-    * The memo pattern is sized for a bounded bench/verify run (one app, a
-    * handful of corpus snapshots); a long-lived service reusing this module
-    * should call this between corpus snapshots so persisted relations —
-    * which stay bound to the SparkSession that planned them — don't
-    * accumulate for the lifetime of the shared context.
+  /** Release every memoized relation of this application — a long-lived
+    * service reusing this module calls it between corpus snapshots.
     */
-  def clearCaches(spark: SparkSession): Unit = {
-    val appId = spark.sparkContext.applicationId
-    relCache.keys.filter(_._1 == appId).foreach { k =>
-      relCache.remove(k).foreach(graft.Checkpoints.release)
-    }
-  }
-
-  /** Memo keys still consumed by entries that run AFTER the dedup/dq
-    * families in Bench's name-sorted sweep: occ5/chunks5/doc_sets feed
-    * text_dup_coverage / text_strip_boilerplate / text_novelty,
-    * minhash_pairs feeds incr_cc_merge, and the simhash signatures feed
-    * text_simhash / text_simhash64. The whitelist is hand-maintained
-    * against Bench's name-sorted consumer order — ReleaseInvariantSpec
-    * guards it executably (r12 advice): each late key must exist in a
-    * fully-warmed cache, and constructing every post-release entry must
-    * not resurrect a released key.
-    */
-  private[graft] val lateConsumerKeys =
-    Set("occ5", "chunks5", "doc_sets", "minhash_pairs",
-      "simhash", "simhash64")
-
-  /** Test-only view of this app's live memo keys (ReleaseInvariantSpec's
-    * probe surface).
-    */
-  private[graft] def memoKeys(spark: SparkSession): Set[String] = {
-    val appId = spark.sparkContext.applicationId
-    relCache.keys.filter(_._1 == appId).map(_._3).toSet
-  }
-
-  /** Staged partial release (r11 verdict item 3): after the last dedup/
-    * dq consumer in a name-sorted sweep, the pair/prefix/cluster memos
-    * (jaccard_prefix, sig_wide, the clusters fixpoint, the calibration
-    * samples) have no remaining readers, but they kept ~GBs of storage
-    * parked through the embed/events/graph families — the late-sweep
-    * memory pressure behind the r11 graph_hits 60 s capture. Releases
-    * everything EXCEPT the relations the later text and incr_cc_merge
-    * entries still read, so nothing gets double-built.
-    */
-  def releasePairCaches(spark: SparkSession): Unit = {
-    val appId = spark.sparkContext.applicationId
-    relCache.keys
-      .filter(k => k._1 == appId && !lateConsumerKeys(k._3))
-      .foreach { k => relCache.remove(k).foreach(graft.Checkpoints.release) }
-  }
+  def clearCaches(spark: SparkSession): Unit = Memo.clear(spark)
 
   /** THE shared dedup materialization: one row per document with its
     * sorted distinct shingle-set array (doc_id, shs, n).
@@ -200,7 +90,7 @@ object TextDedup {
         size(col("shs")).cast("long").as("n"))
 
   def cachedDocSets(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "doc_sets")(
+    Memo(spark, dir, "dedup.doc_sets")(
       docSetsOf(Tables.documents(spark, dir)))
 
   /** Long-form distinct (doc_id, sh) view — a narrow explode off the
@@ -221,7 +111,7 @@ object TextDedup {
     * [[cachedDocSets]].
     */
   def cachedSigWide(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "sig_wide")(
+    Memo(spark, dir, "dedup.sig_wide")(
       cachedDocSets(spark, dir)
         .select(col("doc_id") +: sigExprs(col("shs"), 8): _*))
 
@@ -256,7 +146,7 @@ object TextDedup {
     * side — no per-permutation row explosion anywhere.
     */
   def cachedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "minhash_pairs") {
+    Memo(spark, dir, "dedup.minhash_pairs") {
       val wide = cachedSigWide(spark, dir)
       val bandCols = (0 until 4).map(b =>
         md5(concat(col(s"s${2 * b}"), lit("|"), col(s"s${2 * b + 1}")))
@@ -355,7 +245,7 @@ object TextDedup {
     * signature query and the banded pair join.
     */
   def cachedSimhash(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "simhash")(
+    Memo(spark, dir, "dedup.simhash")(
       simhash(Tables.documents(spark, dir))
         .select(col("doc_id"), col("simhash"),
           conv(col("simhash"), 2, 10).cast("long").as("sim")))
@@ -440,7 +330,7 @@ object TextDedup {
     * 32-bit halves as longs.
     */
   def cachedSimhash64(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "simhash64")(
+    Memo(spark, dir, "dedup.simhash64")(
       simhash64(Tables.documents(spark, dir))
         .select(col("doc_id"), col("simhash64"),
           conv(substring(col("simhash64"), 1, 32), 2, 10).cast("long").as("hi"),
@@ -695,7 +585,7 @@ object TextDedup {
 
   private def cachedJaccardPrefix(spark: SparkSession, dir: String,
                                   threshold: Double): DataFrame =
-    memo(spark, dir, s"jaccard_prefix_$threshold")(
+    Memo(spark, dir, s"dedup.jaccard_prefix_$threshold")(
       prefixOf(cachedDocSets(spark, dir), threshold))
 
   /** The full prefix-filter + set-verify pipeline over an arbitrary doc
@@ -747,9 +637,8 @@ object TextDedup {
     // the most expensive dedup stage, multiplied by the consumer
     // count. One build per corpus snapshot is also exactly what the
     // X142 rule states ("at 100 TB you audit the pair TABLE, never
-    // re-run the similarity join"). Released with the other pair memos
-    // at the staged release point; no post-release consumer exists.
-    memo(spark, dir, s"jaccard_pairs_$threshold")(
+    // re-run the similarity join").
+    Memo(spark, dir, s"dedup.jaccard_pairs_$threshold")(
       jaccardPairsOf(cachedDocSets(spark, dir), threshold,
         Some(cachedJaccardPrefix(spark, dir, threshold))))
 
@@ -877,7 +766,7 @@ object TextDedup {
     // consume this propagation — unmemoized each paid the full loop
     // (measured ~5 s of curation_soft_dedup_weights at sf0.1 was the
     // SECOND run of the same fixpoint)
-    memo(spark, dir, s"clusters:$minSim:$maxRounds") {
+    Memo(spark, dir, s"dedup.clusters:$minSim:$maxRounds") {
       nearDupClustersUncached(spark, dir, minSim, maxRounds)
     }
 
@@ -1115,7 +1004,7 @@ object TextDedup {
     // doc-frequency aggregate and the semi-join probe side — unpersisted
     // the whole shingle expansion would compute twice
     dupCoverageFrom(Tables.documents(spark, dir),
-      memo(spark, dir, "occ5")(occ5(Tables.documents(spark, dir))))
+      Memo(spark, dir, "dedup.occ5")(occ5(Tables.documents(spark, dir))))
 
   def dupCoverageOf(docs: DataFrame): DataFrame =
     dupCoverageFrom(docs, occ5(docs))
@@ -1157,7 +1046,7 @@ object TextDedup {
     // memoized for the same double-consumer reason as [[dupCoverage]]
     // (df aggregate + anti-join probe + the n_chunks projection)
     stripBoilerplateFrom(
-      memo(spark, dir, "chunks5")(chunksOf(Tables.documents(spark, dir))))
+      Memo(spark, dir, "dedup.chunks5")(chunksOf(Tables.documents(spark, dir))))
 
   def stripBoilerplateOf(docs: DataFrame): DataFrame =
     stripBoilerplateFrom(chunksOf(docs))
@@ -1439,22 +1328,20 @@ object TextDedup {
     * count, not corpus share).
     */
   /** The calibration sample's memoized relations (doc-set sample +
-    * its 0.2-threshold prefix index) — named so the Bench warmup can
-    * build and BILL them explicitly as shared builds instead of
-    * charging whichever consumer runs first.
+    * its 0.2-threshold prefix index).
     */
-  private[graft] def calSampleSets(spark: SparkSession, dir: String,
-                                   sampleMod: Int): DataFrame =
+  private def calSampleSets(spark: SparkSession, dir: String,
+                            sampleMod: Int): DataFrame =
     if (sampleMod <= 1) cachedDocSets(spark, dir)
-    else memo(spark, dir, s"doc_sets_cal_$sampleMod")(
+    else Memo(spark, dir, s"dedup.doc_sets_cal_$sampleMod")(
       cachedDocSets(spark, dir).filter(
         conv(substring(md5(concat(col("doc_id").cast("string"),
           lit("|lshcal"))), 1, 8), 16, 10).cast("long")
           % sampleMod === 0))
 
-  private[graft] def calSamplePrefix(spark: SparkSession, dir: String,
-                                     sampleMod: Int): DataFrame =
-    memo(spark, dir, s"jaccard_prefix_cal_0.2_$sampleMod")(
+  private def calSamplePrefix(spark: SparkSession, dir: String,
+                              sampleMod: Int): DataFrame =
+    Memo(spark, dir, s"dedup.jaccard_prefix_cal_0.2_$sampleMod")(
       prefixOf(calSampleSets(spark, dir, sampleMod), 0.2))
 
   def lshCalibration(spark: SparkSession, dir: String,

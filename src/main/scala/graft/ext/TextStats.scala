@@ -13,26 +13,18 @@ object TextStats {
 
   private val StopWords = Seq("the", "a", "of", "and", "to", "in", "is", "on")
 
+  /** Release every memoized relation of this application — see
+    * [[TextDedup.clearCaches]].
+    */
+  def clearCaches(spark: SparkSession): Unit = graft.Memo.clear(spark)
+
   /** Memoized per-(application, dir) distinct char-bigram ARRAYS
     * (doc_id, lang, bgs) — one compact row per doc; the profile build and
     * the scoring pass both consume it (same decision as
     * [[TextDedup.cachedDocSets]]).
     */
-  private val bigramCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
-  /** Unpersist this app's memoized bigram relations — see
-    * [[TextDedup.clearCaches]] for when a long-lived service needs this.
-    */
-  def clearCaches(spark: SparkSession): Unit = {
-    val appId = spark.sparkContext.applicationId
-    bigramCache.keys.filter(_._1 == appId).foreach { k =>
-      bigramCache.remove(k).foreach(_.unpersist())
-    }
-  }
-
   private def cachedDocBigrams(spark: SparkSession, dir: String): DataFrame =
-    bigramCache.getOrElseUpdate((spark.sparkContext.applicationId, dir),
+    graft.Memo(spark, dir, "text.doc_bigrams")(
       Tables.documents(spark, dir)
         // length guard: Spark's sequence(1, 0) yields a DESCENDING [1, 0]
         // (bogus 1-char "bigrams") where DuckDB's generate_series(1, 0) is
@@ -41,8 +33,7 @@ object TextStats {
         .select(col("doc_id"), col("lang"), sort_array(array_distinct(
           expr("case when length(text) >= 2 then " +
             "transform(sequence(1, length(text) - 1), i -> substr(text, i, 2)) " +
-            "else cast(array() as array<string>) end"))).as("bgs"))
-        .persist())
+            "else cast(array() as array<string>) end"))).as("bgs")))
 
   /** Language-ID heuristic: stopword-hit ratio over whitespace tokens.
     * (A real n-gram profile model slots into the same shape — per-token

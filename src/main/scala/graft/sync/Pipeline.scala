@@ -3,6 +3,8 @@ package graft.sync
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
+
 /** E2/E3 — the whole sync run as a DAG of DataFrames (SURVEY.md §3).
   *
   * The reference's `syncFilesystem()` + `syncCategories()` interleave
@@ -44,7 +46,15 @@ object Pipeline {
            rootCategory: String = "files"): SyncResult = {
     val marked = Dedup.markDuplicates(files)
     val p1 = Matching.pass1(marked, projects)
-    val p2 = Matching.pass2(marked, projects, p1)
+    assemble(files, projects, serverCats, rootCategory,
+      marked, p1, Matching.pass2(marked, projects, p1))
+  }
+
+  /** The action and category tables over a run's core relations. */
+  private def assemble(files: DataFrame, projects: DataFrame,
+                       serverCats: DataFrame, rootCategory: String,
+                       marked: DataFrame, p1: DataFrame,
+                       p2: DataFrame): SyncResult = {
     val folder = Categories.folderCats(files, rootCategory)
     SyncResult(
       marked = marked,
@@ -87,25 +97,25 @@ object Pipeline {
   def release(r: SyncResult): Unit =
     (actionTables(r) ++ core(r).reverse).foreach(_.unpersist())
 
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), SyncResult]
-
   /** Convenience: run against the fixture-derived inputs.
     *
-    * Memoized per (session, dir) with the shared intermediates persisted:
-    * the driver harness evaluates every query of a run in one process, and
-    * `marked`/`pass1`/`pass2` feed most of them — recomputing the full
-    * match DAG per query would multiply the dominant shuffles by the query
-    * count. (At production scale this is the same decision as
-    * checkpointing the inventory snapshot once per sync run.)
+    * The core relations are [[graft.Memo]]s: Verify and Bench evaluate
+    * every query of a run in one process, and `marked`/`pass1`/`pass2`
+    * feed most of them — recomputing the full match DAG per query would
+    * multiply the dominant shuffles by the query count. (At production
+    * scale this is the same decision as checkpointing the inventory
+    * snapshot once per sync run.)
     */
-  def syncFixture(spark: SparkSession, dir: String): SyncResult =
-    fixtureCache.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-      val r = sync(SyncInputs.files(spark, dir), SyncInputs.projects(spark, dir),
-        SyncInputs.serverCats(spark, dir))
-      core(r).foreach(_.persist())
-      r
-    })
+  def syncFixture(spark: SparkSession, dir: String): SyncResult = {
+    val files = SyncInputs.files(spark, dir)
+    val projects = SyncInputs.projects(spark, dir)
+    val marked = Memo(spark, dir, "sync.marked")(Dedup.markDuplicates(files))
+    val p1 = Memo(spark, dir, "sync.pass1")(Matching.pass1(marked, projects))
+    val p2 = Memo(spark, dir, "sync.pass2")(
+      Matching.pass2(marked, projects, p1))
+    assemble(files, projects, SyncInputs.serverCats(spark, dir), "files",
+      marked, p1, p2)
+  }
 
   /** A2 — the run's scalar counters (found/missing/updates/…,
     * DW.js:103-106,154,163,230,346,447-448) as a single summary row.

@@ -176,13 +176,8 @@ object SyncInputs {
     * names are distinct. (At real scale an id would come from the remote
     * system; the global window here is test-fixture-only.)
     */
-  private val serverCatsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   def serverCats(spark: SparkSession, dir: String): DataFrame =
-    serverCatsCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      buildServerCats(spark, dir).persist())
+    graft.Memo(spark, dir, "sync.server_cats")(buildServerCats(spark, dir))
 
   private def buildServerCats(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

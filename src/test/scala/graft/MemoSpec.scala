@@ -1,0 +1,122 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+
+import graft.ext.TextDedup
+import graft.tables.Scratch
+
+/** The memo registry's contract: rows follow their inputs, a failed build
+  * leaves nothing behind, one key builds once, and `Memo.clear` frees
+  * everything it stored.
+  */
+class MemoSpec extends SparkSpec {
+
+  private def copyOf(src: String): String = {
+    val from = Paths.get(src)
+    val to = Scratch.dir(spark, "memo-spec")
+    Files.walk(from).forEach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    }
+    to.toString
+  }
+
+  private def storedBytes: Long =
+    spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
+
+  private def rdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a memo rebuilds when its directory is rewritten") {
+    val dir = copyOf(sf001)
+    val before = TextDedup.minhashPairs(spark, dir).collect().toSet
+    // every tenth doc takes the longest text: a clique of new pairs
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+    val hot = docs.orderBy(length(col("text")).desc, col("doc_id"))
+      .head().getAs[String]("text")
+    docs.withColumn("text",
+        when(col("doc_id") % 10 === 3, lit(hot)).otherwise(col("text")))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val served = TextDedup.minhashPairs(spark, dir).collect().toSet
+    TextDedup.clearCaches(spark)
+    val rebuilt = TextDedup.minhashPairs(spark, dir).collect().toSet
+    assert(rebuilt != before, "the rewrite must change the pairs")
+    assert(served == rebuilt)
+  }
+
+  test("a build that throws leaves no cache entry and the next lookup rebuilds") {
+    val bad = spark.range(10).toDF().filter(expr("assert_true(id < 0) IS NULL"))
+    intercept[Exception](Checkpoints.materialize(bad))
+    assert(bad.storageLevel == StorageLevel.NONE)
+
+    val calls = new AtomicInteger(0)
+    def build: DataFrame =
+      if (calls.incrementAndGet() == 1) bad else spark.range(5).toDF("id")
+    intercept[Exception](Memo(spark, sf001, "test.fails_once")(build))
+    assert(bad.storageLevel == StorageLevel.NONE)
+    assert(!Memo.stats(spark).contains("test.fails_once"))
+    assert(Memo(spark, sf001, "test.fails_once")(build).count() == 5)
+    assert(calls.get == 2)
+    assert(Memo.stats(spark)("test.fails_once").builds == 1)
+  }
+
+  test("two threads asking for one key build it once") {
+    val started = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val builds = new AtomicInteger(0)
+    def build: DataFrame = {
+      builds.incrementAndGet()
+      started.countDown()
+      release.await()
+      spark.range(100).toDF("id")
+    }
+    val rdds0 = rdds
+    val out = new Array[DataFrame](2)
+    def asker(i: Int) = new Thread(() => out(i) = Memo(spark, sf001, "test.race")(build))
+    val a = asker(0)
+    a.start()
+    started.await()
+    val b = asker(1)
+    b.start()
+    // b is parked on the key (or, were the build not exclusive, in its own)
+    eventually(timeout(Span(30, Seconds))) {
+      assert(Set(Thread.State.BLOCKED, Thread.State.WAITING)(b.getState))
+    }
+    release.countDown()
+    a.join()
+    b.join()
+    assert(builds.get == 1)
+    assert(out(0) eq out(1))
+    assert((rdds -- rdds0).size == 1, "one materialized copy, nothing else kept")
+    Memo.clear(spark)
+    assert(rdds.subsetOf(rdds0))
+  }
+
+  test("Memo.clear frees every memo's blocks, checkpoint blocks included") {
+    Memo.clear(spark)
+    val rdds0 = rdds
+    val bytes0 = storedBytes
+    val dir = copyOf(sf001)
+    val pairs = TextDedup.minhashPairs(spark, dir)
+    graft.sync.Pipeline.syncFixture(spark, dir)
+    val checkpoints = pairs.queryExecution.analyzed.collectLeaves().collect {
+      case lr: LogicalRDD => lr.rdd.id
+    }.toSet
+    assert(checkpoints.nonEmpty && checkpoints.subsetOf(rdds))
+    assert(Set("dedup.doc_sets", "dedup.minhash_pairs", "sync.pass2")
+      .subsetOf(Memo.bytes(spark).keySet))
+    assert(storedBytes > bytes0)
+    Memo.clear(spark)
+    assert(Memo.bytes(spark).isEmpty)
+    assert(rdds.subsetOf(rdds0) && (checkpoints & rdds).isEmpty)
+    assert(storedBytes == bytes0)
+  }
+}

@@ -314,10 +314,10 @@ class ThreeWaySqlSpec extends SparkSpec {
     // pair against one shared session, and Spark's scheduler interleaves
     // the sub-second sf0.001 jobs (guide §2.6). The pool mainly overlaps
     // DRIVER-side planning (single-threaded per query, the dominant leg
-    // at this SF). Shared-relation memo builds warmed by the serial
-    // pass; remaining TrieMap memo races are benign (double build, same
-    // values). Pool size 6: enough to hide planning latency, small
-    // enough that the 4-slot executor isn't thrashed.
+    // at this SF). Shared-relation memos build once per key even when
+    // pooled twins race for them (graft.Memo). Pool size 6: enough to
+    // hide planning latency, small enough that the 4-slot executor isn't
+    // thrashed.
     val serialResults = serial.map { case (n, s) => runOne(n, s) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     val results = try {
