@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Optional comma-separated query filter for local iteration
     // (SPARK_GRAFT_ONLY=curation_pipeline,dedup_jaccard_pairs); the driver
     // never sets it, so per-round numbers always cover the full set.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE coalescing relies on Spark's default (parallelismFirst=true).
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE coalescing relies on Spark's default (parallelismFirst=true).
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Name-sorted so each family's entries run together: its memos
     // (graft.Memo) are built by whichever entry needs them first, billed

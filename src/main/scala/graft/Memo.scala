@@ -27,6 +27,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *  - Records per name: builds, build seconds excluding the memo builds
   *    nested inside, and hits ([[stats]]); storage bytes only on request
   *    ([[bytes]]).
+  *  - Sessions: every session of the application shares the memos
+  *    (a [[GraftSession.scoped]] clone included), and a lookup returns
+  *    the relation bound to the asking session, so a memo first built
+  *    inside a scope never carries the scope's conf to later consumers.
   *  - [[clear]] releases everything one application holds;
   *    [[Checkpoints.release]] is the only release path.
   */
@@ -70,7 +74,8 @@ object Memo {
         Some(slot.value)
       }
     }
-    served.getOrElse(apply(spark, dir, name)(build))
+    served.map(GraftSession.bind(spark, _))
+      .getOrElse(apply(spark, dir, name)(build))
   }
 
   /** Release every memo this application holds. A build in flight

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Formatted-plan dump for the round's touched entries — the committed
   * `docs/PLANS_r{N}.txt` audit surface (the judge reads these against
   * the scale claims). Usage:
@@ -12,13 +10,7 @@ object PlanDump {
     val sfDir = args(0)
     val outPath = args(1)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sb = new StringBuilder
     names.foreach { n =>

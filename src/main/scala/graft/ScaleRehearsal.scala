@@ -226,19 +226,14 @@ object ScaleRehearsal {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = GraftSession.builder(GraftSession.envCpus(32))
       .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.autoBroadcastJoinThreshold", 32 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
+      // either events.ts fixture generation (ns-long / µs-NTZ) round-trips
+      // through the raw replicate+write; Tables.normalizeTs folds both on read
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // either events.ts fixture generation (ns-long / µs-NTZ) round-trips
-    // through the raw replicate+write; Tables.normalizeTs folds both on read
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (mode == "gen" || mode == "all") gen(spark)
     if (mode == "genskew" || mode == "all") genSkew(spark)
     // `knn` mode: time the graph-ANN INDEX BUILD alone at both scales

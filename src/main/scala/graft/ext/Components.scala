@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.GraftSession
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -71,7 +72,7 @@ object Components {
     // just-checkpointed init relation. AQE is OFF inside the loop for
     // the established reason (per-exchange re-planning is pure latency
     // on a chain of small bounded shuffles whose sizes we just derived);
-    // both confs are loop-local and restored on exit.
+    // both confs hold only in the loop's scoped session.
     val nEdges = init.count()
     // nodes whose only edges were self-loops still deserve a label
     val allNodes = graft.Checkpoints.cut(pairs
@@ -130,93 +131,89 @@ object Components {
 
     val loopParts = math.max(4L,
       math.min(sessionParts.toLong, nEdges / 2000000L + 1L)).toInt
-    val loopConfs = Seq(
+    GraftSession.scoped(spark,
       "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false")
-    val prevConfs = loopConfs.map { case (k, _) => k -> spark.conf.get(k) }
-    loopConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") { loop =>
+      // Node-sized min tables vs the |E|-row neighbour stream: when the
+      // MEASURED node count fits the session's broadcast budget (the same
+      // conf-gate as the fast path above), the per-star join broadcasts
+      // `mins` and the edge stream is never shuffled+sorted for the join —
+      // its only per-star exchange is the node-sized min aggregate (guide
+      // §3.1). Oversized graphs keep the shuffled join unchanged.
+      val minsBcast = bcastBudget > 0 && nNodes * 32L <= bcastBudget
+      def maybeB(mins: DataFrame): DataFrame =
+        if (minsBcast) broadcast(mins) else mins
 
-    // Node-sized min tables vs the |E|-row neighbour stream: when the
-    // MEASURED node count fits the session's broadcast budget (the same
-    // conf-gate as the fast path above), the per-star join broadcasts
-    // `mins` and the edge stream is never shuffled+sorted for the join —
-    // its only per-star exchange is the node-sized min aggregate (guide
-    // §3.1). Oversized graphs keep the shuffled join unchanged.
-    val minsBcast = bcastBudget > 0 && nNodes * 32L <= bcastBudget
-    def maybeB(mins: DataFrame): DataFrame =
-      if (minsBcast) broadcast(mins) else mins
+      // large-star over the symmetrized neighborhood: (x, m(u)) for every
+      // neighbour x > u. Result is (big, small)-directed again since
+      // m(u) ≤ u < x.
+      def largeStar(e: DataFrame): DataFrame = {
+        val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+        val mins = nbrs.groupBy("u").agg(min("v").as("mn"))
+          .select(col("u"), least(col("mn"), col("u")).as("m"))
+        nbrs.filter(col("v") > col("u"))
+          .join(maybeB(mins), Seq("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .distinct()
+      }
 
-    // large-star over the symmetrized neighborhood: (x, m(u)) for every
-    // neighbour x > u. Result is (big, small)-directed again since
-    // m(u) ≤ u < x.
-    def largeStar(e: DataFrame): DataFrame = {
-      val nbrs = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = nbrs.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      nbrs.filter(col("v") > col("u"))
-        .join(maybeB(mins), Seq("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-    }
+      // small-star on (big, small) edges: all of u's smaller neighbours
+      // (exactly its v's) plus u itself re-point at their minimum.
+      def smallStar(e: DataFrame): DataFrame = {
+        val mins = e.groupBy("u").agg(min("v").as("m"))
+        e.join(maybeB(mins), Seq("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .filter(col("u") =!= col("v"))
+          .unionByName(mins.select(col("u"), col("m").as("v")))
+          .distinct()
+      }
 
-    // small-star on (big, small) edges: all of u's smaller neighbours
-    // (exactly its v's) plus u itself re-point at their minimum.
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy("u").agg(min("v").as("m"))
-      e.join(maybeB(mins), Seq("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .unionByName(mins.select(col("u"), col("m").as("v")))
-        .distinct()
-    }
+      // Fixpoint ⟺ the edge set stops changing. Both sides are distinct
+      // sets, so equality = empty symmetric difference, computed in ONE
+      // hash-aggregate job (±1 tags, non-zero group survives) instead of
+      // the former two exceptAll anti-join jobs per round (r14, guide
+      // §2.4: two probe shuffles → one) — still sound, no checksums. The
+      // probe only runs at all when the cheap row-count gate (a trivial
+      // count over just-checkpointed data, the kcore pattern) says the
+      // cardinality held: a round that changed the edge count cannot be
+      // the fixpoint, so early rounds pay one ~ms count and no diff job.
+      def same(a: DataFrame, b: DataFrame): Boolean =
+        a.select(col("u"), col("v"), lit(1L).as("s"))
+          .unionByName(b.select(col("u"), col("v"), lit(-1L).as("s")))
+          .groupBy("u", "v").agg(sum("s").as("s"))
+          .filter(col("s") =!= 0)
+          .isEmpty
 
-    // Fixpoint ⟺ the edge set stops changing. Both sides are distinct
-    // sets, so equality = empty symmetric difference, computed in ONE
-    // hash-aggregate job (±1 tags, non-zero group survives) instead of
-    // the former two exceptAll anti-join jobs per round (r14, guide
-    // §2.4: two probe shuffles → one) — still sound, no checksums. The
-    // probe only runs at all when the cheap row-count gate (a trivial
-    // count over just-checkpointed data, the kcore pattern) says the
-    // cardinality held: a round that changed the edge count cannot be
-    // the fixpoint, so early rounds pay one ~ms count and no diff job.
-    def same(a: DataFrame, b: DataFrame): Boolean =
-      a.select(col("u"), col("v"), lit(1L).as("s"))
-        .unionByName(b.select(col("u"), col("v"), lit(-1L).as("s")))
-        .groupBy("u", "v").agg(sum("s").as("s"))
-        .filter(col("s") =!= 0)
-        .isEmpty
+      var edges = GraftSession.bind(loop, init)
+      var prevCount = nEdges
+      var rounds = 0
+      var converged = nEdges == 0 // a loop-free pair set is already done
+      while (!converged && rounds < maxRounds) {
+        // eager: materialized before the probes, plan truncated to a scan
+        val next = graft.Checkpoints.cut(
+          smallStar(largeStar(edges)).repartition(loopParts, col("u")))
+        val nextCount = next.count()
+        converged = nextCount == prevCount && same(next, edges)
+        prevCount = nextCount
+        edges.unpersist()
+        edges = next
+        rounds += 1
+      }
+      if (!converged)
+        throw new IllegalStateException(
+          s"star components did not converge in $maxRounds rounds")
 
-    var edges = init
-    var prevCount = nEdges
-    var rounds = 0
-    var converged = nEdges == 0 // a loop-free pair set is already done
-    while (!converged && rounds < maxRounds) {
-      // eager: materialized before the probes, plan truncated to a scan
-      val next = graft.Checkpoints.cut(
-        smallStar(largeStar(edges)).repartition(loopParts, col("u")))
-      val nextCount = next.count()
-      converged = nextCount == prevCount && same(next, edges)
-      prevCount = nextCount
+      // stars: every child row is (child, root); roots only appear on the
+      // small side. Nodes with no surviving edge are their own component.
+      val labels = edges.select(col("u").as("id"), col("v").as("comp"))
+        .unionByName(GraftSession.bind(loop, allNodes).join(
+          edges.select(col("u").as("id")), Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("comp")))
+        .persist()
+      labels.count()
       edges.unpersist()
-      edges = next
-      rounds += 1
+      allNodes.unpersist()
+      StarResult(GraftSession.bind(spark, labels), rounds)
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"star components did not converge in $maxRounds rounds")
-
-    // stars: every child row is (child, root); roots only appear on the
-    // small side. Nodes with no surviving edge are their own component.
-    val labels = edges.select(col("u").as("id"), col("v").as("comp"))
-      .unionByName(allNodes.join(
-        edges.select(col("u").as("id")), Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("comp")))
-      .persist()
-    labels.count()
-    edges.unpersist()
-    allNodes.unpersist()
-    StarResult(labels, rounds)
-    } finally prevConfs.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Memo
+import graft.{GraftSession, Memo}
 import graft.tables.Tables
 
 /** Iterative graph analytics over relationship graphs derived from the
@@ -312,32 +312,30 @@ object Graphs {
       edges.select(col("src").as("id")).distinct()
         .orderBy("id").limit(nSeeds)
         .select(col("id"), lit(0L).as("hop")))
-    var visited = seeds
-    var frontier = seeds
     // loop-local conf sizing (r15, the starComponents/kcore pattern):
     // frontier/visited are node-sized, the per-round distinct is the
     // only wide shuffle — size it to the edge count, AQE off in-loop
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts = math.max(4L, math.min(sessionParts.toLong,
       edges.count() / 2000000L + 1L)).toInt
-    val loopConfs = Seq(
+    GraftSession.scoped(spark,
       "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false")
-    val prevConfs = loopConfs.map { case (kk, _) => kk -> spark.conf.get(kk) }
-    loopConfs.foreach { case (kk, v) => spark.conf.set(kk, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") { loop =>
+      val loopEdges = GraftSession.bind(loop, edges)
+      var visited = GraftSession.bind(loop, seeds)
+      var frontier = visited
       for (h <- 1 to hops) {
         val next = graft.Checkpoints.cut( // cut the per-round lineage
           frontier.select(col("id").as("fid"))
-            .join(edges, col("fid") === col("src"))
+            .join(loopEdges, col("fid") === col("src"))
             .select(col("dst").as("id")).distinct()
             .join(visited, Seq("id"), "left_anti")
             .select(col("id"), lit(h.toLong).as("hop")))
         visited = visited.unionByName(next)
         frontier = next
       }
-    } finally prevConfs.foreach { case (kk, v) => spark.conf.set(kk, v) }
-    visited.orderBy("id")
+      GraftSession.bind(spark, visited)
+    }.orderBy("id")
   }
 
   /** X88: community detection via synchronous label propagation
@@ -924,28 +922,26 @@ object Graphs {
         .unionByName(
           trade.select(col("supp").as("src"), col("cust").as("dst"), col("w")))
     }
-    val src0 = edges.agg(min("src").as("node"))
-      .select(col("node"), lit(0L).as("dist"))
-    var dist = graft.Checkpoints.cut(src0)
-    var frontier = dist
+    val src0 = graft.Checkpoints.cut(edges.agg(min("src").as("node"))
+      .select(col("node"), lit(0L).as("dist")))
     // Scale-adaptive loop sizing (r15, the starComponents/kcore
     // pattern — verdict item 7): the relax chain's per-round relations
     // are node-sized, so inheriting the session's shuffle width just
     // schedules empty reducers, and AQE's per-exchange re-planning is
     // pure latency on a chain of bounded shuffles; both confs are
-    // loop-local, sized to the measured edge count, restored on exit.
+    // held by a scoped session, sized to the measured edge count.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts = math.max(4L, math.min(sessionParts.toLong,
       edges.count() / 2000000L + 1L)).toInt
-    val loopConfs = Seq(
+    GraftSession.scoped(spark,
       "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false")
-    val prevConfs = loopConfs.map { case (kk, _) => kk -> spark.conf.get(kk) }
-    loopConfs.foreach { case (kk, v) => spark.conf.set(kk, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") { loop =>
+      val loopEdges = GraftSession.bind(loop, edges)
+      var dist = GraftSession.bind(loop, src0)
+      var frontier = dist
       for (_ <- 1 to rounds) {
         val cand = frontier.select(col("node").as("src"), col("dist").as("fd"))
-          .join(edges, Seq("src"))
+          .join(loopEdges, Seq("src"))
           .groupBy(col("dst").as("node"))
           .agg(min(col("fd") + col("w")).as("cand"))
         val next = graft.Checkpoints.cut(
@@ -960,8 +956,8 @@ object Graphs {
         dist = next.select("node", "dist")
         frontier = next.filter(col("improved")).select("node", "dist")
       }
-    } finally prevConfs.foreach { case (kk, v) => spark.conf.set(kk, v) }
-    dist.orderBy("node")
+      GraftSession.bind(spark, dist)
+    }.orderBy("node")
   }
 
   /** X125: k-core decomposition (the `k`-core of the co-order part
@@ -993,30 +989,28 @@ object Graphs {
     // is then never re-shuffled per peel round; a graph whose alive set
     // exceeds the budget falls back to the shuffled semi-joins.
     val bcastBudget = spark.sessionState.conf.autoBroadcastJoinThreshold
-    def degrees(alive: DataFrame, nAlive: Long): DataFrame = {
-      val a = if (bcastBudget > 0 && nAlive * 16L <= bcastBudget)
-        broadcast(alive) else alive
-      sym.join(a.select(col("id").as("u")), Seq("u"), "left_semi")
-        .join(a.select(col("id").as("v")), Seq("v"), "left_semi")
-        .groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-    }
-    var alive = graft.Checkpoints.cut(
-      sym.select(col("u").as("id")).distinct())
-    var n = alive.count()
     // Scale-adaptive loop sizing (r14, the starComponents pattern):
     // per-round shuffles sized to the measured symmetric edge count
     // instead of the session default, AQE off inside the loop (its
     // per-exchange re-planning is pure latency on a chain of bounded
-    // peeling shuffles); both restored on exit.
+    // peeling shuffles); both held by a scoped session.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts = math.max(4L, math.min(sessionParts.toLong,
       sym.count() / 2000000L + 1L)).toInt
-    val loopConfs = Seq(
+    GraftSession.scoped(spark,
       "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false")
-    val prevConfs = loopConfs.map { case (kk, _) => kk -> spark.conf.get(kk) }
-    loopConfs.foreach { case (kk, v) => spark.conf.set(kk, v) }
-    try {
+      "spark.sql.adaptive.enabled" -> "false") { loop =>
+      val loopSym = GraftSession.bind(loop, sym)
+      def degrees(alive: DataFrame, nAlive: Long): DataFrame = {
+        val a = if (bcastBudget > 0 && nAlive * 16L <= bcastBudget)
+          broadcast(alive) else alive
+        loopSym.join(a.select(col("id").as("u")), Seq("u"), "left_semi")
+          .join(a.select(col("id").as("v")), Seq("v"), "left_semi")
+          .groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+      }
+      var alive = GraftSession.bind(loop, graft.Checkpoints.cut(
+        sym.select(col("u").as("id")).distinct()))
+      var n = alive.count()
       var rounds = 0
       var changed = true
       while (changed) {
@@ -1027,10 +1021,9 @@ object Graphs {
         if (changed) { alive = next; n = m; rounds += 1 }
       }
       lastKcoreRounds.put((spark.sparkContext.applicationId, dir), rounds)
-      degrees(alive, n)
-        .select(col("id").as("part_id"), col("deg").as("core_deg"))
-        .orderBy("part_id")
-    } finally prevConfs.foreach { case (kk, v) => spark.conf.set(kk, v) }
+      GraftSession.bind(spark, degrees(alive, n))
+    }.select(col("id").as("part_id"), col("deg").as("core_deg"))
+      .orderBy("part_id")
   }
 
   /** Unroll depth of the `graph_kcore` DuckDB oracle; [[kcoreRounds]]

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.tables.Tables
 
 /** Spatial proximity join over planar points — the geo operator family the
@@ -124,13 +125,10 @@ object Spatial {
   def gridClusters(spark: SparkSession, dir: String,
                    minPts: Long = 4L): DataFrame = {
     val dim = Span / Radius // 40 cells per axis
-    val confs = Seq(
+    GraftSession.scoped(spark,
       "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val dense = sites(spark, dir)
+      "spark.sql.adaptive.enabled" -> "false") { loop =>
+      val dense = sites(loop, dir)
         .select(expr(s"x div $Radius").as("cx"), expr(s"y div $Radius").as("cy"))
         .groupBy("cx", "cy").agg(count(lit(1)).as("n_points"))
         .filter(col("n_points") >= minPts)
@@ -150,10 +148,9 @@ object Spatial {
         .join(nbr, Seq("id")) // only neighbor keys that ARE dense survive
         .select(col("id").as("a"), col("nid").as("b"))
       val comp = Components.starComponents(edges).labels
-      dense.join(comp, Seq("id"), "left")
-        .select(col("cx"), col("cy"), col("n_points"),
-          coalesce(col("comp"), col("id")).as("cluster_id"))
-        .orderBy("cx", "cy")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      GraftSession.bind(spark, dense.join(comp, Seq("id"), "left"))
+    }.select(col("cx"), col("cy"), col("n_points"),
+        coalesce(col("comp"), col("id")).as("cluster_id"))
+      .orderBy("cx", "cy")
   }
 }

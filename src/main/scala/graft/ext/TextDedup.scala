@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Memo
+import graft.{GraftSession, Memo}
 import graft.tables.Tables
 
 /** X1/X2 — document deduplication for large-scale training-data pipelines:
@@ -770,30 +770,30 @@ object TextDedup {
       nearDupClustersUncached(spark, dir, minSim, maxRounds)
     }
 
+  /** Confs of the cluster loops, held by their scoped session (confs
+    * bind at plan time):
+    *  - shuffle partitions sized to the PAIR GRAPH (survivors of banding
+    *    + the similarity threshold), orders of magnitude smaller than
+    *    the corpus — the same right-sizing lever EventStream applies to
+    *    stream-state partitions; at 100 TB the caller sizes it to the
+    *    measured pair volume;
+    *  - AQE OFF for the loop: AQE materializes every exchange as its own
+    *    job to re-plan, which on an iterative chain of small bounded
+    *    shuffles is pure per-stage scheduling latency (measured 33 jobs
+    *    ≈ 9s for a 260-edge graph; pipelined it's one job per probe).
+    *    The loop's relations are pre-partitioned and bounded, so the
+    *    things AQE buys (coalescing, skew splits) don't apply inside it.
+    */
+  private val LoopConfs = Seq(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.adaptive.enabled" -> "false")
+
   private def nearDupClustersUncached(spark: SparkSession, dir: String,
                                       minSim: Double,
-                                      maxRounds: Int): DataFrame = {
-    // Loop-local session tuning, restored afterwards (confs bind at plan
-    // time):
-    //  - shuffle partitions sized to the PAIR GRAPH (survivors of banding
-    //    + the similarity threshold), orders of magnitude smaller than
-    //    the corpus — the same right-sizing lever EventStream applies to
-    //    stream-state partitions; at 100 TB the caller sizes it to the
-    //    measured pair volume;
-    //  - AQE OFF for the loop: AQE materializes every exchange as its own
-    //    job to re-plan, which on an iterative chain of small bounded
-    //    shuffles is pure per-stage scheduling latency (measured 33 jobs
-    //    ≈ 9s for a 260-edge graph; pipelined it's one job per probe).
-    //    The loop's relations are pre-partitioned and bounded, so the
-    //    things AQE buys (coalescing, skew splits) don't apply inside it.
-    val confs = Seq(
-      "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try nearDupClustersInner(spark, dir, minSim, maxRounds)
-    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
+                                      maxRounds: Int): DataFrame =
+    GraftSession.scoped(spark, LoopConfs: _*) { loop =>
+      GraftSession.bind(spark, nearDupClustersInner(loop, dir, minSim, maxRounds))
+    }
 
   private def nearDupClustersInner(spark: SparkSession, dir: String,
                                    minSim: Double, maxRounds: Int): DataFrame = {
@@ -880,22 +880,14 @@ object TextDedup {
     */
   def nearDupClustersStar(spark: SparkSession, dir: String,
                           minSim: Double = 0.5): DataFrame = {
-    // Same loop-local tuning rationale as nearDupClusters: shuffles are
-    // sized to the pair graph, AQE's per-exchange re-planning is pure
-    // latency on an iterative chain of small bounded shuffles.
-    val confs = Seq(
-      "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val pairs = cachedMinhashPairs(spark, dir)
+    // loop confs and their rationale: see LoopConfs
+    GraftSession.scoped(spark, LoopConfs: _*) { loop =>
+      val pairs = cachedMinhashPairs(loop, dir)
         .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
-      Components.starComponents(pairs).labels
-        .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
-          (col("id") === col("comp")).as("is_canonical"))
-        .orderBy("doc_id")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      GraftSession.bind(spark, Components.starComponents(pairs).labels)
+    }.select(col("id").as("doc_id"), col("comp").as("cluster_id"),
+        (col("id") === col("comp")).as("is_canonical"))
+      .orderBy("doc_id")
   }
 
   /** X129: INCREMENTAL cluster maintenance — yesterday's corpus is
@@ -925,17 +917,12 @@ object TextDedup {
     */
   def incrementalClusterMerge(spark: SparkSession, dir: String,
                               minSim: Double = 0.5): DataFrame = {
-    val confs = Seq(
-      "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val pairs = cachedMinhashPairs(spark, dir)
+    GraftSession.scoped(spark, LoopConfs: _*) { loop =>
+      val pairs = cachedMinhashPairs(loop, dir)
         .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
       // deterministic, data-derived split: docs in the top quarter of
       // the id range are "today's batch" (plan-side broadcast scalar)
-      val t = graft.tables.Tables.documents(spark, dir)
+      val t = graft.tables.Tables.documents(loop, dir)
         .agg(expr("max(doc_id) * 3 div 4").as("t"))
       val pt = pairs.crossJoin(broadcast(t))
       val basePairs = pt
@@ -960,11 +947,10 @@ object TextDedup {
       val deltaNew = merged
         .join(base.select("id"), Seq("id"), "left_anti")
         .select(col("id"), col("comp").as("cluster_id"))
-      baseFinal.unionByName(deltaNew)
-        .select(col("id").as("doc_id"), col("cluster_id"),
-          (col("id") === col("cluster_id")).as("is_canonical"))
-        .orderBy("doc_id")
-    } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      GraftSession.bind(spark, baseFinal.unionByName(deltaNew))
+    }.select(col("id").as("doc_id"), col("cluster_id"),
+        (col("id") === col("cluster_id")).as("is_canonical"))
+      .orderBy("doc_id")
   }
 
   // ------------------------------------------ duplication coverage / boilerplate

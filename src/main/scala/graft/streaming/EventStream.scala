@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -50,7 +51,7 @@ object EventStream {
   }
 
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.tables.Tables.readNanosAsLong(spark)
     val fixtureSchema = spark.read.parquet(s"$dir/events.parquet").schema
     // the file stream source takes a directory; the driver fixture ships
     // events.parquet as a single FILE inside the sf dir (selected by
@@ -130,18 +131,24 @@ object EventStream {
     * data volume. Two-sided joins hold four stores per partition, so
     * right-sizing partitions to the stream's actual volume — instead of
     * inheriting the batch session's CPU count — is the production lever
-    * for state-heavy, modest-volume streams. The session conf is
-    * restored after the run (the count only needs to hold at query
-    * start, when the layout is frozen).
+    * for state-heavy, modest-volume streams. The query starts from a
+    * scoped session holding that count (it only needs to hold at query
+    * start, when the layout is frozen) and, when the plan has a
+    * `transformWithState` node, the RocksDB state-store provider that
+    * operator requires. The caller's session conf is never touched.
     */
   private def runToMemoryPartitions(result: DataFrame, mode: String,
                                     statePartitions: Option[Int]): DataFrame = {
     val spark = result.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try runToMemoryInner(result, mode)
-    finally spark.conf.set(key, prev)
+    val tws = result.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+    val confs = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString) ++
+      Option.when(tws)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    GraftSession.scoped(spark, confs.toSeq: _*) { run =>
+      GraftSession.bind(spark,
+        runToMemoryInner(GraftSession.bind(run, result), mode))
+    }
   }
 
   private def runToMemoryInner(result: DataFrame, mode: String): DataFrame = {
@@ -298,22 +305,13 @@ object EventStream {
   def transformStateUserCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val counts = readEvents(spark, dir)
-        .select(col("user_id")).as[Long]
-        .groupByKey(identity)
-        .transformWithState(new UserCountProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "n_events")
-      runToMemory(counts, "update", dir).orderBy("user_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val counts = readEvents(spark, dir)
+      .select(col("user_id")).as[Long]
+      .groupByKey(identity)
+      .transformWithState(new UserCountProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "n_events")
+    runToMemory(counts, "update", dir).orderBy("user_id")
   }
 
   /** X111: streaming keep-first dedup as a `transformWithState`
@@ -352,24 +350,15 @@ object EventStream {
   def streamDedupState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val firsts = readEvents(spark, dir)
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"), col("event_id"))
-        .as[(Long, String, Long, Long)]
-        .groupByKey(r => (r._1, r._2))
-        .transformWithState(new KeepFirstProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("event_id", "user_id", "event_type", "us")
-      runToMemory(firsts, "append", dir).orderBy("event_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val firsts = readEvents(spark, dir)
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"), col("event_id"))
+      .as[(Long, String, Long, Long)]
+      .groupByKey(r => (r._1, r._2))
+      .transformWithState(new KeepFirstProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("event_id", "user_id", "event_type", "us")
+    runToMemory(firsts, "append", dir).orderBy("event_id")
   }
 
   /** X120: streaming HLL registers as a `transformWithState`
@@ -433,28 +422,19 @@ object EventStream {
   def streamHll(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ests = readEvents(spark, dir)
-        .select(col("event_type"), col("user_id"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new HllRegisterProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("event_type", "hll_est")
-      // update mode re-emits per micro-batch; the LAST update per key is
-      // the converged sketch (AvailableNow replay ends at one batch, but
-      // the max-fold makes this correct at any batch split)
-      runToMemory(ests, "update", dir)
-        .groupBy("event_type").agg(max("hll_est").as("hll_est"))
-        .orderBy("event_type")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val ests = readEvents(spark, dir)
+      .select(col("event_type"), col("user_id"))
+      .as[(String, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new HllRegisterProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("event_type", "hll_est")
+    // update mode re-emits per micro-batch; the LAST update per key is
+    // the converged sketch (AvailableNow replay ends at one batch, but
+    // the max-fold makes this correct at any batch split)
+    runToMemory(ests, "update", dir)
+      .groupBy("event_type").agg(max("hll_est").as("hll_est"))
+      .orderBy("event_type")
   }
 
   /** X152: streaming CDC snapshot maintenance — the keyed-state form of
@@ -503,36 +483,27 @@ object EventStream {
   def streamCdcSnapshot(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the same deterministic changelog derivation as Warehouse.docChangelog
-      val log = readDocuments(spark, dir)
-        .select((col("doc_id") % 97).as("key"), col("doc_id").as("seq"),
-          when(col("doc_id") % 11 === 7, "D")
-            .when(col("doc_id") % 3 === 0, "I").otherwise("U").as("op"),
-          col("n_chars").as("val"), col("lang"))
-        .as[(Long, Long, String, Long, String)]
-      val snap = log.groupByKey(_._1)
-        .transformWithState(new CdcSnapshotProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("key", "seq", "op", "val", "lang", "n_ops")
-      // final emission per key = the max-seq one (update mode re-emits
-      // as batches land; seq and n_ops only grow)
-      runToMemory(snap, "update", dir)
-        .groupBy("key")
-        .agg(max(struct(col("n_ops"), col("seq"), col("op"), col("val"),
-          col("lang"))).as("w"))
-        .filter(col("w.op") =!= "D")
-        .select(col("key"), col("w.val").as("val"), col("w.lang").as("lang"),
-          col("w.op").as("last_op"), col("w.n_ops").as("n_ops"))
-        .orderBy("key")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    // the same deterministic changelog derivation as Warehouse.docChangelog
+    val log = readDocuments(spark, dir)
+      .select((col("doc_id") % 97).as("key"), col("doc_id").as("seq"),
+        when(col("doc_id") % 11 === 7, "D")
+          .when(col("doc_id") % 3 === 0, "I").otherwise("U").as("op"),
+        col("n_chars").as("val"), col("lang"))
+      .as[(Long, Long, String, Long, String)]
+    val snap = log.groupByKey(_._1)
+      .transformWithState(new CdcSnapshotProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("key", "seq", "op", "val", "lang", "n_ops")
+    // final emission per key = the max-seq one (update mode re-emits
+    // as batches land; seq and n_ops only grow)
+    runToMemory(snap, "update", dir)
+      .groupBy("key")
+      .agg(max(struct(col("n_ops"), col("seq"), col("op"), col("val"),
+        col("lang"))).as("w"))
+      .filter(col("w.op") =!= "D")
+      .select(col("key"), col("w.val").as("val"), col("w.lang").as("lang"),
+        col("w.op").as("last_op"), col("w.n_ops").as("n_ops"))
+      .orderBy("key")
   }
 
   /** The documents stream, dual-path like the events reader: the driver
@@ -703,63 +674,45 @@ object EventStream {
                                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val bands = graft.ext.TextDedup.bandHashesOf(
-          readDocuments(spark, dir, maxFilesPerTrigger))
-        .select(col("b").cast("int").as("bb"), col("band_hash"),
-          col("doc_id"))
-        .as[(Int, String, Long)]
-      val gated = bands.groupByKey(r => (r._1, r._2))
-        .transformWithState(new BandOwnerRetractProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("doc_id", "bb", "blocked")
-      // changelog fold: per (doc, band) the status is the monotone OR of
-      // its emissions (an upsert keyed on (doc, band)); then the same
-      // per-doc admit fold as X217
-      runToMemory(gated, "append", dir)
-        .groupBy("doc_id", "bb")
-        .agg(max(when(col("blocked"), 1L).otherwise(0L)).as("blk"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bands"),
-          sum(col("blk")).as("n_blocked_bands"))
-        .withColumn("admitted", col("n_blocked_bands") === 0)
-        .orderBy("doc_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val bands = graft.ext.TextDedup.bandHashesOf(
+        readDocuments(spark, dir, maxFilesPerTrigger))
+      .select(col("b").cast("int").as("bb"), col("band_hash"),
+        col("doc_id"))
+      .as[(Int, String, Long)]
+    val gated = bands.groupByKey(r => (r._1, r._2))
+      .transformWithState(new BandOwnerRetractProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("doc_id", "bb", "blocked")
+    // changelog fold: per (doc, band) the status is the monotone OR of
+    // its emissions (an upsert keyed on (doc, band)); then the same
+    // per-doc admit fold as X217
+    runToMemory(gated, "append", dir)
+      .groupBy("doc_id", "bb")
+      .agg(max(when(col("blocked"), 1L).otherwise(0L)).as("blk"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bands"),
+        sum(col("blk")).as("n_blocked_bands"))
+      .withColumn("admitted", col("n_blocked_bands") === 0)
+      .orderBy("doc_id")
   }
 
   def streamNearDupGate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val bands = graft.ext.TextDedup.bandHashesOf(readDocuments(spark, dir))
-        .select(col("b").cast("int").as("bb"), col("band_hash"),
-          col("doc_id"))
-        .as[(Int, String, Long)]
-      val gated = bands.groupByKey(r => (r._1, r._2))
-        .transformWithState(new BandOwnerProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("doc_id", "bb", "blocked")
-      runToMemory(gated, "append", dir)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bands"),
-          sum(when(col("blocked"), 1L).otherwise(0L)).as("n_blocked_bands"))
-        .withColumn("admitted", col("n_blocked_bands") === 0)
-        .orderBy("doc_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val bands = graft.ext.TextDedup.bandHashesOf(readDocuments(spark, dir))
+      .select(col("b").cast("int").as("bb"), col("band_hash"),
+        col("doc_id"))
+      .as[(Int, String, Long)]
+    val gated = bands.groupByKey(r => (r._1, r._2))
+      .transformWithState(new BandOwnerProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("doc_id", "bb", "blocked")
+    runToMemory(gated, "append", dir)
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bands"),
+        sum(when(col("blocked"), 1L).otherwise(0L)).as("n_blocked_bands"))
+      .withColumn("admitted", col("n_blocked_bands") === 0)
+      .orderBy("doc_id")
   }
 
   /** X252: streaming Lindley queue monitor — the eleventh keyed state
@@ -816,41 +769,32 @@ object EventStream {
   def streamQueueWait(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val arrivals = readEvents(spark, dir)
-        .selectExpr("event_type", "event_id", "unix_micros(ts) div 1000 as ms")
-        .as[(String, Long, Long)]
-      val folded = arrivals.groupByKey(_._1)
-        .transformWithState(new LindleyProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("event_type", "ms", "svc_ms", "wait_ms")
-      // the same audit aggregate as the batch twin — row-identical on
-      // the ordered finite replay (the oracle shares X249's SQL)
-      runToMemory(folded, "append", dir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_arrivals"),
-          sum(when(col("wait_ms") > 0, 1L).otherwise(0L)).as("n_queued"),
-          max("wait_ms").as("max_wait_ms"),
-          sum("wait_ms").as("tot_wait_ms"),
-          sum("svc_ms").as("busy_ms"),
-          (max("ms") - min("ms")).as("span_ms"))
-        .select(col("event_type"), col("n_arrivals"), col("n_queued"),
-          col("max_wait_ms"),
-          round(col("tot_wait_ms").cast("double") / col("n_arrivals"), 6)
-            .as("avg_wait_ms"),
-          round(col("n_queued").cast("double") / col("n_arrivals"), 6)
-            .as("queued_share"),
-          round(col("busy_ms").cast("double") / (col("span_ms") + 1), 6)
-            .as("utilization"))
-        .orderBy("event_type")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val arrivals = readEvents(spark, dir)
+      .selectExpr("event_type", "event_id", "unix_micros(ts) div 1000 as ms")
+      .as[(String, Long, Long)]
+    val folded = arrivals.groupByKey(_._1)
+      .transformWithState(new LindleyProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("event_type", "ms", "svc_ms", "wait_ms")
+    // the same audit aggregate as the batch twin — row-identical on
+    // the ordered finite replay (the oracle shares X249's SQL)
+    runToMemory(folded, "append", dir)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n_arrivals"),
+        sum(when(col("wait_ms") > 0, 1L).otherwise(0L)).as("n_queued"),
+        max("wait_ms").as("max_wait_ms"),
+        sum("wait_ms").as("tot_wait_ms"),
+        sum("svc_ms").as("busy_ms"),
+        (max("ms") - min("ms")).as("span_ms"))
+      .select(col("event_type"), col("n_arrivals"), col("n_queued"),
+        col("max_wait_ms"),
+        round(col("tot_wait_ms").cast("double") / col("n_arrivals"), 6)
+          .as("avg_wait_ms"),
+        round(col("n_queued").cast("double") / col("n_arrivals"), 6)
+          .as("queued_share"),
+        round(col("busy_ms").cast("double") / (col("span_ms") + 1), 6)
+          .as("utilization"))
+      .orderBy("event_type")
   }
 
   /** X265: streaming interval-union accumulator — the twelfth keyed
@@ -905,33 +849,24 @@ object EventStream {
                           holdMs: Long = 3600000L): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val errs = readEvents(spark, dir)
-        .filter(col("event_type") === "error")
-        .selectExpr("cast(cast(ts as date) as string) as day", "event_id",
-          "unix_micros(ts) div 1000 as ms",
-          "unix_micros(cast(cast(ts as date) as timestamp)) div 1000 " +
-            "+ 86400000 as day_end")
-        .as[(String, Long, Long, Long)]
-      val folded = errs.groupByKey(_._1)
-        .transformWithState(new HorizonProcessor(holdMs),
-          TimeMode.None(), OutputMode.Append())
-        .toDF("day", "inc")
-      runToMemory(folded, "append", dir)
-        .groupBy(col("day").cast("date").as("day"))
-        .agg(count(lit(1)).as("n_errors"), sum("inc").as("outage_ms"))
-        .select(col("day"), col("n_errors"), col("outage_ms"),
-          round(lit(1.0) - col("outage_ms").cast("double") / 86400000d, 6)
-            .as("availability"))
-        .orderBy("day")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val errs = readEvents(spark, dir)
+      .filter(col("event_type") === "error")
+      .selectExpr("cast(cast(ts as date) as string) as day", "event_id",
+        "unix_micros(ts) div 1000 as ms",
+        "unix_micros(cast(cast(ts as date) as timestamp)) div 1000 " +
+          "+ 86400000 as day_end")
+      .as[(String, Long, Long, Long)]
+    val folded = errs.groupByKey(_._1)
+      .transformWithState(new HorizonProcessor(holdMs),
+        TimeMode.None(), OutputMode.Append())
+      .toDF("day", "inc")
+    runToMemory(folded, "append", dir)
+      .groupBy(col("day").cast("date").as("day"))
+      .agg(count(lit(1)).as("n_errors"), sum("inc").as("outage_ms"))
+      .select(col("day"), col("n_errors"), col("outage_ms"),
+        round(lit(1.0) - col("outage_ms").cast("double") / 86400000d, 6)
+          .as("availability"))
+      .orderBy("day")
   }
 
   /** X275: streaming max-gap monitor — the thirteenth keyed state
@@ -984,35 +919,26 @@ object EventStream {
   def streamMaxGap(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val arrivals = readEvents(spark, dir)
-        .selectExpr("user_id", "event_id", "unix_micros(ts) as us")
-        .as[(Long, Long, Long)]
-      val gaps = arrivals.groupByKey(_._1)
-        .transformWithState(new MaxGapProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("user_id", "us", "prev_us", "gap_us")
-      // burstiness = max gap / mean gap; mean gap = span / n_gaps, so
-      // the ratio is exact-integer-derived and 6dp-rendered once
-      runToMemory(gaps, "append", dir)
-        .groupBy("user_id")
-        .agg((count(lit(1)) + 1).as("n_events"),
-          max("gap_us").as("max_gap_us"),
-          (max("us") - min("prev_us")).as("span_us"))
-        .select(col("user_id"), col("n_events"), col("max_gap_us"),
-          col("span_us"),
-          when(col("span_us") > 0,
-            round(col("max_gap_us").cast("double") * (col("n_events") - 1) /
-              col("span_us"), 6)).as("burstiness"))
-        .orderBy("user_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val arrivals = readEvents(spark, dir)
+      .selectExpr("user_id", "event_id", "unix_micros(ts) as us")
+      .as[(Long, Long, Long)]
+    val gaps = arrivals.groupByKey(_._1)
+      .transformWithState(new MaxGapProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("user_id", "us", "prev_us", "gap_us")
+    // burstiness = max gap / mean gap; mean gap = span / n_gaps, so
+    // the ratio is exact-integer-derived and 6dp-rendered once
+    runToMemory(gaps, "append", dir)
+      .groupBy("user_id")
+      .agg((count(lit(1)) + 1).as("n_events"),
+        max("gap_us").as("max_gap_us"),
+        (max("us") - min("prev_us")).as("span_us"))
+      .select(col("user_id"), col("n_events"), col("max_gap_us"),
+        col("span_us"),
+        when(col("span_us") > 0,
+          round(col("max_gap_us").cast("double") * (col("n_events") - 1) /
+            col("span_us"), 6)).as("burstiness"))
+      .orderBy("user_id")
   }
 
   /** The PRE-SIGNED leg of [[streamNearDupGate]] (r9 self-assessment
@@ -1039,29 +965,20 @@ object EventStream {
                                  bandsPath: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = spark.read.parquet(bandsPath).schema
-      val bands = spark.readStream.schema(schema).parquet(bandsPath)
-        .select(col("bb"), col("band_hash"), col("doc_id"))
-        .as[(Int, String, Long)]
-      val gated = bands.groupByKey(r => (r._1, r._2))
-        .transformWithState(new BandOwnerProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("doc_id", "bb", "blocked")
-      runToMemory(gated, "append", bandsPath)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bands"),
-          sum(when(col("blocked"), 1L).otherwise(0L)).as("n_blocked_bands"))
-        .withColumn("admitted", col("n_blocked_bands") === 0)
-        .orderBy("doc_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val schema = spark.read.parquet(bandsPath).schema
+    val bands = spark.readStream.schema(schema).parquet(bandsPath)
+      .select(col("bb"), col("band_hash"), col("doc_id"))
+      .as[(Int, String, Long)]
+    val gated = bands.groupByKey(r => (r._1, r._2))
+      .transformWithState(new BandOwnerProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("doc_id", "bb", "blocked")
+    runToMemory(gated, "append", bandsPath)
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bands"),
+        sum(when(col("blocked"), 1L).otherwise(0L)).as("n_blocked_bands"))
+      .withColumn("admitted", col("n_blocked_bands") === 0)
+      .orderBy("doc_id")
   }
 
   /** X247: streaming Bloom-filter admission gate — the BOUNDED-state
@@ -1094,34 +1011,25 @@ object EventStream {
                       m: Int = 1024, k: Int = 3): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val bitCols = (0 until k).map(i =>
-        pmod(conv(substring(md5(concat(col("text"), lit(s"|bloom$i"))), 1, 4),
-          16, 10).cast("long"), lit(m.toLong)))
-      val bits = readDocuments(spark, dir)
-        .select(col("doc_id"),
-          explode(array_distinct(array(bitCols: _*))).as("bit"))
-        .select(lit(0).as("bb"), col("bit").cast("string").as("bit_key"),
-          col("doc_id"))
-        .as[(Int, String, Long)]
-      val gated = bits.groupByKey(r => (r._1, r._2))
-        .transformWithState(new BandOwnerProcessor,
-          TimeMode.None(), OutputMode.Append())
-        .toDF("doc_id", "bb", "set_before")
-      runToMemory(gated, "append", dir)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bits"),
-          sum(when(col("set_before"), 1L).otherwise(0L)).as("n_set_bits"))
-        .withColumn("admitted", col("n_set_bits") < col("n_bits"))
-        .orderBy("doc_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val bitCols = (0 until k).map(i =>
+      pmod(conv(substring(md5(concat(col("text"), lit(s"|bloom$i"))), 1, 4),
+        16, 10).cast("long"), lit(m.toLong)))
+    val bits = readDocuments(spark, dir)
+      .select(col("doc_id"),
+        explode(array_distinct(array(bitCols: _*))).as("bit"))
+      .select(lit(0).as("bb"), col("bit").cast("string").as("bit_key"),
+        col("doc_id"))
+      .as[(Int, String, Long)]
+    val gated = bits.groupByKey(r => (r._1, r._2))
+      .transformWithState(new BandOwnerProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF("doc_id", "bb", "set_before")
+    runToMemory(gated, "append", dir)
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bits"),
+        sum(when(col("set_before"), 1L).otherwise(0L)).as("n_set_bits"))
+      .withColumn("admitted", col("n_set_bits") < col("n_bits"))
+      .orderBy("doc_id")
   }
 
   /** X239: streaming log₂-bucket quantile sketch — the ninth keyed
@@ -1180,34 +1088,25 @@ object EventStream {
   def streamQuantileState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rows = readEvents(spark, dir)
-        .select(col("event_type"),
-          length(bin((col("value").cast("decimal(18,2)") * 100)
-            .cast("long"))).cast("int").as("bucket"))
-        .as[(String, Int)]
-      val out = rows.groupByKey(_._1)
-        .transformWithState(new QuantileSketchProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("event_type", "n", "b50", "b90", "b99")
-      // update mode re-emits per batch; n only grows, so the max-n row
-      // per key is the converged sketch
-      runToMemory(out, "update", dir)
-        .groupBy("event_type")
-        .agg(max(struct(col("n"), col("b50"), col("b90"), col("b99")))
-          .as("w"))
-        .select(col("event_type"), col("w.n").as("n"),
-          col("w.b50").as("b50"), col("w.b90").as("b90"),
-          col("w.b99").as("b99"))
-        .orderBy("event_type")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val rows = readEvents(spark, dir)
+      .select(col("event_type"),
+        length(bin((col("value").cast("decimal(18,2)") * 100)
+          .cast("long"))).cast("int").as("bucket"))
+      .as[(String, Int)]
+    val out = rows.groupByKey(_._1)
+      .transformWithState(new QuantileSketchProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("event_type", "n", "b50", "b90", "b99")
+    // update mode re-emits per batch; n only grows, so the max-n row
+    // per key is the converged sketch
+    runToMemory(out, "update", dir)
+      .groupBy("event_type")
+      .agg(max(struct(col("n"), col("b50"), col("b90"), col("b99")))
+        .as("w"))
+      .select(col("event_type"), col("w.n").as("n"),
+        col("w.b50").as("b50"), col("w.b90").as("b90"),
+        col("w.b99").as("b99"))
+      .orderBy("event_type")
   }
 
   /** X144: per-user activity profile as a `transformWithState` MapState
@@ -1248,27 +1147,18 @@ object EventStream {
   def streamMapState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val profile = readEvents(spark, dir)
-        .select(col("user_id"), col("event_type"))
-        .as[(Long, String)]
-        .groupByKey(_._1)
-        .transformWithState(new TypeProfileProcessor,
-          TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "event_type", "n_events")
-      // counts only grow: max per (user, type) = the final state
-      runToMemory(profile, "update", dir)
-        .groupBy("user_id", "event_type")
-        .agg(max("n_events").as("n_events"))
-        .orderBy("user_id", "event_type")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val profile = readEvents(spark, dir)
+      .select(col("user_id"), col("event_type"))
+      .as[(Long, String)]
+      .groupByKey(_._1)
+      .transformWithState(new TypeProfileProcessor,
+        TimeMode.None(), OutputMode.Update())
+      .toDF("user_id", "event_type", "n_events")
+    // counts only grow: max per (user, type) = the final state
+    runToMemory(profile, "update", dir)
+      .groupBy("user_id", "event_type")
+      .agg(max("n_events").as("n_events"))
+      .orderBy("user_id", "event_type")
   }
 
   /** X143: streaming top-k as a `transformWithState` ListState — the
@@ -1307,33 +1197,24 @@ object EventStream {
   def streamTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val leaders = readEvents(spark, dir)
-        .select(col("event_type"), col("value"), col("event_id"))
-        .as[(String, Double, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new TopKProcessor(k),
-          TimeMode.None(), OutputMode.Update())
-        .toDF("event_type", "rank", "value", "event_id")
-      // update mode re-emits the refined leaderboard per micro-batch;
-      // per (type, rank) the final emission is the (max value, min id)
-      // one: values at a rank only improve as batches merge in, and on
-      // an equal-value tie the asc-id rule means the smaller id is the
-      // one that STAYS — the X120 convergence-read idiom, tie-exact
-      runToMemory(leaders, "update", dir)
-        .groupBy("event_type", "rank")
-        .agg(min(struct((-col("value")).as("nv"), col("event_id"))).as("w"))
-        .select(col("event_type"), col("rank"),
-          (-col("w.nv")).as("value"), col("w.event_id").as("event_id"))
-        .orderBy("event_type", "rank")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val leaders = readEvents(spark, dir)
+      .select(col("event_type"), col("value"), col("event_id"))
+      .as[(String, Double, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new TopKProcessor(k),
+        TimeMode.None(), OutputMode.Update())
+      .toDF("event_type", "rank", "value", "event_id")
+    // update mode re-emits the refined leaderboard per micro-batch;
+    // per (type, rank) the final emission is the (max value, min id)
+    // one: values at a rank only improve as batches merge in, and on
+    // an equal-value tie the asc-id rule means the smaller id is the
+    // one that STAYS — the X120 convergence-read idiom, tie-exact
+    runToMemory(leaders, "update", dir)
+      .groupBy("event_type", "rank")
+      .agg(min(struct((-col("value")).as("nv"), col("event_id"))).as("w"))
+      .select(col("event_type"), col("rank"),
+        (-col("w.nv")).as("value"), col("w.event_id").as("event_id"))
+      .orderBy("event_type", "rank")
   }
 
   /** X132: TIMER-driven sessionization as a `transformWithState`
@@ -1402,25 +1283,16 @@ object EventStream {
                    gapUs: Long = 1800000000L): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sessions = readEvents(spark, dir)
-        .withWatermark("ts", "1 hour")
-        .select(col("user_id"), unix_micros(col("ts")).as("us"),
-          col("event_id"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new SessionProcessor(gapUs),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF("user_id", "start_us", "end_us", "n_events")
-      runToMemory(sessions, "append", dir).orderBy("user_id", "start_us")
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
-    }
+    val sessions = readEvents(spark, dir)
+      .withWatermark("ts", "1 hour")
+      .select(col("user_id"), unix_micros(col("ts")).as("us"),
+        col("event_id"))
+      .as[(Long, Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new SessionProcessor(gapUs),
+        TimeMode.EventTime(), OutputMode.Append())
+      .toDF("user_id", "start_us", "end_us", "n_events")
+    runToMemory(sessions, "append", dir).orderBy("user_id", "start_us")
   }
 
   /** X95: the strict sequential rate limiter — the operator the batch

@@ -54,9 +54,19 @@ object Tables {
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
 
+  /** Make `spark` read TIMESTAMP(NANOS) parquet columns as nanosecond
+    * longs (`spark.sql.legacy.parquet.nanosAsLong`). This is the one conf
+    * graft writes into a caller's session rather than a
+    * [[graft.GraftSession.scoped]] clone: it must hold when the scan
+    * executes, in whichever session runs the consuming plan, and Spark
+    * 4.1.2's `ParquetOptions` has no reader option for it.
+    */
+  def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   /** `events` with `ts` normalized to a microsecond timestamp. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(spark)
     normalizeTs(table(spark, dir, "events"))
   }
 }

@@ -115,21 +115,19 @@ class ScaleDesignSpec extends SparkSpec {
   }
 
   test("AQE splits the skewed join partition at runtime (OptimizeSkewedJoin)") {
-    import spark.implicits._
-    val keys = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-
     // one hot key dominating the shuffle + thresholds scaled down to test
     // size (the production posture is the same mechanism at defaults);
     // broadcast disabled so the skewed sort-merge join is what runs
-    def runJoin(): (String, Long) = {
+    val skewConfs = Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "262144",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "131072",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+    def runJoin(s: SparkSession): (String, Long) = {
+      import s.implicits._
       // per-row-unique payload (md5 of the row index): incompressible and
       // un-prunable (the aggregate consumes it), so the hot key's shuffle
       // partition is genuinely megabytes
@@ -146,32 +144,18 @@ class ScaleDesignSpec extends SparkSpec {
       (j.queryExecution.executedPlan.toString, row.getAs[Long]("n"))
     }
 
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "262144")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "131072")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    val (skewPlan, n) = GraftSession.scoped(spark, skewConfs: _*)(runJoin)
+    assert(n == 160000L)
+    assert(skewPlan.contains("skew=true"),
+      s"AQE did not mark the skewed join in the final plan:\n$skewPlan")
 
-      val (skewPlan, n) = runJoin()
-      assert(n == 160000L)
-      assert(skewPlan.contains("skew=true"),
-        s"AQE did not mark the skewed join in the final plan:\n$skewPlan")
-
-      // control: with skew handling off the marker must disappear — this
-      // test fails if someone disables the posture globally
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val (plainPlan, n2) = runJoin()
-      assert(n2 == 160000L)
-      assert(!plainPlan.contains("skew=true"),
-        s"skew marker present with skewJoin disabled:\n$plainPlan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    // control: with skew handling off the marker must disappear — this
+    // test fails if someone disables the posture globally
+    val (plainPlan, n2) = GraftSession.scoped(spark,
+      skewConfs :+ ("spark.sql.adaptive.skewJoin.enabled" -> "false"): _*)(runJoin)
+    assert(n2 == 160000L)
+    assert(!plainPlan.contains("skew=true"),
+      s"skew marker present with skewJoin disabled:\n$plainPlan")
   }
 
   test("graph-ANN kNN build: occupancy-bounded buckets keep the pair space linear") {

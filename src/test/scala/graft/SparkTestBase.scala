@@ -4,16 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session keeps
-  * `sbt test` fast; suites must not mutate session state).
+  * `sbt test` fast). Suites never write its conf: a test that needs a
+  * conf runs under [[GraftSession.scoped]], which `ConfGuardSpec`
+  * enforces.
   */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // the one shared session executes thousands of queries across all
       // suites (ThreeWaySqlSpec alone replays every oracle twin); the SQL
       // status store retains 1000 executions WITH their per-node metric

@@ -1,7 +1,7 @@
 package graft.ext
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import graft.{GraftSession, SparkSpec}
+import org.apache.spark.sql.SparkSession
 
 /** Large-star/small-star connected components: the O(log n) round bound
   * on the adversarial graph shape (a long path — exactly where min-label
@@ -15,19 +15,17 @@ class ComponentsSpec extends SparkSpec {
   // autoBroadcastJoinThreshold=-1 disables the broadcast-sized driver
   // fast path, so these tests exercise the DISTRIBUTED loop (the round
   // bound and checkpoint laws are loop properties).
-  private def withLoopConfs[T](body: => T): T = {
-    val confs = Seq(
+  // `extra` confs are set after these and override them.
+  private def withLoopConfs[T](extra: (String, String)*)
+                              (body: SparkSession => T): T =
+    GraftSession.scoped(spark, Seq(
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++ extra: _*)(body)
 
   test("10k-node path graph converges in O(log n) rounds, one component") {
-    withLoopConfs {
+    withLoopConfs() { s =>
+      import s.implicits._
       val n = 10000
       val path = (0L until (n - 1).toLong).map(i => (i, i + 1))
         .toDF("a", "b")
@@ -45,7 +43,8 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("multi-component graph with self-loops, duplicate and reversed edges") {
-    withLoopConfs {
+    withLoopConfs() { s =>
+      import s.implicits._
       val edges = Seq(
         (1L, 2L), (2L, 1L), (2L, 3L),   // comp {1,2,3} with a reversed dup
         (10L, 11L),                     // comp {10,11}
@@ -65,10 +64,10 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("durable checkpoint flag: star-CC green with reliable checkpoints on disk") {
-    withLoopConfs {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_ckpt").toString
-      spark.conf.set(graft.Checkpoints.ConfKey, dir)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_ckpt").toString
+    withLoopConfs(graft.Checkpoints.ConfKey -> dir) { s =>
+      import s.implicits._
       try {
         val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("x", "y")
         val r = Components.starComponents(edges)
@@ -82,11 +81,8 @@ class ComponentsSpec extends SparkSpec {
             .flatMap(c => if (c.isDirectory) rddFiles(c) else Seq(c))
         assert(rddFiles(new java.io.File(dir)).nonEmpty,
           s"no checkpoint files written under $dir")
-      } finally {
-        spark.conf.unset(graft.Checkpoints.ConfKey)
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(dir))
-      }
+      } finally org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(dir))
     }
   }
 
@@ -101,7 +97,8 @@ class ComponentsSpec extends SparkSpec {
     assert(fast.rounds == 0, "tiny graph must take the driver fast path")
     val gotFast = fast.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
-    val loop = withLoopConfs(Components.starComponents(edges))
+    val loop = withLoopConfs()(s =>
+      Components.starComponents(GraftSession.bind(s, edges)))
     assert(loop.rounds > 0, "threshold -1 must force the loop")
     val gotLoop = loop.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
@@ -123,7 +120,8 @@ class ComponentsSpec extends SparkSpec {
     assert(fast.rounds == 0)
     val gotFast = fast.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
-    val loop = withLoopConfs(Components.starComponents(edges))
+    val loop = withLoopConfs()(s =>
+      Components.starComponents(GraftSession.bind(s, edges)))
     val gotLoop = loop.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(gotFast == gotLoop)
@@ -138,18 +136,13 @@ class ComponentsSpec extends SparkSpec {
     val edges = (1 to 5000).map { _ =>
       (rnd.nextInt(100).toLong, rnd.nextInt(100).toLong)
     }.toDF("a", "b")
-    val confs = Seq(
-      "spark.sql.shuffle.partitions" -> "4",
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "10240")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val bcast = try Components.starComponents(edges)
-    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    val bcast = withLoopConfs("spark.sql.autoBroadcastJoinThreshold" -> "10240")(s =>
+      Components.starComponents(GraftSession.bind(s, edges)))
     assert(bcast.rounds > 0, "10 KB budget must force the loop")
     val gotB = bcast.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
-    val plain = withLoopConfs(Components.starComponents(edges))
+    val plain = withLoopConfs()(s =>
+      Components.starComponents(GraftSession.bind(s, edges)))
     val gotP = plain.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(gotB == gotP)

@@ -464,14 +464,14 @@ class ExtensionsSpec extends SparkSpec {
   test("bloom predicate: interpreted and codegen paths agree") {
     val o = graft.tables.Tables.orders(spark, sf001)
       .filter($"o_orderpriority" === "1-URGENT")
-    def kept(wholeStage: Boolean): Long = {
-      val prev = spark.conf.get("spark.sql.codegen.wholeStage")
-      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
-      try graft.tables.Tables.lineitem(spark, sf001)
-        .filter(graft.functions.BloomPrefilter
-          .prefilter(o, "o_orderkey", 100000)($"l_orderkey")).count()
-      finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
-    }
+    def kept(wholeStage: Boolean): Long =
+      graft.GraftSession.scoped(spark,
+        "spark.sql.codegen.wholeStage" -> wholeStage.toString) { s =>
+        graft.tables.Tables.lineitem(s, sf001)
+          .filter(graft.functions.BloomPrefilter
+            .prefilter(graft.GraftSession.bind(s, o), "o_orderkey", 100000)($"l_orderkey"))
+          .count()
+      }
     assert(kept(true) == kept(false))
   }
 

@@ -1,7 +1,8 @@
 package graft.oracle
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{GraftSession, SparkEntry, SparkSpec}
 import graft.tables.Tables
+import org.apache.spark.sql.SparkSession
 
 /** Three-way check (DF vs SQL vs DuckDB): the DuckDB oracle twins are
   * written in portable-leaning ANSI SQL; every twin that Spark SQL can
@@ -184,75 +185,44 @@ class ThreeWaySqlSpec extends SparkSpec {
   }
 
   test("every Spark-executable oracle twin matches its DataFrame plan") {
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      Tables.table(spark, sf001, t).createOrReplaceTempView(t)
-    }
-    Tables.events(spark, sf001).createOrReplaceTempView("events")
-
-    // `"size"`-style quoted identifiers in the twins need ANSI
-    // double-quoted-identifier parsing (DuckDB's default)
-    val prevConf = spark.conf.getOption("spark.sql.ansi.doubleQuotedIdentifiers")
-    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-    // AQE off for the replay: its per-stage
-    // replaceWithQueryStagesInLogicalPlan re-walks the ENTIRE logical
-    // tree (with a System.getenv per node) every time a stage
-    // finishes — on the deep unrolled twins (embed_pca_top2's deflation
-    // inlines to thousands of nodes across hundreds of stages) that
-    // driver-side loop alone ran >25 MINUTES at sf0.001, jstack-pinned
-    // in TreeNode traversal, while the actual execution is seconds.
-    // AQE changes plans, never values, so the three-way comparison is
-    // unaffected; the production entries keep AQE everywhere else.
-    val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // Constraint propagation off for the replay: the rule is quadratic-
-    // to-exponential in plan depth × column count, and the deep unrolled
-    // twins hit it hard — embed_pca_top2's SQL leg alone spent 218 s
-    // (of the r15-measured 717 s replay total) inside the optimizer
-    // with it on, 4 s with it off. It only adds inferred filters
-    // (plan-shape, never values), so the three-way value comparison is
-    // unaffected; production entries keep the default everywhere else.
-    val prevCp = spark.conf.getOption("spark.sql.constraintPropagation.enabled")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    // (tried and REVERTED: spark.sql.exchange.reuse=false /
-    // spark.sql.execution.reuseSubquery=false — the deep-equality dedup
-    // those passes pay for is what keeps the unrolled twins' thousands
-    // of repeated scalar subqueries from each re-executing; without it
-    // the embed_pca_top2 replay ran >9 minutes instead of 2.)
-    try runAll()
-    finally {
-      prevConf match {
-        case Some(v) => spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", v)
-        case None => spark.conf.unset("spark.sql.ansi.doubleQuotedIdentifiers")
+    GraftSession.scoped(spark,
+      // `"size"`-style quoted identifiers in the twins need ANSI
+      // double-quoted-identifier parsing (DuckDB's default)
+      "spark.sql.ansi.doubleQuotedIdentifiers" -> "true",
+      // AQE off for the replay: its per-stage
+      // replaceWithQueryStagesInLogicalPlan re-walks the ENTIRE logical
+      // tree (with a System.getenv per node) every time a stage
+      // finishes — on the deep unrolled twins (embed_pca_top2's deflation
+      // inlines to thousands of nodes across hundreds of stages) that
+      // driver-side loop alone ran >25 MINUTES at sf0.001, jstack-pinned
+      // in TreeNode traversal, while the actual execution is seconds.
+      // AQE changes plans, never values, so the three-way comparison is
+      // unaffected; the production entries keep AQE everywhere else.
+      "spark.sql.adaptive.enabled" -> "false",
+      // Constraint propagation off for the replay: the rule is quadratic-
+      // to-exponential in plan depth × column count, and the deep unrolled
+      // twins hit it hard — embed_pca_top2's SQL leg alone spent 218 s
+      // (of the r15-measured 717 s replay total) inside the optimizer
+      // with it on, 4 s with it off. It only adds inferred filters
+      // (plan-shape, never values), so the three-way value comparison is
+      // unaffected; production entries keep the default everywhere else.
+      "spark.sql.constraintPropagation.enabled" -> "false"
+      // (tried and REVERTED: spark.sql.exchange.reuse=false /
+      // spark.sql.execution.reuseSubquery=false — the deep-equality dedup
+      // those passes pay for is what keeps the unrolled twins' thousands
+      // of repeated scalar subqueries from each re-executing; without it
+      // the embed_pca_top2 replay ran >9 minutes instead of 2.)
+    ) { replay =>
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "documents", "embeddings").foreach { t =>
+        Tables.table(replay, sf001, t).createOrReplaceTempView(t)
       }
-      prevAqe match {
-        case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-        case None => spark.conf.unset("spark.sql.adaptive.enabled")
-      }
-      prevCp match {
-        case Some(v) => spark.conf.set("spark.sql.constraintPropagation.enabled", v)
-        case None => spark.conf.unset("spark.sql.constraintPropagation.enabled")
-      }
+      Tables.events(replay, sf001).createOrReplaceTempView("events")
+      runAll(replay)
     }
   }
 
-  /** Entries whose functions mutate session confs mid-run (loop-conf
-    * fixpoints restore `spark.sql.shuffle.partitions`/AQE in `finally`;
-    * the streaming harness swaps state-partition counts and the state-
-    * store provider per run). They execute SERIALLY, before the pooled
-    * replay, so (a) no pool thread ever observes a mutated session conf
-    * and (b) their conf-mutating memo builds (star-CC cluster labels)
-    * exist before any pooled consumer could trigger one concurrently.
-    */
-  private def mutatesSessionConf(name: String): Boolean =
-    name.startsWith("stream_") || Set(
-      "graph_components", "graph_kcore", "spatial_grid_clusters",
-      "dedup_clusters", "dedup_clusters_star", "dedup_semantic_clusters",
-      "incr_cc_merge",
-      // r15: sssp/bfs gained the same loop-local conf sizing
-      "graph_sssp", "graph_bfs_hops")(name)
-
-  private def runAll(): Unit = {
+  private def runAll(replay: SparkSession): Unit = {
     // dev bisection hook (mirrors Verify's): SPARK_GRAFT_ONLY=a,b runs
     // just those twins. The totality assertions below stay meaningful
     // only on unfiltered runs, so they are skipped under a filter.
@@ -268,14 +238,14 @@ class ThreeWaySqlSpec extends SparkSpec {
         // disabled in the test session; the label is never read.
         // (setCallSite(String) sets only the SHORT form and getCallSite
         // still stack-walks for the long one — set both properties.)
-        spark.sparkContext.setLocalProperty("callSite.short", s"3way:$name")
-        spark.sparkContext.setLocalProperty("callSite.long", s"3way:$name")
+        replay.sparkContext.setLocalProperty("callSite.short", s"3way:$name")
+        replay.sparkContext.setLocalProperty("callSite.long", s"3way:$name")
         // live progress marker (ScalaTest's info() buffers to the end,
         // useless for locating a hang in a 370-entry sweep); per-leg
         // millis let a budget overrun be attributed to specific twins
         val t0 = System.nanoTime()
         val sqlRows =
-          try Right(canon(spark.sql(dialect(sql))))
+          try Right(canon(replay.sql(dialect(sql))))
           catch { case e: Throwable =>
             Left(Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
               .replaceAll("\\s+", " ").take(110)) }
@@ -283,7 +253,7 @@ class ThreeWaySqlSpec extends SparkSpec {
         val out = sqlRows match {
           case Left(err) => (name, "incompatible", err)
           case Right(rows) =>
-            val dfRows = canon(SparkEntry.queries(name)(spark, sf001))
+            val dfRows = canon(SparkEntry.queries(name)(replay, sf001))
             if (rows == dfRows) (name, "match", "")
             else (name, "MISMATCH",
               s"sql=${rows.size} rows df=${dfRows.size} rows; " +
@@ -295,7 +265,6 @@ class ThreeWaySqlSpec extends SparkSpec {
     }
     val all = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val (serial, pooledAlpha) = all.partition { case (n, _) => mutatesSessionConf(n) }
     // Longest twins first so the pool's tail isn't one straggler: the
     // -oD timed run shows embed_pca_top2's SQL leg alone is ~2–3 min
     // (physical planning of the unrolled deflation); started last it
@@ -306,26 +275,26 @@ class ThreeWaySqlSpec extends SparkSpec {
       "embed_ann_hnsw", "graph_conductance", "embed_knn_descent",
       "dedup_lsh_pr_matrix")
     val rank = heavyFirst.zipWithIndex.toMap
-    val pooled = pooledAlpha.sortBy { case (n, _) =>
+    val pooled = all.sortBy { case (n, _) =>
       (rank.getOrElse(n, Int.MaxValue), n) }
-    // Conf-mutating entries first, single-threaded (see
-    // [[mutatesSessionConf]]); then the remaining ~360 twins replay on a
-    // small fixed pool — each task is an independent (spark.sql + entry)
-    // pair against one shared session, and Spark's scheduler interleaves
-    // the sub-second sf0.001 jobs (guide §2.6). The pool mainly overlaps
+    // Every twin replays on a small fixed pool — each task is an
+    // independent (spark.sql + entry) pair against one shared session,
+    // and Spark's scheduler interleaves the sub-second sf0.001 jobs
+    // (guide §2.6). No entry writes the session's conf (operators that
+    // need confs run on GraftSession.scoped clones), so no pool thread
+    // plans under another entry's confs. The pool mainly overlaps
     // DRIVER-side planning (single-threaded per query, the dominant leg
     // at this SF). Shared-relation memos build once per key even when
     // pooled twins race for them (graft.Memo). Pool size 6: enough to
     // hide planning latency, small enough that the 4-slot executor isn't
     // thrashed.
-    val serialResults = serial.map { case (n, s) => runOne(n, s) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     val results = try {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       val fs = pooled.map { case (n, s) => Future(runOne(n, s)) }
-      serialResults ++ fs.map(Await.result(_, Duration.Inf))
+      fs.map(Await.result(_, Duration.Inf))
     } finally pool.shutdown()
 
     val mismatches = results.filter(_._2 == "MISMATCH")

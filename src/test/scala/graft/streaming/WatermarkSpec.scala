@@ -145,12 +145,11 @@ class WatermarkSpec extends SparkSpec {
       ("A", java.sql.Timestamp.valueOf("2024-01-01 00:20:00")),
       ("B", java.sql.Timestamp.valueOf("2024-01-01 00:30:00")))
       .toDF("k", "ts"), s"$dir/in/batch1.parquet")
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.GraftSession.scoped(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { s =>
       val buf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val q = spark.readStream
+      val q = s.readStream
         .schema("k STRING, ts TIMESTAMP")
         .parquet(s"$dir/in")
         .withWatermark("ts", "1 hour")
@@ -167,11 +166,6 @@ class WatermarkSpec extends SparkSpec {
       assert {
         import scala.jdk.CollectionConverters._
         buf.asScala.toList.sorted == List("A", "B")
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
   }
