@@ -7,13 +7,15 @@ import org.apache.spark.sql.functions._
 /** Distributed connected components via alternating large-star /
   * small-star edge rewiring (Kiveris et al., "Connected Components in
   * MapReduce and Beyond", SoCC 2014 — the public O(log n)-round
-  * algorithm). This is the adversarial-diameter companion to
-  * [[TextDedup.nearDupClusters]]' min-label propagation: propagation
-  * needs component-diameter rounds (fine for near-dup graphs, whose
-  * diameter is small by construction), while star rewiring halves chain
-  * lengths every iteration, so a pathological long-chain pair graph —
-  * e.g. boilerplate that daisy-chains otherwise-unrelated docs — still
-  * converges in logarithmic rounds.
+  * algorithm), the one connected-components operator of the near-dup,
+  * semantic, spatial and graph families ([[TextDedup.nearDupClusters]]
+  * among them). Min-label propagation needs component-diameter rounds;
+  * star rewiring halves chain lengths every iteration, so a
+  * pathological long-chain pair graph — e.g. boilerplate that
+  * daisy-chains otherwise-unrelated docs — still converges in
+  * logarithmic rounds. A graph that fits the session's broadcast budget
+  * skips the loop: one bounded collect and an in-memory union-find give the
+  * same min-id labels.
   *
   * Representation: directed edges (u, v) with u > v ("big points at
   * small"), deduplicated. Each round is two map-reduce shaped passes:

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GraftSession, Memo}
@@ -100,20 +100,24 @@ object TextDedup {
     cachedDocSets(spark, dir)
       .select(col("doc_id"), explode(col("shs")).as("sh"))
 
-  /** sig_j = min over shingles of md5("j|" || shingle) as a narrow
-    * array_min(transform(...)) over the set column — no shuffle.
+  /** (doc_id, s0..s{numPerms-1}) from a (doc_id, shs) set relation:
+    * sig_j = min over shingles of md5("j|" || shingle), all slots from
+    * one narrow [[graft.functions.MinHashSigs]] pass per row — no
+    * shuffle.
     */
-  private def sigExprs(shs: Column, numPerms: Int): Seq[Column] =
-    (0 until numPerms).map(j =>
-      array_min(transform(shs, x => md5(concat(lit(s"$j|"), x)))).as(s"s$j"))
+  private def sigWide(sets: DataFrame, numPerms: Int): DataFrame = {
+    graft.functions.MinHashSigs.register(sets.sparkSession)
+    sets.select(col("doc_id"),
+        graft.functions.MinHashSigs.sigs(col("shs"), numPerms).as("sig"))
+      .select(col("doc_id") +:
+        (0 until numPerms).map(j => col("sig").getItem(j).as(s"s$j")): _*)
+  }
 
   /** Wide MinHash signature table (doc_id, s0..s7), derived narrowly from
     * [[cachedDocSets]].
     */
   def cachedSigWide(spark: SparkSession, dir: String): DataFrame =
-    Memo(spark, dir, "dedup.sig_wide")(
-      cachedDocSets(spark, dir)
-        .select(col("doc_id") +: sigExprs(col("shs"), 8): _*))
+    Memo(spark, dir, "dedup.sig_wide")(sigWide(cachedDocSets(spark, dir), 8))
 
   /** The X2 banding as a standalone per-row relation: (doc_id, b,
     * band_hash) for the deployed 4-band × 2-row layout over the 8-hash
@@ -125,8 +129,7 @@ object TextDedup {
     * to the X2 candidate relation.
     */
   def bandHashesOf(docs: DataFrame): DataFrame = {
-    val wide = docSetsOf(docs)
-      .select(col("doc_id") +: sigExprs(col("shs"), 8): _*)
+    val wide = sigWide(docSetsOf(docs), 8)
     val bandCols = (0 until 4).map(b =>
       md5(concat(col(s"s${2 * b}"), lit("|"), col(s"s${2 * b + 1}")))
         .as(s"bh$b"))
@@ -204,12 +207,11 @@ object TextDedup {
     */
   def minhashSignatures(docs: DataFrame, numPerms: Int = 8): DataFrame = {
     val stackArgs = (0 until numPerms).map(j => s"$j, s$j").mkString(", ")
-    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+    sigWide(docs.select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 3)
       .select(col("doc_id"),
         array_distinct(expr("transform(sequence(1, size(w) - 2), " +
-          "i -> concat_ws(' ', slice(w, i, 3)))")).as("shs"))
-      .select(col("doc_id") +: sigExprs(col("shs"), numPerms): _*)
+          "i -> concat_ws(' ', slice(w, i, 3)))")).as("shs")), numPerms)
       .select(col("doc_id"),
         expr(s"stack($numPerms, $stackArgs) AS (j, sig)"))
   }
@@ -746,29 +748,30 @@ object TextDedup {
     * graph, cluster id = min doc_id of the component, the id-holder is
     * the canonical survivor and everything else in the cluster drops.
     *
-    * Min-label propagation: every round each node takes the minimum label
-    * among itself and its neighbours; converged when no label shrinks.
-    * Rounds = component diameter — a driver loop of distributed jobs
-    * (labels and edges never leave the cluster; only the one-row
-    * convergence probe comes back). Near-dup components are
-    * diameter-bounded by construction (band collisions chain only through
-    * genuinely similar docs), so the round count stays single-digit; for
-    * adversarial long-chain graphs the large-star/small-star form
-    * ([[nearDupClustersStar]] / [[Components.starComponents]]) bounds
-    * rounds at O(log n).
-    * Each round is one shuffle on the node id; labels persist per round
-    * and unpersist as soon as the next round lands.
+    * Components come from [[Components.starComponents]]: a pair graph
+    * that fits the session's broadcast budget (every fixture scale and
+    * the curation chain's) is labeled by an in-memory union-find over
+    * one bounded collect; a larger one runs the large-star/small-star loop,
+    * O(log n) rounds of node-keyed shuffles even on adversarial
+    * long-chain graphs, bounded by `maxRounds`.
+    *
+    * Memoized: the `dedup_clusters` and `dedup_clusters_star` entries,
+    * the X202 soft-dedup weights and the curation reports all read one
+    * labeling per corpus snapshot.
     */
   def nearDupClusters(spark: SparkSession, dir: String,
-                      minSim: Double = 0.5, maxRounds: Int = 20): DataFrame =
-    // memoized like the graph family's labelPropLabels (the r7 lesson):
-    // the `dedup_clusters` entry and the X202 soft-dedup weights both
-    // consume this propagation — unmemoized each paid the full loop
-    // (measured ~5 s of curation_soft_dedup_weights at sf0.1 was the
-    // SECOND run of the same fixpoint)
+                      minSim: Double = 0.5, maxRounds: Int = 48): DataFrame =
     Memo(spark, dir, s"dedup.clusters:$minSim:$maxRounds") {
-      nearDupClustersUncached(spark, dir, minSim, maxRounds)
-    }
+      // looked up in the caller's session, so the pair memo is built the
+      // same way whichever consumer asks first (see LoopConfs)
+      val pairs = cachedMinhashPairs(spark, dir)
+        .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
+      GraftSession.scoped(spark, LoopConfs: _*) { loop =>
+        GraftSession.bind(spark, Components.starComponents(
+          GraftSession.bind(loop, pairs), maxRounds).labels)
+      }.select(col("id").as("doc_id"), col("comp").as("cluster_id"),
+          (col("id") === col("comp")).as("is_canonical"))
+    }.orderBy("doc_id") // stored unsorted: joins and counts drop the sort
 
   /** Confs of the cluster loops, held by their scoped session (confs
     * bind at plan time):
@@ -777,118 +780,28 @@ object TextDedup {
     *    the corpus — the same right-sizing lever EventStream applies to
     *    stream-state partitions; at 100 TB the caller sizes it to the
     *    measured pair volume;
-    *  - AQE OFF for the loop: AQE materializes every exchange as its own
-    *    job to re-plan, which on an iterative chain of small bounded
-    *    shuffles is pure per-stage scheduling latency (measured 33 jobs
-    *    ≈ 9s for a 260-edge graph; pipelined it's one job per probe).
-    *    The loop's relations are pre-partitioned and bounded, so the
-    *    things AQE buys (coalescing, skew splits) don't apply inside it.
+    *  - AQE OFF: AQE materializes every exchange as its own job to
+    *    re-plan, which on an iterative chain of small bounded shuffles is
+    *    pure per-stage scheduling latency. The loop's relations are
+    *    pre-partitioned and bounded, so the things AQE buys (coalescing,
+    *    skew splits) don't apply inside it.
+    * Only the component computation runs here. The shared pair memo is
+    * looked up in the caller's session and bound in: built under these
+    * confs, its stored leaf would carry this scope's hash partitioning,
+    * and the AQE-on plans of its other consumers would stop matching
+    * their cached relations against it.
     */
   private val LoopConfs = Seq(
     "spark.sql.shuffle.partitions" -> "4",
     "spark.sql.adaptive.enabled" -> "false")
 
-  private def nearDupClustersUncached(spark: SparkSession, dir: String,
-                                      minSim: Double,
-                                      maxRounds: Int): DataFrame =
-    GraftSession.scoped(spark, LoopConfs: _*) { loop =>
-      GraftSession.bind(spark, nearDupClustersInner(loop, dir, minSim, maxRounds))
-    }
-
-  private def nearDupClustersInner(spark: SparkSession, dir: String,
-                                   minSim: Double, maxRounds: Int): DataFrame = {
-    val pairs = cachedMinhashPairs(spark, dir)
-      .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
-    val undirected = pairs.unionByName(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
-    // self-loops fold "min of self and neighbours" into ONE join + MIN —
-    // a step must reference the label relation exactly once: Spark does
-    // not dedupe common DataFrame subtrees, so a two-reference step
-    // doubles the composed plan per round (2^batch subtrees by the probe)
-    // exactly like the inlined-CTE trap in the DuckDB twin.
-    // Edges are hash-partitioned ON THE JOIN KEY once and cached that
-    // way; each round's MIN-aggregate output is partitioned on its group
-    // key, which IS the next round's join key (same attribute), so the
-    // steady-state round costs exactly one exchange (the group-by) —
-    // the loop reuses one partitioning across stages instead of
-    // re-shuffling both sides every round.
-    val loopParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edges = undirected.unionByName(
-      undirected.select(col("src"), col("src").as("dst")).distinct())
-      .repartition(loopParts, col("src"))
-      .persist()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lab", col("id")).persist()
-    // one lazy propagation round, single reference to `l`
-    def step(l: DataFrame): DataFrame =
-      edges
-        .join(l.select(col("id").as("src"), col("lab").as("slab")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min("slab").as("lab"))
-    // Rounds run in BATCHES between materializations: a convergence probe
-    // is a whole Spark job, and on the (small) pair graph per-stage AQE
-    // latency dominates the actual join work — several lazy rounds
-    // compose into one plan, then ONE aggregation both probes convergence
-    // and materializes the batch's cache in full (labels only ever
-    // decrease, so an unchanged sum(lab) ⟺ no label changed; a full
-    // materialization also means releasing the previous cache can never
-    // force ancestry recomputation). Fixture graphs converge in one
-    // batch + one confirming probe.
-    val batch = 4
-    // decimal sum: overflow-proof at any node count (a wrapped long sum
-    // could collide with the previous value and fake convergence)
-    def labelSum(l: DataFrame): java.math.BigDecimal =
-      l.agg(sum(col("lab").cast("decimal(38,0)"))).head().getDecimal(0)
-    var backing = labels
-    var lastSum: java.math.BigDecimal = null // first probe can't converge
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val next = (1 to batch).foldLeft(labels)((l, _) => step(l)).persist()
-      val nextSum = labelSum(next) // materializes the batch's cache
-      converged = lastSum != null && nextSum.compareTo(lastSum) == 0
-      lastSum = nextSum
-      backing.unpersist()
-      backing = next
-      labels = next
-      rounds += batch
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"near-dup clustering did not converge in $maxRounds rounds — " +
-          "component diameter exceeds the propagation bound")
-    // pin the final assignment, then release every loop intermediate: the
-    // result is a small (node, label) relation, the loop ancestry is not
-    val result = labels
-      .select(col("id").as("doc_id"), col("lab").as("cluster_id"),
-        (col("id") === col("lab")).as("is_canonical"))
-      .persist()
-    result.count()
-    backing.unpersist()
-    edges.unpersist()
-    result.orderBy("doc_id")
-  }
-
-  /** [[nearDupClusters]] computed by alternating large-star/small-star
-    * rewiring ([[Components.starComponents]]) instead of min-label
-    * propagation — identical output (same pair graph, same min-id
-    * canonical labeling), logarithmic rounds on adversarial chain-shaped
-    * graphs where propagation would need diameter rounds. Kept beside
-    * the propagation form as an oracled twin so both stay verified; at
-    * 100 TB this is the variant to run when pair-graph diameter is
-    * unknown.
+  /** The `dedup_clusters_star` entry: [[nearDupClusters]] under its
+    * second name (the two shared one oracle when the first ran min-label
+    * propagation); both read the same memo.
     */
   def nearDupClustersStar(spark: SparkSession, dir: String,
-                          minSim: Double = 0.5): DataFrame = {
-    // loop confs and their rationale: see LoopConfs
-    GraftSession.scoped(spark, LoopConfs: _*) { loop =>
-      val pairs = cachedMinhashPairs(loop, dir)
-        .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
-      GraftSession.bind(spark, Components.starComponents(pairs).labels)
-    }.select(col("id").as("doc_id"), col("comp").as("cluster_id"),
-        (col("id") === col("comp")).as("is_canonical"))
-      .orderBy("doc_id")
-  }
+                          minSim: Double = 0.5): DataFrame =
+    nearDupClusters(spark, dir, minSim)
 
   /** X129: INCREMENTAL cluster maintenance — yesterday's corpus is
     * already clustered; today's batch must merge in without re-running
@@ -917,9 +830,10 @@ object TextDedup {
     */
   def incrementalClusterMerge(spark: SparkSession, dir: String,
                               minSim: Double = 0.5): DataFrame = {
+    val allPairs = cachedMinhashPairs(spark, dir)
+      .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
     GraftSession.scoped(spark, LoopConfs: _*) { loop =>
-      val pairs = cachedMinhashPairs(loop, dir)
-        .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
+      val pairs = GraftSession.bind(loop, allPairs)
       // deterministic, data-derived split: docs in the top quarter of
       // the id range are "today's batch" (plan-side broadcast scalar)
       val t = graft.tables.Tables.documents(loop, dir)

@@ -29,6 +29,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[SortedIntersectLongs].getName,
         "graft_sorted_intersect_longs"),
       (exprs: Seq[Expression]) => SortedIntersectLongs(exprs(0), exprs(1))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_minhash_sigs"),
+      new ExpressionInfo(classOf[MinHashSigs].getName, "graft_minhash_sigs"),
+      (exprs: Seq[Expression]) => MinHashSigs(exprs(0), exprs(1))))
     // non-equi band joins (abs(x - y) <= w) planned as banded equi-joins
     // instead of nested loops — see graft.plans.BandJoinRewrite
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)

@@ -1195,13 +1195,15 @@ ${SHINGLES.trim},
       GROUP BY c.doc_a, c.doc_b ORDER BY c.doc_a, c.doc_b""",
     // Connected components over the thresholded minhash pair graph
     // (TextDedup.nearDupClusters): min-label propagation unrolled to 16
-    // fixed rounds — the Spark side iterates to convergence, and near-dup
-    // components converge in ≤ diameter ≤ 8 rounds on every fixture SF
-    // (unrolled to 2× that so a fixture regeneration with a longer
-    // chain cannot fail correct Spark output; the extra rounds are
-    // no-ops at the fixpoint and cheap on the tiny pair graph)
-    // (the Spark side THROWS past 20 rounds rather than emit a partial
-    // clustering, so a divergence can never silently hash-match).
+    // fixed rounds. The Spark side computes the components exactly
+    // (Components.starComponents: an in-memory union-find when the graph
+    // fits the broadcast budget, star rewiring to a proven fixpoint
+    // otherwise), and near-dup components have diameter ≤ 8 on every
+    // fixture SF (unrolled to 2× that so a fixture regeneration with a
+    // longer chain cannot fail correct Spark output; the extra rounds
+    // are no-ops at the fixpoint and cheap on the tiny pair graph). A
+    // chain longer than 16 leaves the SQL labels short of the component
+    // minimum, so a divergence shows as a mismatch, never a silent match.
     // PLAN SHAPE MATTERS: each round references the previous round
     // exactly ONCE (self-loops on the edge set turn "min of self and
     // neighbours" into one join + MIN group-by) — a two-reference round
@@ -2380,9 +2382,10 @@ ${SHINGLES.trim},
       ORDER BY b.vec_id""",
     // X84 semantic clusters: the thresholded cosine pair graph (the
     // dedup_embed_pairs edge set) closed under 16-round min-label
-    // propagation (the dedup_clusters unrolling — the Spark side runs
-    // star rewiring to a PROVEN fixpoint, so a divergence can't
-    // silently hash-match); vectors with no pair are their own cluster.
+    // propagation (the dedup_clusters unrolling — the Spark side computes
+    // exact components with Components.starComponents, union-find or
+    // star rewiring to a PROVEN fixpoint, so a divergence can't silently
+    // hash-match); vectors with no pair are their own cluster.
     "dedup_semantic_clusters" -> ("""
       WITH mrel AS (
         SELECT vec_id, embedding,
@@ -9802,8 +9805,8 @@ ${SHINGLES.trim},
   def all: Map[String, String] =
     sync_queries ++ analytics_queries ++ events_queries ++ llm_queries ++
       stream_sink_queries ++ coverage_queries ++ warehouse_queries +
-      // the star-rewiring CC twin computes the SAME clustering as the
-      // propagation form, so it shares dedup_clusters' oracle verbatim
+      // the second name of nearDupClusters (one memo, one clustering),
+      // so it shares dedup_clusters' oracle verbatim
       ("dedup_clusters_star" -> llm_queries("dedup_clusters")) +
       // incremental contract-and-merge is row-identical to re-clustering
       // from scratch (min-id label composition) — same full-corpus oracle

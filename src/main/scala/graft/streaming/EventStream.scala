@@ -136,6 +136,7 @@ object EventStream {
     * start, when the layout is frozen) and, when the plan has a
     * `transformWithState` node, the RocksDB state-store provider that
     * operator requires. The caller's session conf is never touched.
+    * Runs with the same confs share one such session ([[streamSession]]).
     */
   private def runToMemoryPartitions(result: DataFrame, mode: String,
                                     statePartitions: Option[Int]): DataFrame = {
@@ -145,11 +146,30 @@ object EventStream {
     val confs = statePartitions.map("spark.sql.shuffle.partitions" -> _.toString) ++
       Option.when(tws)("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    GraftSession.scoped(spark, confs.toSeq: _*) { run =>
-      GraftSession.bind(spark,
-        runToMemoryInner(GraftSession.bind(run, result), mode))
-    }
+    val run = streamSession(spark, confs.toSeq)
+    GraftSession.bind(spark,
+      runToMemoryInner(GraftSession.bind(run, result), mode))
   }
+
+  // Streaming sessions by caller session and full conf. The first
+  // stream a session starts registers that session's
+  // StreamingQueryListenerBus on the SparkContext for the context's
+  // life (Spark offers no way to remove it), so a fresh clone per run
+  // would add one listener per run; one clone per (caller, conf) adds
+  // one per distinct conf. The caller's whole conf is in the key, so a
+  // caller whose conf changed gets a clone of its current conf. Entries
+  // live as long as the application, like the listeners they stand for.
+  private val streamSessions = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, Map[String, String]), SparkSession]
+
+  /** A clone of `spark` holding `confs`, shared by every stream run
+    * that asks for the same caller and conf. The runs' query names are
+    * unique, so concurrent runs on one clone do not collide.
+    */
+  private def streamSession(spark: SparkSession,
+                            confs: Seq[(String, String)]): SparkSession =
+    streamSessions.getOrElseUpdate((spark, spark.conf.getAll ++ confs),
+      GraftSession.scoped(spark, confs: _*)(identity))
 
   private def runToMemoryInner(result: DataFrame, mode: String): DataFrame = {
     val name = s"graft_stream_sink_${sinkId.incrementAndGet()}"

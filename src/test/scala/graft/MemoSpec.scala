@@ -119,4 +119,20 @@ class MemoSpec extends SparkSpec {
     assert(rdds.subsetOf(rdds0) && (checkpoints & rdds).isEmpty)
     assert(storedBytes == bytes0)
   }
+
+  test("the pair memo is stored alike whichever entry builds it first") {
+    def pairLeaf() = TextDedup.cachedMinhashPairs(spark, sf001)
+      .queryExecution.analyzed.collectLeaves().collect {
+        case lr: LogicalRDD => lr.outputPartitioning
+      }
+    def builtBy(entry: String) = {
+      Memo.clear(spark)
+      SparkEntry.queries(entry)(spark, sf001).collect()
+      pairLeaf()
+    }
+    val viaClusters = builtBy("dedup_clusters")
+    val viaPairs = builtBy("dedup_minhash_pairs")
+    assert(viaClusters.size == 1)
+    assert(viaClusters == viaPairs)
+  }
 }

@@ -32,4 +32,6 @@ object SparkTestBase {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   val sf001 = "/root/testdata/sf0.001"
+  /** The 500-document fixture beside [[sf001]]. */
+  val sf01: String = java.nio.file.Paths.get(sf001).resolveSibling("sf0.01").toString
 }

@@ -2,12 +2,13 @@ package graft.ext
 
 import graft.{GraftSession, SparkSpec}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** Large-star/small-star connected components: the O(log n) round bound
   * on the adversarial graph shape (a long path — exactly where min-label
   * propagation degrades to diameter rounds), correctness on disconnected
-  * multi-component graphs, and agreement with the propagation form on
-  * the real near-dup pair graph.
+  * multi-component graphs, and agreement of the broadcast-sized fast path with
+  * the loop on the real near-dup pair graph.
   */
 class ComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -149,12 +150,23 @@ class ComponentsSpec extends SparkSpec {
     bcast.labels.unpersist(); plain.labels.unpersist()
   }
 
-  test("star clustering equals min-label propagation on the fixture pair graph") {
-    val prop = TextDedup.nearDupClusters(spark, sf001)
+  test("fast path and loop label the sf0.01 near-dup pair graph alike") {
+    def rowsOf(r: Components.StarResult): Set[(Long, Long)] =
+      r.labels.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    val pairs = TextDedup.cachedMinhashPairs(spark, sf01)
+      .filter(col("est_sim") >= 0.5).select("doc_a", "doc_b")
+    val fast = Components.starComponents(pairs)
+    assert(fast.rounds == 0, "the pair graph fits the default broadcast budget")
+    val loop = withLoopConfs()(s =>
+      Components.starComponents(GraftSession.bind(s, pairs)))
+    assert(loop.rounds > 0, "threshold -1 must force the loop")
+    val got = rowsOf(fast)
+    assert(got.nonEmpty)
+    assert(got == rowsOf(loop))
+    // the memoized clustering reads the same labels
+    val clusters = TextDedup.nearDupClusters(spark, sf01)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val star = TextDedup.nearDupClustersStar(spark, sf001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(star == prop)
-    assert(star.nonEmpty)
+    assert(clusters == got.map { case (id, comp) => (id, comp, id == comp) })
+    fast.labels.unpersist(); loop.labels.unpersist()
   }
 }

@@ -12,6 +12,20 @@ class StreamingSpec extends SparkSpec {
     assert(stream.toSeq.map(_.toSeq) == batch.toSeq.map(_.toSeq))
   }
 
+  // Spark clones the session for every query it starts, and that clone
+  // registers a listener bus of its own; a run must add no other.
+  test("repeated stream runs add at most one context listener each") {
+    def listeners: Seq[String] =
+      org.apache.spark.ListenerBusDrain.listeners(spark.sparkContext)
+    val run = graft.SparkEntry.queries("stream_tumbling")
+    val counts = (1 to 4).map { _ => run(spark, sf001).collect(); listeners.size }
+    val byClass = listeners.groupBy(identity).map { case (c, l) => s"$c ${l.size}" }
+    val seen = s"listeners after each run: ${counts.mkString(", ")}; " +
+      s"by class: ${byClass.mkString(", ")}"
+    info(seen)
+    counts.sliding(2).foreach { case Seq(a, b) => assert(b - a <= 1, seen) }
+  }
+
   test("session_window count matches gaps-and-islands session count") {
     val stream = EventStream.sessionWindows(spark, sf001)
     val batch = graft.ext.Events.sessionize(spark, sf001)
