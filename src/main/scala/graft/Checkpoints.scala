@@ -1,17 +1,29 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SessionBridge, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.CachedSize
+import org.apache.spark.storage.StorageLevel
 
-/** Lineage cuts for iterative operators, with a durability switch.
+/** Stored relations with a cut lineage: every [[Memo]] value and every
+  * round of an iterative operator.
   *
-  * `localCheckpoint()` stores blocks on executors — fast, but an executor
-  * loss mid-iteration fails the job because the truncated lineage cannot
-  * recompute the lost blocks. That is the right default on local[k]
+  * [[cut]] runs a relation's plan once and keeps its rows. Consumers then
+  * plan against a `LogicalRDD` leaf instead of the relation's build DAG:
+  * for the fixpoint- and explode-heavy relations that DAG is thousands
+  * of operator nodes, and every consumer query would re-pay analyzer,
+  * optimizer and AQE walks over it. The one job that stores the rows
+  * also measures them, so the leaf carries the row count and the size
+  * the in-memory cache would report, and downstream broadcast decisions
+  * are the ones a cached relation would produce.
+  *
+  * Storage: `localCheckpoint()` keeps the blocks on executors. That is
+  * fast, but an executor loss fails later jobs, because the cut lineage
+  * cannot recompute the lost blocks. It is the right default on local[k]
   * (executors = the driver JVM). On a real cluster, set
-  * `graft.checkpoint.dir` to a durable location (HDFS/object storage) and
-  * every iterative operator switches to reliable `checkpoint()`: same
-  * plan-size-O(1) semantics, blocks survive executor loss at the price of
-  * a write per round — the standard trade for long CC/BFS jobs at scale.
+  * `graft.checkpoint.dir` to a durable location (HDFS/object storage):
+  * cuts then become reliable `checkpoint()`s into it, which survive
+  * executor loss at the price of a file write per cut.
   */
 object Checkpoints {
 
@@ -28,58 +40,52 @@ object Checkpoints {
   private def durableDir(spark: SparkSession): Option[String] =
     spark.conf.getOption(ConfKey).filter(_.nonEmpty)
 
-  /** Cut `df`'s lineage: reliable `checkpoint()` into the configured
-    * directory when `graft.checkpoint.dir` is set, executor-local blocks
-    * otherwise. Eager either way (callers rely on materialize-then-probe
-    * ordering).
+  /** `df` materialized with its lineage cut, in one job (plus the
+    * shuffle stages of `df`'s own plan). The job runs over the executed
+    * plan's rows marked `localCheckpoint()`, or `checkpoint()` into
+    * `graft.checkpoint.dir` when that is set, and returns per partition
+    * the row count and the cache size of [[CachedSize]]. The result is a
+    * leaf with those statistics; [[rows]] reads its count without a job.
+    * A build that throws leaves no blocks behind. Free the blocks with
+    * [[release]].
     */
   def cut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    durableDir(spark) match {
-      case Some(dir) =>
-        val app = spark.sparkContext.applicationId
-        if (!applied.get(app).contains(dir)) {
-          spark.sparkContext.setCheckpointDir(dir)
-          applied.put(app, dir)
-        }
-        df.checkpoint()
-      case None =>
-        df.localCheckpoint()
+    val durable = durableDir(spark)
+    durable.foreach { dir =>
+      val app = spark.sparkContext.applicationId
+      if (!applied.get(app).contains(dir)) {
+        spark.sparkContext.setCheckpointDir(dir)
+        applied.put(app, dir)
+      }
+    }
+    val measure = CachedSize.ofPartition(df.schema.map(_.dataType))
+    SessionBridge.storedLeaf(df) { rows =>
+      // a reliable checkpoint writes its files in a second job after the
+      // first: the blocks kept until then spare that job a recomputation
+      if (durable.isDefined) rows.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      else rows.localCheckpoint()
+      try {
+        val parts = spark.sparkContext.runJob(rows, measure)
+        if (durable.isDefined) rows.unpersist()
+        (parts.iterator.map(_._1).sum, parts.iterator.map(_._2).sum)
+      } catch { case e: Throwable => rows.unpersist(); throw e }
     }
   }
 
-  /** Materialize a memoized shared relation with a TRUNCATED plan (r15,
-    * guide §1.2/§2.4): a `persist()`-only memo serves its BLOCKS from
-    * cache, but every consumer query still carries the relation's full
-    * build DAG in its analyzed plan — for the fixpoint/explode-heavy
-    * relations that is thousands of operator nodes, and each consumer
-    * RUN re-pays analyzer/optimizer/AQE walks over them (measured: the
-    * gaps between jobs, not the jobs, dominated the warm dedup-family
-    * entries). persist+count first so the lineage cut inherits the
-    * MATERIALIZED size (`LogicalRDD.fromDataset` propagates the origin's
-    * stats — broadcast decisions downstream stay what the cached
-    * relation would have produced), then cut, then drop the inner cache
-    * so the blocks live exactly once, in the checkpointed RDD.
-    * Release with [[release]] — a plain `unpersist()` cannot see the
-    * checkpoint blocks. A build that throws leaves no cache entry behind.
-    */
-  def materialize(df: DataFrame): DataFrame = {
-    val cached = df.persist()
-    try {
-      cached.count()
-      cut(cached)
-    } finally cached.unpersist()
+  /** Row count of a [[cut]] relation, as its job measured it. */
+  def rows(df: DataFrame): Long = df.queryExecution.analyzed match {
+    case lr: LogicalRDD if lr.stats.rowCount.isDefined => lr.stats.rowCount.get.toLong
+    case p => throw new IllegalArgumentException(
+      s"not a cut relation: ${p.nodeName}")
   }
 
-  /** Free a [[materialize]]d relation's storage: the checkpoint blocks
-    * hang off the `LogicalRDD` leaf, not the Dataset's cache entry.
+  /** Free a [[cut]] relation's blocks: they hang off its `LogicalRDD`
+    * leaf, which a plain `Dataset.unpersist()` cannot see.
     */
-  def release(df: DataFrame): Unit = {
-    df.unpersist()
+  def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist()
+      case lr: LogicalRDD => lr.rdd.unpersist()
       case _ => ()
     }
-  }
 }

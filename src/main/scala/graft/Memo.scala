@@ -15,11 +15,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   *  - Key: (application, `dir`, `name`). `name` carries the family prefix
   *    and any build parameter (`dedup.jaccard_pairs_0.6`).
-  *  - Value: the relation built by [[Checkpoints.materialize]] (blocks
-  *    cached, lineage cut) plus a fingerprint of `dir`, its recursive
-  *    listing of (path, length, modification time). Each lookup lists
-  *    `dir` once; a changed listing releases the stored copy and rebuilds,
-  *    so a rewritten corpus never serves the old rows.
+  *  - Value: the relation built by [[Checkpoints.cut]] (rows stored and
+  *    measured in one job, lineage cut, the leaf carrying the row count
+  *    and cache size a persisted copy would report) plus a fingerprint of
+  *    `dir`, its recursive listing of (path, length, modification
+  *    time). Each lookup lists `dir` once; a changed listing releases
+  *    the stored copy and rebuilds, so a rewritten corpus never serves
+  *    the old rows.
   *  - Builds: each key builds at most once, even when threads race for it
   *    (the key's slot is locked for the build; keys nest freely because
   *    memo dependencies form a DAG). A build that throws leaves nothing
@@ -68,7 +70,7 @@ object Memo {
           Checkpoints.release(slot.value)
           slot.value = null
         }
-        try slot.value = timed(app, name)(Checkpoints.materialize(build))
+        try slot.value = timed(app, name)(Checkpoints.cut(build))
         catch { case e: Throwable => slots.remove(key, slot); throw e }
         slot.fingerprint = fp
         Some(slot.value)

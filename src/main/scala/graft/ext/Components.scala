@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.GraftSession
+import graft.{Checkpoints, GraftSession}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,7 +36,9 @@ import org.apache.spark.sql.functions._
 object Components {
 
   /** Component assignment and the round count it took (the spec asserts
-    * the O(log n) bound on an adversarial path graph).
+    * the O(log n) bound on an adversarial path graph). `labels` is a
+    * local relation on the fast path and a persisted one after the loop;
+    * every cut the call made is released before it returns.
     */
   final case class StarResult(labels: DataFrame, rounds: Int)
 
@@ -56,9 +58,11 @@ object Components {
     // exponential in rounds, an analyzer OOM long before any data
     // pressure. Checkpointing makes every round's plan O(1); a cluster
     // run sets `graft.checkpoint.dir` to durable storage and the cuts
-    // become reliable `checkpoint()`s for executor-loss resilience.
+    // become reliable `checkpoint()`s for executor-loss resilience. Each
+    // cut is one job that also counts its rows, so sizing the loop and
+    // gating the fast path below read counts without a job of their own.
     val cols = pairs.columns
-    val init = graft.Checkpoints.cut(pairs
+    val init = Checkpoints.cut(pairs
       .select(col(cols(0)).as("a"), col(cols(1)).as("b"))
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"),
@@ -70,17 +74,17 @@ object Components {
     // (~2M edge rows ≈ 50–100 MB per reduce partition), not to the
     // session default — at bench SF the loop stops scheduling dozens of
     // ~1ms tasks per stage, at 100 TB the same formula yields hundreds
-    // of right-sized partitions. The count is one trivial job over the
-    // just-checkpointed init relation. AQE is OFF inside the loop for
-    // the established reason (per-exchange re-planning is pure latency
-    // on a chain of small bounded shuffles whose sizes we just derived);
-    // both confs hold only in the loop's scoped session.
-    val nEdges = init.count()
+    // of right-sized partitions. The count is the one the init cut's job
+    // measured. AQE is OFF inside the loop for the established reason
+    // (per-exchange re-planning is pure latency on a chain of small
+    // bounded shuffles whose sizes we just derived); both confs hold only
+    // in the loop's scoped session.
+    val nEdges = Checkpoints.rows(init)
     // nodes whose only edges were self-loops still deserve a label
-    val allNodes = graft.Checkpoints.cut(pairs
+    val allNodes = Checkpoints.cut(pairs
       .select(explode(array(col(cols(0)), col(cols(1)))).as("id"))
       .distinct())
-    val nNodes = allNodes.count()
+    val nNodes = Checkpoints.rows(allNodes)
 
     // Broadcast-sized fast path (r15, guide §3.1/§5 posture): when the
     // canonical edge set AND node set together fit the session's own
@@ -90,10 +94,11 @@ object Components {
     // structure is computable on the driver from ONE bounded collect —
     // no more bytes than Spark itself would pull to build a broadcast
     // hash relation — and the fixpoint's per-round job floor (a
-    // checkpoint + count + probe + 4 bounded shuffles PER ROUND, ~log n
+    // checkpoint + probe + 4 bounded shuffles PER ROUND, ~log n
     // rounds) collapses to a union-find over in-memory longs. Labels
-    // come back as a broadcast-sized local relation, so downstream
-    // joins hash against it exactly like any other dimension attach. A
+    // come back as the broadcast-sized local relation they already are,
+    // with no job of their own, so downstream joins hash against it
+    // exactly like any other dimension attach. A
     // 100 TB edge set fails the gate and runs the loop unchanged; the
     // conservative 32/16 bytes-per-row estimates keep the gate honest
     // against row overheads.
@@ -123,12 +128,10 @@ object Components {
       val rows = allNodes.collect().map { row =>
         val id = row.getLong(0); (id, find(id))
       }.toSeq
-      init.unpersist()
-      allNodes.unpersist()
+      Checkpoints.release(init)
+      Checkpoints.release(allNodes)
       import spark.implicits._
-      val labels = rows.toDF("id", "comp").persist()
-      labels.count()
-      return StarResult(labels, 0)
+      return StarResult(rows.toDF("id", "comp"), 0)
     }
 
     val loopParts = math.max(4L,
@@ -175,10 +178,10 @@ object Components {
       // hash-aggregate job (±1 tags, non-zero group survives) instead of
       // the former two exceptAll anti-join jobs per round (r14, guide
       // §2.4: two probe shuffles → one) — still sound, no checksums. The
-      // probe only runs at all when the cheap row-count gate (a trivial
-      // count over just-checkpointed data, the kcore pattern) says the
-      // cardinality held: a round that changed the edge count cannot be
-      // the fixpoint, so early rounds pay one ~ms count and no diff job.
+      // probe only runs at all when the row-count gate (the count the
+      // round's cut measured, the kcore pattern) says the cardinality
+      // held: a round that changed the edge count cannot be the
+      // fixpoint, so early rounds run no diff job.
       def same(a: DataFrame, b: DataFrame): Boolean =
         a.select(col("u"), col("v"), lit(1L).as("s"))
           .unionByName(b.select(col("u"), col("v"), lit(-1L).as("s")))
@@ -192,12 +195,12 @@ object Components {
       var converged = nEdges == 0 // a loop-free pair set is already done
       while (!converged && rounds < maxRounds) {
         // eager: materialized before the probes, plan truncated to a scan
-        val next = graft.Checkpoints.cut(
+        val next = Checkpoints.cut(
           smallStar(largeStar(edges)).repartition(loopParts, col("u")))
-        val nextCount = next.count()
+        val nextCount = Checkpoints.rows(next)
         converged = nextCount == prevCount && same(next, edges)
         prevCount = nextCount
-        edges.unpersist()
+        Checkpoints.release(edges)
         edges = next
         rounds += 1
       }
@@ -213,8 +216,8 @@ object Components {
           .select(col("id"), col("id").as("comp")))
         .persist()
       labels.count()
-      edges.unpersist()
-      allNodes.unpersist()
+      Checkpoints.release(edges)
+      Checkpoints.release(allNodes)
       StarResult(GraftSession.bind(spark, labels), rounds)
     }
   }

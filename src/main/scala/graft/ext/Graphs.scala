@@ -974,7 +974,8 @@ object Graphs {
     * adjacency materialization. The alive set only shrinks, and every
     * round is an eager lineage cut ([[graft.Checkpoints.cut]]), so a
     * 100 TB edge set pays |E ⋈ alive| per round with plain hash
-    * partitioning. Convergence is a one-row count probe per round.
+    * partitioning. Convergence compares the row counts the cuts
+    * measured, with no job of its own.
     * Peeling rounds are small in practice (each round removes a whole
     * "shell layer"); the oracle unrolls [[kcoreOracleRounds]] rounds and
     * [[kcoreRounds]] lets the spec assert the fixture converges within
@@ -996,7 +997,7 @@ object Graphs {
     // peeling shuffles); both held by a scoped session.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val loopParts = math.max(4L, math.min(sessionParts.toLong,
-      sym.count() / 2000000L + 1L)).toInt
+      graft.Checkpoints.rows(sym) / 2000000L + 1L)).toInt
     GraftSession.scoped(spark,
       "spark.sql.shuffle.partitions" -> loopParts.toString,
       "spark.sql.adaptive.enabled" -> "false") { loop =>
@@ -1010,13 +1011,13 @@ object Graphs {
       }
       var alive = GraftSession.bind(loop, graft.Checkpoints.cut(
         sym.select(col("u").as("id")).distinct()))
-      var n = alive.count()
+      var n = graft.Checkpoints.rows(alive)
       var rounds = 0
       var changed = true
       while (changed) {
         val next = graft.Checkpoints.cut(
           degrees(alive, n).filter(col("deg") >= k).select("id"))
-        val m = next.count()
+        val m = graft.Checkpoints.rows(next)
         changed = m < n
         if (changed) { alive = next; n = m; rounds += 1 }
       }

@@ -105,7 +105,7 @@ object TextDedup {
     * one narrow [[graft.functions.MinHashSigs]] pass per row — no
     * shuffle.
     */
-  private def sigWide(sets: DataFrame, numPerms: Int): DataFrame = {
+  private[graft] def sigWide(sets: DataFrame, numPerms: Int): DataFrame = {
     graft.functions.MinHashSigs.register(sets.sparkSession)
     sets.select(col("doc_id"),
         graft.functions.MinHashSigs.sigs(col("shs"), numPerms).as("sig"))
@@ -149,31 +149,34 @@ object TextDedup {
     * side — no per-permutation row explosion anywhere.
     */
   def cachedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    Memo(spark, dir, "dedup.minhash_pairs") {
-      val wide = cachedSigWide(spark, dir)
-      val bandCols = (0 until 4).map(b =>
-        md5(concat(col(s"s${2 * b}"), lit("|"), col(s"s${2 * b + 1}")))
-          .as(s"bh$b"))
-      val stackArgs = (0 until 4).map(b => s"$b, bh$b").mkString(", ")
-      val bands = wide.select(col("doc_id") +: bandCols: _*)
-        .select(col("doc_id"),
-          expr(s"stack(4, $stackArgs) AS (b, band_hash)"))
-      val a = bands.select(col("doc_id").as("doc_a"), col("b"), col("band_hash"))
-      val b = bands.select(col("doc_id").as("doc_b"), col("b"), col("band_hash"))
-      val cand = a.join(b, Seq("b", "band_hash"))
-        .filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct()
-      val wa = wide.select(
-        col("doc_id").as("doc_a") +: (0 until 8).map(j => col(s"s$j").as(s"a$j")): _*)
-      val wb = wide.select(
-        col("doc_id").as("doc_b") +: (0 until 8).map(j => col(s"s$j").as(s"b$j")): _*)
-      val agree = (0 until 8)
-        .map(j => when(col(s"a$j") === col(s"b$j"), 1).otherwise(0))
-        .reduce(_ + _)
-      cand.join(wa, Seq("doc_a")).join(wb, Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          (agree.cast("double") / 8).as("est_sim"))
-    }
+    Memo(spark, dir, "dedup.minhash_pairs")(
+      minhashPairsOf(cachedSigWide(spark, dir)))
+
+  /** The build of [[cachedMinhashPairs]] over a wide signature table. */
+  private[graft] def minhashPairsOf(wide: DataFrame): DataFrame = {
+    val bandCols = (0 until 4).map(b =>
+      md5(concat(col(s"s${2 * b}"), lit("|"), col(s"s${2 * b + 1}")))
+        .as(s"bh$b"))
+    val stackArgs = (0 until 4).map(b => s"$b, bh$b").mkString(", ")
+    val bands = wide.select(col("doc_id") +: bandCols: _*)
+      .select(col("doc_id"),
+        expr(s"stack(4, $stackArgs) AS (b, band_hash)"))
+    val a = bands.select(col("doc_id").as("doc_a"), col("b"), col("band_hash"))
+    val b = bands.select(col("doc_id").as("doc_b"), col("b"), col("band_hash"))
+    val cand = a.join(b, Seq("b", "band_hash"))
+      .filter(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
+    val wa = wide.select(
+      col("doc_id").as("doc_a") +: (0 until 8).map(j => col(s"s$j").as(s"a$j")): _*)
+    val wb = wide.select(
+      col("doc_id").as("doc_b") +: (0 until 8).map(j => col(s"s$j").as(s"b$j")): _*)
+    val agree = (0 until 8)
+      .map(j => when(col(s"a$j") === col(s"b$j"), 1).otherwise(0))
+      .reduce(_ + _)
+    cand.join(wa, Seq("doc_a")).join(wb, Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        (agree.cast("double") / 8).as("est_sim"))
+  }
 
   // ------------------------------------------------------------- operators
 
@@ -761,17 +764,23 @@ object TextDedup {
     */
   def nearDupClusters(spark: SparkSession, dir: String,
                       minSim: Double = 0.5, maxRounds: Int = 48): DataFrame =
-    Memo(spark, dir, s"dedup.clusters:$minSim:$maxRounds") {
-      // looked up in the caller's session, so the pair memo is built the
-      // same way whichever consumer asks first (see LoopConfs)
-      val pairs = cachedMinhashPairs(spark, dir)
-        .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
-      GraftSession.scoped(spark, LoopConfs: _*) { loop =>
-        GraftSession.bind(spark, Components.starComponents(
-          GraftSession.bind(loop, pairs), maxRounds).labels)
-      }.select(col("id").as("doc_id"), col("comp").as("cluster_id"),
-          (col("id") === col("comp")).as("is_canonical"))
-    }.orderBy("doc_id") // stored unsorted: joins and counts drop the sort
+    Memo(spark, dir, s"dedup.clusters:$minSim:$maxRounds")(
+      clustersOf(spark, dir, minSim, maxRounds)
+    ).orderBy("doc_id") // stored unsorted: joins and counts drop the sort
+
+  /** The build of [[nearDupClusters]]. */
+  private[graft] def clustersOf(spark: SparkSession, dir: String,
+                                minSim: Double, maxRounds: Int): DataFrame = {
+    // looked up in the caller's session, so the pair memo is built the
+    // same way whichever consumer asks first (see LoopConfs)
+    val pairs = cachedMinhashPairs(spark, dir)
+      .filter(col("est_sim") >= minSim).select("doc_a", "doc_b")
+    GraftSession.scoped(spark, LoopConfs: _*) { loop =>
+      GraftSession.bind(spark, Components.starComponents(
+        GraftSession.bind(loop, pairs), maxRounds).labels)
+    }.select(col("id").as("doc_id"), col("comp").as("cluster_id"),
+        (col("id") === col("comp")).as("is_canonical"))
+  }
 
   /** Confs of the cluster loops, held by their scoped session (confs
     * bind at plan time):

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -12,10 +14,12 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
 import graft.ext.TextDedup
-import graft.tables.Scratch
+import graft.sync.{Dedup, SyncInputs}
+import graft.tables.{Scratch, Tables}
 
 /** The memo registry's contract: rows follow their inputs, a failed build
-  * leaves nothing behind, one key builds once, and `Memo.clear` frees
+  * leaves nothing behind, one key builds once, a build is one job whose
+  * leaf reports what a persisted copy would, and `Memo.clear` frees
   * everything it stored.
   */
 class MemoSpec extends SparkSpec {
@@ -34,6 +38,14 @@ class MemoSpec extends SparkSpec {
     spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
 
   private def rdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def leafOf(df: DataFrame): LogicalRDD = {
+    val leaves = df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: LogicalRDD => lr
+    }
+    assert(leaves.size == 1)
+    leaves.head
+  }
 
   test("a memo rebuilds when its directory is rewritten") {
     val dir = copyOf(sf001)
@@ -54,14 +66,17 @@ class MemoSpec extends SparkSpec {
 
   test("a build that throws leaves no cache entry and the next lookup rebuilds") {
     val bad = spark.range(10).toDF().filter(expr("assert_true(id < 0) IS NULL"))
-    intercept[Exception](Checkpoints.materialize(bad))
+    val rdds0 = rdds
+    intercept[Exception](Checkpoints.cut(bad))
     assert(bad.storageLevel == StorageLevel.NONE)
+    assert(rdds == rdds0, "a failed cut keeps no blocks")
 
     val calls = new AtomicInteger(0)
     def build: DataFrame =
       if (calls.incrementAndGet() == 1) bad else spark.range(5).toDF("id")
     intercept[Exception](Memo(spark, sf001, "test.fails_once")(build))
     assert(bad.storageLevel == StorageLevel.NONE)
+    assert(rdds == rdds0, "a failed build keeps no blocks")
     assert(!Memo.stats(spark).contains("test.fails_once"))
     assert(Memo(spark, sf001, "test.fails_once")(build).count() == 5)
     assert(calls.get == 2)
@@ -134,5 +149,62 @@ class MemoSpec extends SparkSpec {
     val viaPairs = builtBy("dedup_minhash_pairs")
     assert(viaClusters.size == 1)
     assert(viaClusters == viaPairs)
+  }
+
+  test("a memo over a shuffle-free plan builds in one job") {
+    val sc = spark.sparkContext
+    val docSets = TextDedup.docSetsOf(Tables.documents(spark, sf01))
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Memo(spark, sf01, "test.doc_sets")(docSets)
+      ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1)
+    Memo.clear(spark)
+  }
+
+  test("a memo's leaf reports the rows and size a persisted copy measures") {
+    // each memo beside a fresh copy of its build over the same inputs
+    val files = SyncInputs.files(spark, sf01)
+    val memos: Seq[(String, DataFrame, () => DataFrame)] = Seq(
+      ("dedup.doc_sets", TextDedup.cachedDocSets(spark, sf01),
+        () => TextDedup.docSetsOf(Tables.documents(spark, sf01))),
+      ("dedup.sig_wide", TextDedup.cachedSigWide(spark, sf01),
+        () => TextDedup.sigWide(TextDedup.cachedDocSets(spark, sf01), 8)),
+      ("dedup.minhash_pairs", TextDedup.cachedMinhashPairs(spark, sf01),
+        () => TextDedup.minhashPairsOf(TextDedup.cachedSigWide(spark, sf01))),
+      ("dedup.clusters:0.5:48", TextDedup.nearDupClusters(spark, sf01),
+        () => TextDedup.clustersOf(spark, sf01, 0.5, 48)),
+      ("sync.marked", Memo(spark, sf01, "sync.marked")(Dedup.markDuplicates(files)),
+        () => Dedup.markDuplicates(files)))
+    memos.foreach { case (name, memo, build) =>
+      val leaf = leafOf(memo).stats
+      val persisted = build().persist()
+      try {
+        persisted.count()
+        val cached = persisted.queryExecution.optimizedPlan.stats
+        assert(cached.rowCount.exists(_ > 0), name)
+        assert(leaf.rowCount == cached.rowCount, name)
+        assert(leaf.sizeInBytes == cached.sizeInBytes, name)
+      } finally persisted.unpersist(blocking = true)
+    }
+  }
+
+  test("with graft.checkpoint.dir set, a memo's rows are the same and its files land there") {
+    val ckpt = Scratch.dir(spark, "memo-spec-ckpt")
+    val local = TextDedup.cachedMinhashPairs(spark, sf01).collect().toSet
+    val durable = GraftSession.scoped(spark, Checkpoints.ConfKey -> ckpt.toString) { s =>
+      Memo(s, sf01, "test.durable_pairs")(
+        TextDedup.minhashPairsOf(TextDedup.cachedSigWide(s, sf01))).collect().toSet
+    }
+    assert(durable == local)
+    val written = Files.walk(ckpt).filter(p => Files.isRegularFile(p)).count()
+    assert(written > 0, s"no checkpoint files under $ckpt")
+    Memo.clear(spark)
   }
 }

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{GraftSession, SparkSpec}
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -110,6 +111,24 @@ class ComponentsSpec extends SparkSpec {
       (20L, 20L),
       (30L, 30L), (31L, 30L), (32L, 30L)))
     fast.labels.unpersist(); loop.labels.unpersist()
+  }
+
+  test("no block of a cut outlives the call, fast path or loop") {
+    def stored(): Set[Int] = {
+      ListenerBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    }
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 20L)).toDF("x", "y")
+    val before = stored()
+    val fast = Components.starComponents(edges)
+    assert(fast.rounds == 0)
+    assert((stored() -- before).isEmpty, "the fast path keeps no blocks")
+    val loop = withLoopConfs()(s =>
+      Components.starComponents(GraftSession.bind(s, edges)))
+    assert(loop.rounds > 0)
+    assert((stored() -- before).nonEmpty, "the loop's labels are stored")
+    loop.labels.unpersist(blocking = true)
+    assert((stored() -- before).isEmpty, "the loop keeps no blocks but its labels")
   }
 
   test("fast path agrees with the loop on a random 200-node multigraph") {
