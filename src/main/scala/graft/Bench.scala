@@ -54,41 +54,11 @@ object Bench {
         graft.streaming.EventStream.transformStateUserCounts(spark, sfDir).count()
       }
     }
-    // The heavy tail is where host noise dominates (three r12 sweeps of
-    // near-identical code spread ±12%; the driver capture disagreed by
-    // +36%): single best-of-2 numbers cannot support per-entry
-    // attribution there, so the heaviest entries — top-20 of the
-    // committed BENCH_DETAIL_r13 (checklist item 8) plus the three
-    // entries the r13 driver capture priced anomalously
-    // (analytics_theil 19.4s on a 26-row query; dedup_jaccard_pairs and
-    // window_topk_orders >2× with untouched code) — run a THIRD time
-    // and record the MEDIAN with the max−min spread (r12 verdict item
-    // 4). The ~0.2s light tail keeps best-of-2: a third run there buys
-    // noise resolution nothing.
-    // refreshed r15 final (checklist #8) from the committed
-    // BENCH_DETAIL_r15.json top-20, plus the standing watch entries:
-    // dedup_lsh_pr_matrix / curation_quality_calibration (r13 verdict
-    // item 6 — must stay), the three r13 driver anomalies
-    // (analytics_theil, dedup_jaccard_pairs, window_topk_orders —
-    // cross-capture tracers), tpch_q1 / tpch_q18_large (r14 verdict
-    // item 9: driver priced them -16/-18% on untouched code), and the
-    // r15-optimized heavies that left the top-20 but stay under watch
-    // (graph_hyperball, graph_pagerank, text_fuzzy_join,
-    // dedup_containment_pairs, graph_assortativity)
-    val medianOf3 = Set(
-      "spatial_grid_clusters", "dedup_cluster_quality",
-      "embed_knn_descent", "graph_kcore", "graph_components",
-      "incr_cc_merge", "stream_neardup_gate_anyorder",
-      "stream_neardup_gate", "graph_hits", "dedup_semantic_clusters",
-      "stream_left_join", "curation_soft_dedup_weights",
-      "dedup_minhash_ml", "graph_adamic_adar", "graph_bipartite_project",
-      "stream_sessions_append", "stream_range_join", "stream_sink_v2",
-      "graph_bfs_hops", "stream_sessions",
-      "graph_hyperball", "graph_pagerank", "text_fuzzy_join",
-      "dedup_containment_pairs", "graph_assortativity",
-      "dedup_lsh_pr_matrix", "curation_quality_calibration",
-      "analytics_theil", "dedup_jaccard_pairs", "window_topk_orders",
-      "tpch_q1", "tpch_q18_large")
+    // Two runs of one entry whose spread is over 0.5 s absolute and over
+    // half the kept time: host noise, not signal (sub-second jitter
+    // never is).
+    def noisy(kept: Double, spread: Double): Boolean =
+      spread > 0.5 && spread > 0.5 * kept
     // Release rule: all memos go when the sweep moves to a new family
     // (name prefix before the first `_`). Their live bytes are read just
     // before, so bench_detail.json can report each memo's footprint.
@@ -114,37 +84,23 @@ object Bench {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9 - (Memo.buildSeconds(spark) - built0)
       }
-      // Best-of-2 per query: the r5 capture ran 2.4× slower than a
-      // quiet-machine re-run of identical code purely from host
-      // contention; a second pass absorbs one-off scheduler/GC/IO spikes
-      // so the recorded number tracks the code, not the neighbor.
-      // The spread is RECORDED (r11 self-assessment #4): a big spread
-      // marks the entry's number as host-noise-limited, so cross-round
-      // comparisons of it should be read loosely.
+      // Every entry runs twice and keeps the faster run: the second pass
+      // absorbs one-off scheduler/GC/IO spikes, so the number tracks the
+      // code, not the neighbour. Two runs that are `noisy` apart run
+      // three more, and the entry keeps the median of five with its
+      // max−min spread, robust to two outliers.
       val timed = try Some {
-        if (medianOf3(name)) {
-          // Spread-triggered escalation (r13 verdict item 5): the r13
-          // driver window recorded 20–88s spreads WITHIN a 3-sample
-          // window — a median of three samples from a bimodal window is
-          // still noise. When the max−min spread exceeds the median
-          // itself, two more samples (cap 5) make the kept median
-          // robust to two outliers instead of one; deterministic, and
-          // only noisy entries pay. A 5-sample spread still above its
-          // median = the cap is hit, visible in median_of_3_spread.
-          var runs = Seq(once(), once(), once()).sorted
-          if (runs(2) - runs(0) > runs(1))
-            runs = (runs ++ Seq(once(), once())).sorted
-          (runs(runs.size / 2), runs.last - runs.head)
-        } else {
-          val a = once(); val b = once()
-          (math.min(a, b), math.abs(a - b))
-        }
+        val (a, b) = (once(), once())
+        if (noisy(math.min(a, b), math.abs(a - b))) {
+          val runs = (Seq(a, b) ++ Seq.fill(3)(once())).sorted
+          (runs(2), runs.last - runs.head, runs.size)
+        } else (math.min(a, b), math.abs(a - b), 2)
       } catch { case e: Throwable => failed += name -> e; None }
       System.err.println(s"[bench] ${idx + 1}/${selected.size} $name " +
         timed.fold(s"FAILED: ${failed.last._2}")(r => f"${r._1}%.3f s"))
       if (selected.lift(idx + 1).forall { case (next, _) =>
         family(next) != family(name) }) releaseMemos()
-      timed.map { case (t, spread) => (name, t, spread) }
+      timed.map { case (t, spread, runs) => (name, t, spread, runs) }
     }
     // The driver tail-captures the LAST 2000 bytes of stdout, so the line
     // it parses must be the final one and short: a full 100-query map
@@ -159,18 +115,10 @@ object Bench {
       rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
     val total = fmt(results.map(_._2).sum)
-    val times = results.map { case (k, v, _) => k -> v }
-    // noisy = best-of-2 entries whose two runs differed by >50% of the
-    // kept time AND >0.5s absolute (sub-second jitter isn't signal)
-    val noisy = results.collect {
-      case (k, v, sp) if sp > 0.5 && sp > 0.5 * v &&
-        !medianOf3(k) => k -> sp
-    }
-    // every median-of-3 entry reports its max−min spread unconditionally
-    // — the notes quote medians WITH their spread, never a bare number
-    val medianSpread = results.collect {
-      case (k, _, sp) if medianOf3(k) => k -> sp
-    }
+    val times = results.map { case (k, v, _, _) => k -> v }
+    // the median-of-5 entries with their spread: the notes quote them
+    // WITH it, never as a bare number
+    val medianSpread = results.collect { case (k, _, sp, 5) => k -> sp }
     val failedJson = failed.map { case (k, e) =>
       Verify.jsonString(k) + ":" + Verify.jsonString(e.toString)
     }.mkString("{", ",", "}")
@@ -183,7 +131,7 @@ object Bench {
         s""""hits":${m.hits},"bytes":${memoBytes.getOrElse(k, 0L)}}"""
     }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"failed":$failedJson,"shared_builds":${toJson(sharedBuilds.toSeq)},"memo_builds":$memoJson,"best_of_2_spread_noisy":${toJson(noisy)},"median_of_3_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"failed":$failedJson,"shared_builds":${toJson(sharedBuilds.toSeq)},"memo_builds":$memoJson,"median_of_5_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
     // cwd is the sbt project base when launched via `sbt runMain`
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))

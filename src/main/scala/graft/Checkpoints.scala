@@ -5,8 +5,11 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.CachedSize
 import org.apache.spark.storage.StorageLevel
 
-/** Stored relations with a cut lineage: every [[Memo]] value and every
-  * round of an iterative operator.
+/** Stored relations with a cut lineage, the one way graft stores a
+  * relation it reads more than once. A relation many entries share is a
+  * [[Memo]], whose value is a cut. Any other is a cut with one owner that
+  * frees it with [[release]]: a loop round (freed once the next round
+  * holds what it needs), a sync run's snapshot (freed by the next run).
   *
   * [[cut]] runs a relation's plan once and keeps its rows. Consumers then
   * plan against a `LogicalRDD` leaf instead of the relation's build DAG:

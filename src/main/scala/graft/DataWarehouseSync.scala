@@ -63,10 +63,10 @@ object DataWarehouseSync {
 class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
                         client: GatherClient) {
 
-  // The one run this instance holds: the last syncFilesystem's relations
-  // and the last syncCategories' matched ids, each released by the next
-  // call of the same method.
-  private var run: Option[SyncResult] = None
+  // The one run this instance holds: the last syncFilesystem's cuts and
+  // the last syncCategories' matched ids, each released by the next call
+  // of the same method.
+  private var run: Seq[DataFrame] = Nil
   private var matched: Option[DataFrame] = None
 
   /** P1/P2 normalization of a nested project list (DW.js:79-84): drop null
@@ -91,37 +91,33 @@ class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
   /** E2 (DW.js:67-258): scan -> dedup -> match -> apply actions. Returns
     * the computed [[SyncResult]] so callers can inspect/report (A2).
     *
-    * Lifecycle: the tree is read and hashed once, and the dedup + match
-    * relations (`marked`, `pass1`, `pass2`) are materialized once, before
-    * any delivery; the three action tables are small plans over them. The
-    * returned result is this instance's one materialized run: it holds the
-    * scanned state the actions were computed from, whatever happens to the
-    * tree afterwards, and stays valid until the next call, which releases
-    * it (see [[SyncResult]]).
+    * Lifecycle: the tree is read and hashed once. The project list, and
+    * then `marked`, `pass1` and `pass2`, are each stored once as a
+    * [[Checkpoints.cut]] before any delivery ([[Pipeline.stored]]); the
+    * three action tables are small plans over those leaves. The returned
+    * result is this instance's one run: it holds the scanned state and
+    * the remote snapshot the actions were computed from, whatever happens
+    * to the tree or the remote afterwards, and stays valid until the next
+    * call, which releases its cuts (see [[SyncResult]]).
     */
   def syncFilesystem(): SyncResult = {
-    run.foreach(Pipeline.release)
-    run = None
+    run.foreach(Checkpoints.release)
+    run = Nil
     val files = FileInventory.scan(spark, config.path, config.fileGlob)
     // mirrors the reference's fetch-then-ignore of archived projects
     // (DW.js:74,85-89): the relation is built but, like there, unused
     normalizedArchivedProjects()
     // ST3 snapshot isolation: the V2 list relations are lazy (each job
-    // re-reads the endpoint), so pin one remote snapshot per run — every
+    // re-reads the endpoint), so the run cuts one remote snapshot — every
     // action table of this sync is computed against the same list state,
-    // like the reference's single Promise.all fetch (DW.js:74). The pin is
-    // released once the actions are delivered: the run's own relations
-    // hold what was computed from it.
-    val projects = normalizedProjects().persist()
-    try {
-      val r = Pipeline.materialize(Pipeline.sync(
-        files, projects, client.listCategories(), config.rootCategory))
-      run = Some(r)
-      client.applyUpdates(r.updates)
-      client.applyArchives(r.archives)
-      client.applyCreates(r.creates)
-      r
-    } finally projects.unpersist()
+    // like the reference's single Promise.all fetch (DW.js:74)
+    val (r, cuts) = Pipeline.stored(files, normalizedProjects(),
+      client.listCategories(), config.rootCategory)
+    run = cuts
+    client.applyUpdates(r.updates)
+    client.applyArchives(r.archives)
+    client.applyCreates(r.creates)
+    r
   }
 
   /** E3 (DW.js:392-463): folder hierarchy vs server categories; returns
@@ -129,31 +125,34 @@ class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
     * duplicate server keys like the reference (DW.js:432-434).
     *
     * Lifecycle: the hierarchy comes from the tree's listing alone, so no
-    * file is read. The returned ids are materialized and stay valid until
-    * the next call, which releases them.
+    * file is read. The hierarchy and the server's category list are each
+    * cut once for the pass and released when it returns; the returned ids
+    * are a cut of their own, valid until the next call, which releases
+    * them.
     */
   def syncCategories(): DataFrame = {
-    matched.foreach(_.unpersist())
+    matched.foreach(Checkpoints.release)
     matched = None
-    val folder = Categories.folderCats(
+    val folder = Checkpoints.cut(Categories.folderCats(
       FileInventory.paths(spark, config.path, config.fileGlob),
-      config.rootCategory).persist()
-    // one remote snapshot for the whole pass (ST3): the guard, create,
-    // remove and matched relations must all see the same list state —
-    // unpinned, toRemove/matched would re-fetch a list already mutated
-    // by applyCategoryCreates above
-    val server = client.listCategories().persist()
+      config.rootCategory))
     try {
-      val dups = Categories.duplicateKeyGuard(server)
-      if (!dups.isEmpty)
-        throw new IllegalStateException(
-          "Unexpected multiple results: " + dups.collect().mkString(", "))
-      client.applyCategoryCreates(Categories.toCreate(folder, server))
-      client.applyCategoryRemoves(Categories.toRemove(folder, server))
-      val m = Categories.matched(folder, server).select("id").persist()
-      matched = Some(m)
-      m.count() // materialize under the snapshot before releasing it
-      m
-    } finally { server.unpersist(); folder.unpersist() }
+      // one remote snapshot for the whole pass (ST3): the guard, create,
+      // remove and matched relations must all see the same list state —
+      // uncut, toRemove/matched would re-fetch a list already mutated by
+      // applyCategoryCreates above
+      val server = Checkpoints.cut(client.listCategories())
+      try {
+        val dups = Categories.duplicateKeyGuard(server)
+        if (!dups.isEmpty)
+          throw new IllegalStateException(
+            "Unexpected multiple results: " + dups.collect().mkString(", "))
+        client.applyCategoryCreates(Categories.toCreate(folder, server))
+        client.applyCategoryRemoves(Categories.toRemove(folder, server))
+        val m = Checkpoints.cut(Categories.matched(folder, server).select("id"))
+        matched = Some(m)
+        m
+      } finally Checkpoints.release(server)
+    } finally Checkpoints.release(folder)
   }
 }

@@ -45,6 +45,23 @@ object GraftSession {
     f(clone)
   }
 
+  /** Run an iterative operator's loop on a scope sized to the relation it
+    * iterates over, `rows` rows as measured by a cut
+    * ([[Checkpoints.rows]]): max(4, min(session width, rows / 2M + 1))
+    * shuffle partitions, about 2M rows (50–100 MB) per reduce task, so a
+    * small graph schedules no empty reducers and a 100 TB one gets
+    * hundreds of right-sized ones. AQE is off in the scope: per-exchange
+    * re-planning is pure latency on a chain of bounded shuffles whose
+    * sizes were just measured.
+    */
+  def loop[T](spark: SparkSession, rows: Long)(f: SparkSession => T): T = {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    scoped(spark,
+      "spark.sql.shuffle.partitions" ->
+        math.max(4L, math.min(width, rows / 2000000L + 1L)).toString,
+      "spark.sql.adaptive.enabled" -> "false")(f)
+  }
+
   /** `df` re-rooted in `session`: the same analyzed plan, optimized,
     * planned and executed under `session`'s conf. Cached relations carry
     * over, since sessions of one application share the cache manager.

@@ -22,9 +22,9 @@ import graft.sink.Actions
   * (and `parts=N` paging once a list outgrows one response). An explicit
   * schema means an empty list still yields a typed, empty DataFrame.
   * Because the relation is now lazy, each Spark job re-reads the
-  * endpoint; a sync run wanting one consistent remote snapshot should
-  * `persist()` the normalized list (see
-  * [[graft.DataWarehouseSync.syncFilesystem]]).
+  * endpoint; a sync run wanting one consistent remote snapshot stores
+  * the normalized list once as a [[graft.Checkpoints.cut]], as
+  * [[graft.DataWarehouseSync.syncFilesystem]] does.
   *
   * Writes: action tables go through the gather DataSourceV2 write
   * boundary ([[Actions.applyV2]] → [[graft.sources.v2.GatherWriteBuilder]]

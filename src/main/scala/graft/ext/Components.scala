@@ -37,8 +37,10 @@ object Components {
 
   /** Component assignment and the round count it took (the spec asserts
     * the O(log n) bound on an adversarial path graph). `labels` is a
-    * local relation on the fast path and a persisted one after the loop;
-    * every cut the call made is released before it returns.
+    * local relation on the fast path and a [[Checkpoints.cut]] after the
+    * loop, which the caller owns: [[Checkpoints.release]] frees it, and a
+    * caller that returns a plan over it leaves it to the context cleaner.
+    * Every other cut the call made is released before it returns.
     */
   final case class StarResult(labels: DataFrame, rounds: Int)
 
@@ -69,16 +71,8 @@ object Components {
         least(col("a"), col("b")).as("v"))
       .distinct()
       .repartition(sessionParts, col("u")))
-    // Scale-adaptive loop sizing (r14, guide §2): every per-round shuffle
-    // inside the fixpoint is sized to the MEASURED canonical edge count
-    // (~2M edge rows ≈ 50–100 MB per reduce partition), not to the
-    // session default — at bench SF the loop stops scheduling dozens of
-    // ~1ms tasks per stage, at 100 TB the same formula yields hundreds
-    // of right-sized partitions. The count is the one the init cut's job
-    // measured. AQE is OFF inside the loop for the established reason
-    // (per-exchange re-planning is pure latency on a chain of small
-    // bounded shuffles whose sizes we just derived); both confs hold only
-    // in the loop's scoped session.
+    // The loop's shuffles are sized to this measured canonical edge count
+    // (GraftSession.loop), read from the init cut without a job.
     val nEdges = Checkpoints.rows(init)
     // nodes whose only edges were self-loops still deserve a label
     val allNodes = Checkpoints.cut(pairs
@@ -134,11 +128,8 @@ object Components {
       return StarResult(rows.toDF("id", "comp"), 0)
     }
 
-    val loopParts = math.max(4L,
-      math.min(sessionParts.toLong, nEdges / 2000000L + 1L)).toInt
-    GraftSession.scoped(spark,
-      "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false") { loop =>
+    GraftSession.loop(spark, nEdges) { loop =>
+      val loopParts = loop.conf.get("spark.sql.shuffle.partitions").toInt
       // Node-sized min tables vs the |E|-row neighbour stream: when the
       // MEASURED node count fits the session's broadcast budget (the same
       // conf-gate as the fast path above), the per-star join broadcasts
@@ -210,12 +201,11 @@ object Components {
 
       // stars: every child row is (child, root); roots only appear on the
       // small side. Nodes with no surviving edge are their own component.
-      val labels = edges.select(col("u").as("id"), col("v").as("comp"))
-        .unionByName(GraftSession.bind(loop, allNodes).join(
-          edges.select(col("u").as("id")), Seq("id"), "left_anti")
-          .select(col("id"), col("id").as("comp")))
-        .persist()
-      labels.count()
+      val labels = Checkpoints.cut(
+        edges.select(col("u").as("id"), col("v").as("comp"))
+          .unionByName(GraftSession.bind(loop, allNodes).join(
+            edges.select(col("u").as("id")), Seq("id"), "left_anti")
+            .select(col("id"), col("id").as("comp"))))
       Checkpoints.release(edges)
       Checkpoints.release(allNodes)
       StarResult(GraftSession.bind(spark, labels), rounds)

@@ -296,13 +296,17 @@ object Graphs {
     * anti-join co-locates. The oracle unrolls the same 3 rounds
     * explicitly (NOT EXISTS against every earlier level — the
     * graph_pagerank unrolling style, portable to both engines).
+    *
+    * The result is the union of every round's cut, so no round can be
+    * freed before the result is: they stay until the context cleaner
+    * sees the result dropped.
     */
   def bfsHops(spark: SparkSession, dir: String, hops: Int = 3,
               nSeeds: Int = 10): DataFrame = {
     // the shared memoized symmetric relation — BFS used to build and
     // persist its own copy of the same 2.4 M rows
-    val edges = symEdges(spark, dir)
-      .select(col("u").as("src"), col("v").as("dst"))
+    val sym = symEdges(spark, dir)
+    val edges = sym.select(col("u").as("src"), col("v").as("dst"))
     // seeds and every frontier are eager lineage cuts (Checkpoints.cut:
     // local blocks, or durable under graft.checkpoint.dir), so `visited`
     // is always a union of already-materialized node-sized blocks — no
@@ -312,15 +316,9 @@ object Graphs {
       edges.select(col("src").as("id")).distinct()
         .orderBy("id").limit(nSeeds)
         .select(col("id"), lit(0L).as("hop")))
-    // loop-local conf sizing (r15, the starComponents/kcore pattern):
     // frontier/visited are node-sized, the per-round distinct is the
-    // only wide shuffle — size it to the edge count, AQE off in-loop
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(4L, math.min(sessionParts.toLong,
-      edges.count() / 2000000L + 1L)).toInt
-    GraftSession.scoped(spark,
-      "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false") { loop =>
+    // only wide shuffle: the loop is sized to the memo's measured count
+    GraftSession.loop(spark, graft.Checkpoints.rows(sym)) { loop =>
       val loopEdges = GraftSession.bind(loop, edges)
       var visited = GraftSession.bind(loop, seeds)
       var frontier = visited
@@ -924,18 +922,9 @@ object Graphs {
     }
     val src0 = graft.Checkpoints.cut(edges.agg(min("src").as("node"))
       .select(col("node"), lit(0L).as("dist")))
-    // Scale-adaptive loop sizing (r15, the starComponents/kcore
-    // pattern — verdict item 7): the relax chain's per-round relations
-    // are node-sized, so inheriting the session's shuffle width just
-    // schedules empty reducers, and AQE's per-exchange re-planning is
-    // pure latency on a chain of bounded shuffles; both confs are
-    // held by a scoped session, sized to the measured edge count.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(4L, math.min(sessionParts.toLong,
-      edges.count() / 2000000L + 1L)).toInt
-    GraftSession.scoped(spark,
-      "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false") { loop =>
+    // the relax chain's per-round relations are node-sized: the loop is
+    // sized to the memo's measured edge count
+    GraftSession.loop(spark, graft.Checkpoints.rows(edges)) { loop =>
       val loopEdges = GraftSession.bind(loop, edges)
       var dist = GraftSession.bind(loop, src0)
       var frontier = dist
@@ -953,6 +942,8 @@ object Graphs {
               (col("old").isNull ||
                 (col("cand").isNotNull && col("cand") < col("old")))
                 .as("improved")))
+        // src0 or the round before: `next` holds all the result needs
+        graft.Checkpoints.release(dist)
         dist = next.select("node", "dist")
         frontier = next.filter(col("improved")).select("node", "dist")
       }
@@ -990,17 +981,8 @@ object Graphs {
     // is then never re-shuffled per peel round; a graph whose alive set
     // exceeds the budget falls back to the shuffled semi-joins.
     val bcastBudget = spark.sessionState.conf.autoBroadcastJoinThreshold
-    // Scale-adaptive loop sizing (r14, the starComponents pattern):
     // per-round shuffles sized to the measured symmetric edge count
-    // instead of the session default, AQE off inside the loop (its
-    // per-exchange re-planning is pure latency on a chain of bounded
-    // peeling shuffles); both held by a scoped session.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(4L, math.min(sessionParts.toLong,
-      graft.Checkpoints.rows(sym) / 2000000L + 1L)).toInt
-    GraftSession.scoped(spark,
-      "spark.sql.shuffle.partitions" -> loopParts.toString,
-      "spark.sql.adaptive.enabled" -> "false") { loop =>
+    GraftSession.loop(spark, graft.Checkpoints.rows(sym)) { loop =>
       val loopSym = GraftSession.bind(loop, sym)
       def degrees(alive: DataFrame, nAlive: Long): DataFrame = {
         val a = if (bcastBudget > 0 && nAlive * 16L <= bcastBudget)
@@ -1019,7 +1001,11 @@ object Graphs {
           degrees(alive, n).filter(col("deg") >= k).select("id"))
         val m = graft.Checkpoints.rows(next)
         changed = m < n
-        if (changed) { alive = next; n = m; rounds += 1 }
+        // only the accepted alive set stays: the result reads it
+        if (changed) {
+          graft.Checkpoints.release(alive)
+          alive = next; n = m; rounds += 1
+        } else graft.Checkpoints.release(next)
       }
       lastKcoreRounds.put((spark.sparkContext.applicationId, dir), rounds)
       GraftSession.bind(spark, degrees(alive, n))
@@ -1061,6 +1047,10 @@ object Graphs {
     * on node id. At 100 TB: walks-per-node and length multiply the
     * frontier linearly — the join stays (node, rank)-keyed and
     * bucketing on node id co-locates every step.
+    *
+    * The corpus is the union of every step's cut, so no step can be
+    * freed before the memo has stored it; the context cleaner frees them
+    * once the build's plan is dropped.
     */
   /** X208: rich-club coefficient curve — "do the hubs wire to each
     * other": for each degree threshold k in a fixed panel, φ(k) =
@@ -1193,6 +1183,9 @@ object Graphs {
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
       support = graft.Checkpoints.cut(sup.filter(col("support") >= k - 2))
+      // the first edge cut or the support before: the result reads only
+      // the last support
+      graft.Checkpoints.release(edges)
       edges = support.select("a", "b")
     }
     support.orderBy("a", "b")
@@ -1215,7 +1208,8 @@ object Graphs {
     * (spec-pinned), which is what makes the generalization parameter
     * growth rather than a new operator: the entry stays the nWalks=1
     * projection. Frontier size scales ×nWalks linearly; everything
-    * else is the X186 plan unchanged.
+    * else is the X186 plan unchanged. As there, the result is the union
+    * of every step's cut, so the steps stay live as long as the result.
     */
   def randomWalksMulti(spark: SparkSession, dir: String, steps: Int = 3,
                        nWalks: Int = 2): DataFrame = {

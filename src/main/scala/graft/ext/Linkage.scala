@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Memo
 import graft.tables.Tables
 
 /** Record-linkage / co-occurrence operators: edit-distance similarity
@@ -86,10 +87,11 @@ object Linkage {
     * sort materialization.
     */
   def marketBasket(spark: SparkSession, dir: String, topK: Int = 50): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-      .persist()
+    // read by the basket count, the item counts and both pair sides
+    val li = Memo(spark, dir, "analytics.basket_items")(
+      Tables.lineitem(spark, dir)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .distinct())
     val nOrders = li.select(col("ok")).distinct()
       .agg(count(lit(1)).as("n_orders"))
     val itemCnt = li.groupBy("pk").agg(count(lit(1)).as("cnt"))

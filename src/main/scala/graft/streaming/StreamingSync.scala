@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
-import graft.{DataWarehouseSync, GatherClient, GraftConfig}
+import graft.{Checkpoints, DataWarehouseSync, GatherClient, GraftConfig}
 import graft.sources.FileInventory
 import graft.sync.Pipeline
 
@@ -77,21 +77,19 @@ object StreamingSync {
                                    client: GatherClient): Unit = {
     if (batch.isEmpty) return
     val files = FileInventory.enrich(batch, config.path)
-    // pin one remote snapshot per epoch: the V2 list relations are lazy,
-    // and without the persist the applyCreates job would re-fetch a list
-    // already mutated by this epoch's own applyUpdates POSTs — breaking
-    // both snapshot isolation and the epoch-replay effectively-once
-    // argument (a replay must rebuild the same batch payloads)
-    val projects = DataWarehouseSync.normalizeProjects(
-      client.listProjects(), config.iam).persist()
+    // one remote snapshot per epoch, cut with the run: the V2 list
+    // relations are lazy, and uncut the applyCreates job would re-fetch a
+    // list already mutated by this epoch's own applyUpdates POSTs —
+    // breaking both snapshot isolation and the epoch-replay
+    // effectively-once argument (a replay must rebuild the same batch
+    // payloads). The run is computed once for both deliveries and
+    // released with the epoch.
+    val (r, cuts) = Pipeline.stored(files,
+      DataWarehouseSync.normalizeProjects(client.listProjects(), config.iam),
+      client.listCategories(), config.rootCategory)
     try {
-      // computed once for both deliveries, released with the epoch
-      val r = Pipeline.materialize(Pipeline.sync(
-        files, projects, client.listCategories(), config.rootCategory))
-      try {
-        client.applyUpdates(r.updates)
-        client.applyCreates(r.creates)
-      } finally Pipeline.release(r)
-    } finally projects.unpersist()
+      client.applyUpdates(r.updates)
+      client.applyCreates(r.creates)
+    } finally cuts.foreach(Checkpoints.release)
   }
 }

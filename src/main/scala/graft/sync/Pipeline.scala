@@ -3,7 +3,9 @@ package graft.sync
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Memo
+import scala.collection.mutable.ArrayBuffer
+
+import graft.{Checkpoints, Memo}
 
 /** E2/E3 — the whole sync run as a DAG of DataFrames (SURVEY.md §3).
   *
@@ -15,14 +17,15 @@ import graft.Memo
   *
   * Lifecycle: a result from [[Pipeline.sync]] is lazy. One from
   * [[graft.DataWarehouseSync.syncFilesystem]] is that instance's one
-  * materialized run ([[Pipeline.materialize]]): `marked`, `pass1`, `pass2`
-  * and the three action tables hold the scanned state the actions were
-  * delivered from, however the tree or the remote change afterwards. It
-  * stays valid until the instance's next `syncFilesystem`, which releases
-  * it; reading it after that recomputes from the live inputs. The category
-  * fields are not part of the run: they stay lazy over the remote's live
-  * category list ([[graft.DataWarehouseSync.syncCategories]] reconciles
-  * categories).
+  * stored run ([[Pipeline.stored]]): the project snapshot, `marked`,
+  * `pass1` and `pass2` are [[graft.Checkpoints.cut]]s and the action
+  * tables are plans over them, so all hold the scanned state the actions
+  * were delivered from, however the tree or the remote change afterwards.
+  * The run stays valid until the instance's next `syncFilesystem`, which
+  * releases its cuts; a read after that fails, since a cut has no lineage
+  * to recompute from. The category fields are not part of the run: they
+  * stay lazy over the scan and the remote's live category list
+  * ([[graft.DataWarehouseSync.syncCategories]] reconciles categories).
   */
 final case class SyncResult(
     marked: DataFrame,          // J7/A1 dedup-marked file inventory
@@ -43,18 +46,51 @@ object Pipeline {
     * per FIXTURES.md §2).
     */
   def sync(files: DataFrame, projects: DataFrame, serverCats: DataFrame,
-           rootCategory: String = "files"): SyncResult = {
-    val marked = Dedup.markDuplicates(files)
-    val p1 = Matching.pass1(marked, projects)
-    assemble(files, projects, serverCats, rootCategory,
-      marked, p1, Matching.pass2(marked, projects, p1))
+           rootCategory: String = "files"): SyncResult =
+    run(files, projects, serverCats, rootCategory)((_, df) => df)
+
+  /** [[sync]] over stored relations: `projects`, then `marked`, `pass1`
+    * and `pass2`, each a [[Checkpoints.cut]] built on the ones before it.
+    * The three action tables become small plans over those leaves: they
+    * read neither the tree nor the remote again, however either changes
+    * afterwards. Returns the result and the cuts it owns; the caller
+    * frees them with [[Checkpoints.release]]. A cut that throws releases
+    * the ones made before it.
+    */
+  def stored(files: DataFrame, projects: DataFrame, serverCats: DataFrame,
+             rootCategory: String): (SyncResult, Seq[DataFrame]) = {
+    val cuts = ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = { cuts += Checkpoints.cut(df); cuts.last }
+    try {
+      val r = run(files, keep(projects), serverCats, rootCategory)((_, df) => keep(df))
+      (r, cuts.toSeq)
+    } catch { case e: Throwable => cuts.foreach(Checkpoints.release); throw e }
   }
 
-  /** The action and category tables over a run's core relations. */
-  private def assemble(files: DataFrame, projects: DataFrame,
-                       serverCats: DataFrame, rootCategory: String,
-                       marked: DataFrame, p1: DataFrame,
-                       p2: DataFrame): SyncResult = {
+  /** Convenience: run against the fixture-derived inputs.
+    *
+    * The core relations are [[graft.Memo]]s: Verify and Bench evaluate
+    * every query of a run in one process, and `marked`/`pass1`/`pass2`
+    * feed most of them — recomputing the full match DAG per query would
+    * multiply the dominant shuffles by the query count. (At production
+    * scale this is the same decision as checkpointing the inventory
+    * snapshot once per sync run.)
+    */
+  def syncFixture(spark: SparkSession, dir: String): SyncResult =
+    run(SyncInputs.files(spark, dir), SyncInputs.projects(spark, dir),
+      SyncInputs.serverCats(spark, dir), "files")(
+      (name, df) => Memo(spark, dir, s"sync.$name")(df))
+
+  /** The run, with `store` deciding how each core relation (`marked`,
+    * `pass1`, `pass2`, by name) is kept; the action and category tables
+    * are plans over what it returns.
+    */
+  private def run(files: DataFrame, projects: DataFrame,
+                  serverCats: DataFrame, rootCategory: String)
+                 (store: (String, => DataFrame) => DataFrame): SyncResult = {
+    val marked = store("marked", Dedup.markDuplicates(files))
+    val p1 = store("pass1", Matching.pass1(marked, projects))
+    val p2 = store("pass2", Matching.pass2(marked, projects, p1))
     val folder = Categories.folderCats(files, rootCategory)
     SyncResult(
       marked = marked,
@@ -68,53 +104,6 @@ object Pipeline {
       catCreates = Categories.toCreate(folder, serverCats),
       catRemoves = Categories.toRemove(folder, serverCats),
       catMatched = Categories.matched(folder, serverCats))
-  }
-
-  /** A run's core relations — everything the action tables read — in
-    * dependency order.
-    */
-  private def core(r: SyncResult): Seq[DataFrame] = Seq(r.marked, r.pass1, r.pass2)
-
-  private def actionTables(r: SyncResult): Seq[DataFrame] =
-    Seq(r.updates, r.archives, r.creates)
-
-  /** Compute `r`'s run once: persist `marked`, `pass1` and `pass2` and
-    * materialize them, so each action table becomes a small plan over
-    * cached relations instead of its own dedup + match DAG (scan included).
-    * The action tables are persisted too and materialize on first read —
-    * their delivery. All are registered before the first job, so each core
-    * relation builds on the cache of the one before it. Returns `r`; free
-    * it with [[release]].
-    */
-  def materialize(r: SyncResult): SyncResult = {
-    (core(r) ++ actionTables(r)).foreach(_.persist())
-    try core(r).foreach(_.count())
-    catch { case e: Throwable => release(r); throw e }
-    r
-  }
-
-  /** Free what [[materialize]] holds, dependents first. */
-  def release(r: SyncResult): Unit =
-    (actionTables(r) ++ core(r).reverse).foreach(_.unpersist())
-
-  /** Convenience: run against the fixture-derived inputs.
-    *
-    * The core relations are [[graft.Memo]]s: Verify and Bench evaluate
-    * every query of a run in one process, and `marked`/`pass1`/`pass2`
-    * feed most of them — recomputing the full match DAG per query would
-    * multiply the dominant shuffles by the query count. (At production
-    * scale this is the same decision as checkpointing the inventory
-    * snapshot once per sync run.)
-    */
-  def syncFixture(spark: SparkSession, dir: String): SyncResult = {
-    val files = SyncInputs.files(spark, dir)
-    val projects = SyncInputs.projects(spark, dir)
-    val marked = Memo(spark, dir, "sync.marked")(Dedup.markDuplicates(files))
-    val p1 = Memo(spark, dir, "sync.pass1")(Matching.pass1(marked, projects))
-    val p2 = Memo(spark, dir, "sync.pass2")(
-      Matching.pass2(marked, projects, p1))
-    assemble(files, projects, SyncInputs.serverCats(spark, dir), "files",
-      marked, p1, p2)
   }
 
   /** A2 — the run's scalar counters (found/missing/updates/…,

@@ -10,10 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * confs only on its own clones) and `Tables.readNanosAsLong`, whose
   * Scaladoc says why that one flag stays session-wide. An operator or a
   * test that needs a conf runs under [[GraftSession.scoped]].
+  *
+  * No program source stores a relation except through [[Checkpoints]]: a
+  * relation read more than once is a [[Memo]] or a cut with one owner.
+  * Tests keep their own persists.
   */
 class ConfGuardSpec extends AnyFunSuite {
 
   private val confWrite = raw"conf\.(set|unset)\(|setConfString\(".r
+  private val store = raw"\.persist\(|\.cache\(\)|unpersist\(".r
 
   private def sources(root: String): Seq[Path] = {
     val walk = Files.walk(Paths.get(root))
@@ -34,5 +39,16 @@ class ConfGuardSpec extends AnyFunSuite {
     assert(others.isEmpty, "use GraftSession.scoped instead:\n" +
       others.map(_._3).mkString("\n"))
     assert(nanos.size == 1, nanos.map(_._3).mkString("\n"))
+  }
+
+  test("relations are stored only by Checkpoints") {
+    val stores = for {
+      file <- sources("src/main/scala")
+      if file.getFileName.toString != "Checkpoints.scala"
+      (line, i) <- Files.readAllLines(file).asScala.zipWithIndex
+      if store.findFirstIn(line).nonEmpty
+    } yield s"$file:${i + 1}: ${line.trim}"
+    assert(stores.isEmpty,
+      "use a Memo or an owned Checkpoints.cut instead:\n" + stores.mkString("\n"))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.client.HttpGatherClient
@@ -187,8 +188,20 @@ class DataWarehouseSyncSpec extends SparkSpec {
     val (r3, m3, held3) = runs.last
     def relations(r: graft.sync.SyncResult, m: DataFrame) =
       Seq(r.marked, r.pass1, r.pass2, r.updates, r.archives, r.creates, m)
-    assert(relations(r1, m1).forall(_.storageLevel == StorageLevel.NONE))
-    assert(relations(r3, m3).forall(_.storageLevel != StorageLevel.NONE))
+    def leaves(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+    // the third run is stored: every leaf its relations plan over is one
+    // of its live cuts, so no plan scans the tree or the remote
+    for (df <- relations(r3, m3); leaf <- leaves(df)) leaf match {
+      case lr: LogicalRDD =>
+        assert(held3(lr.rdd.id) && lr.rdd.getStorageLevel != StorageLevel.NONE)
+      case other => fail(s"not a cut leaf: $other")
+    }
+    // the first run's cuts are freed
+    for (df <- relations(r1, m1); leaf <- leaves(df)) leaf match {
+      case lr: LogicalRDD =>
+        assert(!persisted(lr.rdd.id) && lr.rdd.getStorageLevel == StorageLevel.NONE)
+      case other => fail(s"not a cut leaf: $other")
+    }
     assert(held1.nonEmpty && held3.size == held1.size, s"$held1 vs $held3")
     assert((held1 intersect held3).isEmpty)
     assert(client.projects.count() == 5 && client.categories.count() == 5)

@@ -1,8 +1,8 @@
 package graft.ext
 
-import graft.{GraftSession, SparkSpec}
+import graft.{Checkpoints, GraftSession, SparkSpec}
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{CacheManagerProbe, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Large-star/small-star connected components: the O(log n) round bound
@@ -40,7 +40,7 @@ class ComponentsSpec extends SparkSpec {
       val labs = r.labels.collect().map(x => (x.getLong(0), x.getLong(1)))
       assert(labs.length == n)
       assert(labs.forall(_._2 == 0L), "every node joins the min-id root")
-      r.labels.unpersist()
+      Checkpoints.release(r.labels)
     }
   }
 
@@ -61,7 +61,7 @@ class ComponentsSpec extends SparkSpec {
         (10L, 10L), (11L, 10L),
         (20L, 20L),
         (30L, 30L), (31L, 30L), (32L, 30L)))
-      r.labels.unpersist()
+      Checkpoints.release(r.labels)
     }
   }
 
@@ -76,7 +76,7 @@ class ComponentsSpec extends SparkSpec {
         val got = r.labels.collect()
           .map(x => (x.getLong(0), x.getLong(1))).toSet
         assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
-        r.labels.unpersist()
+        Checkpoints.release(r.labels)
         // reliable checkpoints actually landed under the configured dir
         def rddFiles(f: java.io.File): Seq[java.io.File] =
           Option(f.listFiles()).toSeq.flatten
@@ -110,7 +110,7 @@ class ComponentsSpec extends SparkSpec {
       (10L, 10L), (11L, 10L),
       (20L, 20L),
       (30L, 30L), (31L, 30L), (32L, 30L)))
-    fast.labels.unpersist(); loop.labels.unpersist()
+    Checkpoints.release(fast.labels); Checkpoints.release(loop.labels)
   }
 
   test("no block of a cut outlives the call, fast path or loop") {
@@ -127,8 +127,25 @@ class ComponentsSpec extends SparkSpec {
       Components.starComponents(GraftSession.bind(s, edges)))
     assert(loop.rounds > 0)
     assert((stored() -- before).nonEmpty, "the loop's labels are stored")
-    loop.labels.unpersist(blocking = true)
+    Checkpoints.release(loop.labels)
     assert((stored() -- before).isEmpty, "the loop keeps no blocks but its labels")
+  }
+
+  test("the loop's labels are a cut: released, the call leaves nothing stored") {
+    def stored(): Set[Int] = {
+      ListenerBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    }
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("x", "y")
+    val (before, cached) = (stored(), CacheManagerProbe.entries(spark))
+    val r = withLoopConfs()(s =>
+      Components.starComponents(GraftSession.bind(s, edges)))
+    assert(r.rounds > 0, "threshold -1 must force the loop")
+    assert(r.labels.count() == 6L)
+    Checkpoints.release(r.labels)
+    assert(CacheManagerProbe.entries(spark) == cached,
+      "the call left an entry in the cache manager")
+    assert((stored() -- before).isEmpty, "a stored RDD outlived the release")
   }
 
   test("fast path agrees with the loop on a random 200-node multigraph") {
@@ -145,7 +162,7 @@ class ComponentsSpec extends SparkSpec {
     val gotLoop = loop.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(gotFast == gotLoop)
-    fast.labels.unpersist(); loop.labels.unpersist()
+    Checkpoints.release(fast.labels); Checkpoints.release(loop.labels)
   }
 
   test("loop with node-sized min broadcast agrees with the plain loop") {
@@ -166,7 +183,7 @@ class ComponentsSpec extends SparkSpec {
     val gotP = plain.labels.collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(gotB == gotP)
-    bcast.labels.unpersist(); plain.labels.unpersist()
+    Checkpoints.release(bcast.labels); Checkpoints.release(plain.labels)
   }
 
   test("fast path and loop label the sf0.01 near-dup pair graph alike") {
@@ -186,6 +203,6 @@ class ComponentsSpec extends SparkSpec {
     val clusters = TextDedup.nearDupClusters(spark, sf01)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(clusters == got.map { case (id, comp) => (id, comp, id == comp) })
-    fast.labels.unpersist(); loop.labels.unpersist()
+    Checkpoints.release(fast.labels); Checkpoints.release(loop.labels)
   }
 }

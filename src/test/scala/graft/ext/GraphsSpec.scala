@@ -1,6 +1,9 @@
 package graft.ext
 
-import graft.SparkSpec
+import graft.{Memo, SparkSpec}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** X56 PageRank and X57 inverted index — both re-derived driver-side
@@ -60,5 +63,28 @@ class GraphsSpec extends SparkSpec {
     }
     // output is term-ordered (the artifact contract)
     assert(got.map(_._1).toSeq == got.map(_._1).toSeq.sorted)
+  }
+
+  test("kcore, sssp and ktruss keep only the cuts their results read") {
+    def stored(): Set[Int] = {
+      ListenerBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    }
+    val loops = Seq[(String, () => DataFrame)](
+      "graph_kcore" -> (() => Graphs.kcore(spark, sf01)),
+      "graph_sssp" -> (() => Graphs.sssp(spark, sf01)),
+      "graph_ktruss" -> (() => Graphs.ktruss(spark, sf01)))
+    for ((name, run) <- loops) {
+      val before = stored()
+      val out = run()
+      assert(out.collect().nonEmpty, name)
+      val reads = out.queryExecution.analyzed.collectLeaves()
+        .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+      // what is stored beyond the memos is only what the result reads
+      Memo.clear(spark)
+      val kept = stored() -- before
+      assert(kept.nonEmpty && kept.subsetOf(reads),
+        s"$name keeps ${kept -- reads} beyond the ${kept & reads} it reads")
+    }
   }
 }
