@@ -1,4 +1,8 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -72,7 +76,13 @@ object Bench {
     // Failed entries are kept apart with their causes: never timed, never
     // in the total, each printed to stderr with its progress line.
     val failed = scala.collection.mutable.ArrayBuffer.empty[(String, Throwable)]
+    // Janino compiles and their milliseconds per entry, over all its runs
+    // (memo builds included): Spark's codegen counters before and after.
+    def compiled(): (Long, Long) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
+    val codegen = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
     val results = selected.zipWithIndex.flatMap { case ((name, fn), idx) =>
+      val (compiles0, compileNs0) = compiled()
       // noop-format write drains every partition through the full plan
       // (ordering, projection, expression work all billed) without paying
       // for an output sink — unlike count(), which lets Catalyst drop
@@ -96,6 +106,8 @@ object Bench {
           (runs(2), runs.last - runs.head, runs.size)
         } else (math.min(a, b), math.abs(a - b), 2)
       } catch { case e: Throwable => failed += name -> e; None }
+      val (compiles1, compileNs1) = compiled()
+      codegen(name) = (compiles1 - compiles0, compileNs1 - compileNs0)
       System.err.println(s"[bench] ${idx + 1}/${selected.size} $name " +
         timed.fold(s"FAILED: ${failed.last._2}")(r => f"${r._1}%.3f s"))
       if (selected.lift(idx + 1).forall { case (next, _) =>
@@ -130,8 +142,11 @@ object Bench {
       Verify.jsonString(k) + s""":{"builds":${m.builds},"s":${fmt(m.buildS)},""" +
         s""""hits":${m.hits},"bytes":${memoBytes.getOrElse(k, 0L)}}"""
     }.mkString("{", ",", "}")
+    val codegenJson = codegen.map { case (k, (n, ns)) =>
+      Verify.jsonString(k) + s""":{"compiles":$n,"ms":${fmt(ns / 1e6)}}"""
+    }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"failed":$failedJson,"shared_builds":${toJson(sharedBuilds.toSeq)},"memo_builds":$memoJson,"median_of_5_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${toJson(times)},"failed":$failedJson,"shared_builds":${toJson(sharedBuilds.toSeq)},"memo_builds":$memoJson,"codegen":$codegenJson,"median_of_5_spread":${toJson(medianSpread)},"sf":"$sfDir"}"""
     // cwd is the sbt project base when launched via `sbt runMain`
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -43,6 +43,19 @@ trait GatherClient {
   * reconciles the folder hierarchy and applies K4. A reference user swaps
   * `new DataWarehouse(config, client)` for
   * `new DataWarehouseSync(spark, config, client)`.
+  *
+  * Execution mode: both calls are sized alike, by the rows of the cycle
+  * as known before any job runs ([[GraftSession.knownRows]]): the tree's
+  * files, which the listing's index holds, plus the remote's projects
+  * and categories by their size estimates. So a cycle's two calls take
+  * the same mode, and both cross over near the same tree size
+  * (measured beside [[GraftSession.InterpretedRows]]). Below
+  * [[GraftSession.InterpretedRows]] the whole call (scan, cuts and
+  * deliveries) runs on Spark's interpreted path
+  * ([[GraftSession.interpreted]]), and what it returns stays on that
+  * path, so the caller's writes of a small run compile no code either. A
+  * remote list of unknown size (an endpoint that reports no statistics)
+  * keeps the call on generated code.
   */
 object DataWarehouseSync {
   /** P1/P2 normalization of a nested project list (DW.js:79-84): drop null
@@ -103,21 +116,26 @@ class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
   def syncFilesystem(): SyncResult = {
     run.foreach(Checkpoints.release)
     run = Nil
-    val files = FileInventory.scan(spark, config.path, config.fileGlob)
-    // mirrors the reference's fetch-then-ignore of archived projects
-    // (DW.js:74,85-89): the relation is built but, like there, unused
-    normalizedArchivedProjects()
-    // ST3 snapshot isolation: the V2 list relations are lazy (each job
-    // re-reads the endpoint), so the run cuts one remote snapshot — every
-    // action table of this sync is computed against the same list state,
-    // like the reference's single Promise.all fetch (DW.js:74)
-    val (r, cuts) = Pipeline.stored(files, normalizedProjects(),
-      client.listCategories(), config.rootCategory)
-    run = cuts
-    client.applyUpdates(r.updates)
-    client.applyArchives(r.archives)
-    client.applyCreates(r.creates)
-    r
+    val listing = FileInventory.listing(spark, config.path, config.fileGlob)
+    val projects = normalizedProjects()
+    val cats = client.listCategories()
+    GraftSession.interpreted(spark, GraftSession.knownRows(listing, projects, cats)) { s =>
+      val files = FileInventory.enrich(GraftSession.bind(s, listing), config.path)
+      // mirrors the reference's fetch-then-ignore of archived projects
+      // (DW.js:74,85-89): the relation is built but, like there, unused
+      normalizedArchivedProjects()
+      // ST3 snapshot isolation: the V2 list relations are lazy (each job
+      // re-reads the endpoint), so the run cuts one remote snapshot — every
+      // action table of this sync is computed against the same list state,
+      // like the reference's single Promise.all fetch (DW.js:74)
+      val (r, cuts) = Pipeline.stored(files, GraftSession.bind(s, projects),
+        GraftSession.bind(s, cats), config.rootCategory)
+      run = cuts
+      client.applyUpdates(r.updates)
+      client.applyArchives(r.archives)
+      client.applyCreates(r.creates)
+      r
+    }
   }
 
   /** E3 (DW.js:392-463): folder hierarchy vs server categories; returns
@@ -133,26 +151,31 @@ class DataWarehouseSync(spark: SparkSession, config: GraftConfig,
   def syncCategories(): DataFrame = {
     matched.foreach(Checkpoints.release)
     matched = None
-    val folder = Checkpoints.cut(Categories.folderCats(
-      FileInventory.paths(spark, config.path, config.fileGlob),
-      config.rootCategory))
-    try {
-      // one remote snapshot for the whole pass (ST3): the guard, create,
-      // remove and matched relations must all see the same list state —
-      // uncut, toRemove/matched would re-fetch a list already mutated by
-      // applyCategoryCreates above
-      val server = Checkpoints.cut(client.listCategories())
+    val listing = FileInventory.listing(spark, config.path, config.fileGlob)
+    val cats = client.listCategories()
+    GraftSession.interpreted(spark,
+        GraftSession.knownRows(listing, normalizedProjects(), cats)) { s =>
+      val folder = Checkpoints.cut(Categories.folderCats(
+        FileInventory.paths(GraftSession.bind(s, listing), config.path),
+        config.rootCategory))
       try {
-        val dups = Categories.duplicateKeyGuard(server)
-        if (!dups.isEmpty)
-          throw new IllegalStateException(
-            "Unexpected multiple results: " + dups.collect().mkString(", "))
-        client.applyCategoryCreates(Categories.toCreate(folder, server))
-        client.applyCategoryRemoves(Categories.toRemove(folder, server))
-        val m = Checkpoints.cut(Categories.matched(folder, server).select("id"))
-        matched = Some(m)
-        m
-      } finally Checkpoints.release(server)
-    } finally Checkpoints.release(folder)
+        // one remote snapshot for the whole pass (ST3): the guard, create,
+        // remove and matched relations must all see the same list state —
+        // uncut, toRemove/matched would re-fetch a list already mutated by
+        // applyCategoryCreates above
+        val server = Checkpoints.cut(GraftSession.bind(s, cats))
+        try {
+          val dups = Categories.duplicateKeyGuard(server)
+          if (!dups.isEmpty)
+            throw new IllegalStateException(
+              "Unexpected multiple results: " + dups.collect().mkString(", "))
+          client.applyCategoryCreates(Categories.toCreate(folder, server))
+          client.applyCategoryRemoves(Categories.toRemove(folder, server))
+          val m = Checkpoints.cut(Categories.matched(folder, server).select("id"))
+          matched = Some(m)
+          m
+        } finally Checkpoints.release(server)
+      } finally Checkpoints.release(folder)
+    }
   }
 }

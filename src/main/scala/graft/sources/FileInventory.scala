@@ -2,10 +2,13 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.RangePartitioner
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SessionBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField,
   StructType, TimestampType}
+import graft.GraftSession
 
 /** S1-S5 — the file-inventory source: what the reference's chokidar watcher
   * + md5-file + fs.statSync pipeline produces (DW.js:32-63), restated as a
@@ -47,12 +50,42 @@ object FileInventory {
     regexp_replace(col("path"),
       "^file:" + java.util.regex.Pattern.quote(root) + "/?", "")
 
-  private def binaryFiles(spark: SparkSession, root: String,
-                          glob: String): DataFrame =
-    spark.read.format("binaryFile")
+  /** The files under `root` matching `glob` as a `binaryFile` relation,
+    * listed once: its file index holds the listing, so
+    * [[GraftSession.knownRows]] counts its rows without a job.
+    *
+    * When Spark packs files into read partitions it charges each file
+    * `spark.sql.files.openCostInBytes` (4 MB) on top of its length, so a
+    * tree of 4 KB files would get ~32 files per 128 MB partition and a
+    * task per 32 files. This relation instead reads with an open cost of
+    * the listing's mean file size, taken from the index, capped at
+    * `spark`'s own open cost: a small tree splits into about one
+    * partition per core, a large one keeps `maxPartitionBytes`
+    * partitions, and a skewed one (a few huge files among many small
+    * ones) is packed as it would be without the listing. The open cost is
+    * a conf of the relation's own session (Spark sizes a file scan by
+    * it), here a [[GraftSession.scoped]] clone; the DataFrame is
+    * `spark`'s. Every reader of the tree ([[scan]], [[paths]],
+    * [[inventory]]) reads through this relation.
+    */
+  def listing(spark: SparkSession, root: String,
+              glob: String = "*.{shp,SHP}"): DataFrame = {
+    val listed = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", glob)
       .load(root)
+    listed.queryExecution.analyzed match {
+      case lr @ LogicalRelation(h: HadoopFsRelation, _, _, _, _) =>
+        val mean = h.location.sizeInBytes / math.max(1L, GraftSession.files(h))
+        val openCost = math.min(mean,
+          JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.openCostInBytes")))
+        GraftSession.scoped(spark,
+            "spark.sql.files.openCostInBytes" -> math.max(1L, openCost).toString) { s =>
+          SessionBridge.ofPlan(spark, lr.copy(relation = h.copy()(s)))
+        }
+      case _ => listed
+    }
+  }
 
   /** Scan `root` for files matching `glob` (default: the reference's
     * `.shp` test, case handled by a double glob since globs are
@@ -61,16 +94,15 @@ object FileInventory {
     */
   def scan(spark: SparkSession, root: String,
            glob: String = "*.{shp,SHP}"): DataFrame =
-    enrich(binaryFiles(spark, root, glob), root)
+    enrich(listing(spark, root, glob), root)
 
-  /** The relative paths (`file`) of the files [[scan]] would see, from the
-    * listing alone: `content` is pruned, so no file is opened or hashed.
-    * Enough for anything that needs only the tree's shape (the folder
-    * hierarchy, [[graft.sync.Categories.folderCats]]).
+  /** The relative paths (`file`) of a [[listing]] of `root`: `content` is
+    * pruned, so no file is opened or hashed. Enough for anything that
+    * needs only the tree's shape (the folder hierarchy,
+    * [[graft.sync.Categories.folderCats]]).
     */
-  def paths(spark: SparkSession, root: String,
-            glob: String = "*.{shp,SHP}"): DataFrame =
-    binaryFiles(spark, root, glob).select(relativePath(root).as("file"))
+  def paths(listing: DataFrame, root: String): DataFrame =
+    listing.select(relativePath(root).as("file"))
 
   /** Derive the (file, md5, size, ino, ord) sync input relation from a raw
     * binaryFile relation — shared by the batch [[scan]] and the per-batch
@@ -117,7 +149,7 @@ object FileInventory {
     */
   def inventory(spark: SparkSession, root: String,
                 glob: String = "*"): DataFrame =
-    binaryFiles(spark, root, glob)
+    listing(spark, root, glob)
       .select(
         regexp_replace(col("path"), "^file:", "").as("path"),
         col("length"),

@@ -1,9 +1,11 @@
 package graft.sync
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.GraftSession
 
 /** Cross-run incremental sync — the reference's daemon loop (DW.js:32,67:
   * every watch-idle cycle re-reconciles the world) restated relationally:
@@ -24,6 +26,12 @@ import org.apache.spark.sql.types._
   * set-based and idempotent: diffing identical snapshots yields zero
   * actions, re-applying the same run to the ledger leaves it unchanged
   * (IncrementalSpec property tests).
+  *
+  * Both calls run under [[graft.GraftSession.interpreted]], sized by the
+  * rows their inputs are known to hold: a steady cycle's snapshots and
+  * ledger are small, and their plans then compile no code. The returned
+  * relation stays on the interpreted path, so the caller's write of it
+  * compiles none either.
   */
 object Incremental {
 
@@ -41,7 +49,12 @@ object Incremental {
     * any engine. Unpaired adds are creates; unpaired removes are archive
     * candidates; same path with different md5 is a content change.
     */
-  def diffActions(prev: DataFrame, curr: DataFrame): DataFrame = {
+  def diffActions(prev: DataFrame, curr: DataFrame): DataFrame =
+    GraftSession.interpreted(prev.sparkSession, GraftSession.knownRows(prev, curr)) { s =>
+      diff(GraftSession.bind(s, prev), GraftSession.bind(s, curr))
+    }
+
+  private def diff(prev: DataFrame, curr: DataFrame): DataFrame = {
     val p = prev.select(col("file").as("pfile"), col("md5").as("pmd5"))
     val c = curr.select(col("file").as("cfile"), col("md5").as("cmd5"))
     val byPath = c.join(p, col("cfile") === col("pfile"), "full_outer")
@@ -98,8 +111,7 @@ object Incremental {
     StructField("valid_from", LongType), StructField("valid_to", LongType)))
 
   def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LedgerSchema)
+    spark.createDataFrame(java.util.List.of[Row](), LedgerSchema)
 
   /** Fold one run's pass-1 match result into the SCD2 ledger.
     *
@@ -111,7 +123,13 @@ object Incremental {
     * Applying the same run twice is a no-op (property-tested).
     */
   def updateLedger(ledger: DataFrame, pass1: DataFrame,
-                   runId: Long): DataFrame = {
+                   runId: Long): DataFrame =
+    GraftSession.interpreted(ledger.sparkSession,
+        GraftSession.knownRows(ledger, pass1)) { s =>
+      fold(GraftSession.bind(s, ledger), GraftSession.bind(s, pass1), runId)
+    }
+
+  private def fold(ledger: DataFrame, pass1: DataFrame, runId: Long): DataFrame = {
     val now = pass1.filter(col("project").isNotNull).select(
       col("project").as("n_id"), col("ino").as("n_ino"),
       col("file").as("n_file"), col("match").as("n_kind"))

@@ -44,6 +44,12 @@ object Pipeline {
 
   /** Run the full reconciliation against arbitrary input relations (shapes
     * per FIXTURES.md §2).
+    *
+    * The result is lazy: every action or category table is a plan over
+    * the whole match DAG, so each table read recomputes `marked`, `pass1`
+    * and `pass2` (reading five tables over a 3000-file tree took 90 jobs).
+    * A caller that reads more than one table should use [[stored]], which
+    * cuts those relations once and frees them when the caller is done.
     */
   def sync(files: DataFrame, projects: DataFrame, serverCats: DataFrame,
            rootCategory: String = "files"): SyncResult =

@@ -2,14 +2,15 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Access to the package-private session and plan calls that
-  * [[graft.GraftSession]] and [[graft.Checkpoints]] are built on:
-  * cloning a session, rooting a logical plan in another session, and
-  * turning executed rows into a plan leaf.
+  * [[graft.GraftSession]], [[graft.Checkpoints]] and
+  * [[graft.sources.FileInventory]] are built on: cloning a session,
+  * rooting a logical plan in another session, and turning executed rows
+  * into a plan leaf.
   */
 object SessionBridge {
 
@@ -24,8 +25,11 @@ object SessionBridge {
     * and executed under `spark`'s conf.
     */
   def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
-      df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+    ofPlan(spark, df.asInstanceOf[classic.Dataset[_]].logicalPlan)
+
+  /** `plan` as a DataFrame of `spark`. */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** `df` executed once, as a DataFrame of its session over a
     * `LogicalRDD` leaf. `store` gets the executed plan's rows (copied, so

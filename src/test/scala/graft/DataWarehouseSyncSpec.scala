@@ -5,7 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.client.HttpGatherClient
+import graft.sync.Incremental
 
 /** In-memory remote CMS: applies action tables to its own state so a
   * second sync run can verify convergence end-to-end. Like a real server,
@@ -59,7 +61,8 @@ class InMemoryGatherClient(spark: SparkSession) extends GatherClient {
   override def applyArchives(archives: DataFrame): Unit = {
     val ids = archives.select("id").collect().map(_.getLong(0)).toSeq
     archived = archived ++ ids
-    projectRows = projectRows.filterNot(p => ids.contains(p._1))
+    val gone = ids.toSet
+    projectRows = projectRows.filterNot(p => gone.contains(p._1))
   }
 
   override def applyCategoryCreates(cats: DataFrame): Unit =
@@ -80,41 +83,56 @@ class InMemoryGatherClient(spark: SparkSession) extends GatherClient {
   */
 class DataWarehouseSyncSpec extends SparkSpec {
 
+  import spark.implicits._
+
   test("full sync converges: second run is a no-op (E2+E3 end-to-end)") {
-    val root = Files.createTempDirectory("graft-e2e")
-    Files.createDirectories(root.resolve("Ward/GIS"))
-    Files.createDirectories(root.resolve("Ward/Docs"))
-    Files.write(root.resolve("Ward/GIS/Site.shp"), "site".getBytes)
-    Files.write(root.resolve("Ward/GIS/Copy.shp"), "site".getBytes)   // duplicate
-    Files.write(root.resolve("Ward/Docs/Plan.shp"), "plan".getBytes)
-    Files.write(root.resolve("Ward/Docs/readme.txt"), "skip".getBytes)
+    // The whole workflow on `session`, returning every relation it read
+    // and the remote's final state, each as sorted rows.
+    def converge(session: SparkSession): Seq[Seq[String]] = {
+      val root = Files.createTempDirectory("graft-e2e")
+      Files.createDirectories(root.resolve("Ward/GIS"))
+      Files.createDirectories(root.resolve("Ward/Docs"))
+      Files.write(root.resolve("Ward/GIS/Site.shp"), "site".getBytes)
+      Files.write(root.resolve("Ward/GIS/Copy.shp"), "site".getBytes)   // duplicate
+      Files.write(root.resolve("Ward/Docs/Plan.shp"), "plan".getBytes)
+      Files.write(root.resolve("Ward/Docs/readme.txt"), "skip".getBytes)
 
-    val client = new InMemoryGatherClient(spark)
-    // seed: one project that was renamed on disk (old path, same content md5)
-    val planMd5 = java.security.MessageDigest.getInstance("MD5")
-      .digest("plan".getBytes).map("%02x".format(_)).mkString
-    client.seedProject(500L, "Old/Plan.shp", planMd5)
-    // seed: one orphan project -> archive
-    client.seedProject(501L, "Gone/Missing.shp", "0" * 32)
+      val client = new InMemoryGatherClient(session)
+      // seed: one project that was renamed on disk (old path, same content md5)
+      val planMd5 = java.security.MessageDigest.getInstance("MD5")
+        .digest("plan".getBytes).map("%02x".format(_)).mkString
+      client.seedProject(500L, "Old/Plan.shp", planMd5)
+      // seed: one orphan project -> archive
+      client.seedProject(501L, "Gone/Missing.shp", "0" * 32)
 
-    val dw = new DataWarehouseSync(spark,
-      GraftConfig(root.toString, rootCategory = "files"), client)
+      val dw = new DataWarehouseSync(session,
+        GraftConfig(root.toString, rootCategory = "files"), client)
+      def rows(df: DataFrame) = df.collect().toSeq.map(_.toString).sorted
+      def tables(r: graft.sync.SyncResult) =
+        Seq(r.marked, r.pass1, r.pass2, r.updates, r.archives, r.creates).map(rows)
 
-    val r1 = dw.syncFilesystem()
-    assert(r1.updates.count() == 1)           // rename detected
-    assert(client.archived == Seq(501L))      // orphan archived
-    assert(client.projects.count() == 3)      // 500 + created Site + created Copy? (dup alias)
-    val matched1 = dw.syncCategories()
-    assert(client.categories.count() == 3)    // files/Ward, files/Ward/GIS, files/Ward/Docs
+      val r1 = dw.syncFilesystem()
+      val run1 = tables(r1)
+      assert(r1.updates.count() == 1)           // rename detected
+      assert(client.archived == Seq(501L))      // orphan archived
+      assert(client.projects.count() == 3)      // 500 + created Site + created Copy? (dup alias)
+      val matched1 = dw.syncCategories()
+      val m1 = rows(matched1)
+      assert(client.categories.count() == 3)    // files/Ward, files/Ward/GIS, files/Ward/Docs
 
-    // second run: converged — no actions
-    val r2 = dw.syncFilesystem()
-    assert(r2.updates.isEmpty, "no updates on second run")
-    assert(r2.archives.isEmpty, "no archives on second run")
-    assert(r2.creates.isEmpty, "no creates on second run")
-    val matched2 = dw.syncCategories()
-    assert(matched2.count() == client.categories.count())
-    assert(matched2.count() >= matched1.count())
+      // second run: converged — no actions
+      val r2 = dw.syncFilesystem()
+      assert(r2.updates.isEmpty, "no updates on second run")
+      assert(r2.archives.isEmpty, "no archives on second run")
+      assert(r2.creates.isEmpty, "no creates on second run")
+      val matched2 = dw.syncCategories()
+      assert(matched2.count() == client.categories.count())
+      assert(matched2.count() >= matched1.count())
+      run1 ++ Seq(m1) ++ tables(r2) ++
+        Seq(rows(matched2), rows(client.projects), rows(client.categories))
+    }
+    // the same workflow forced onto generated code gives the same rows
+    assert(converge(spark) == compiled(spark)(converge))
   }
 
   test("duplicate server categories make syncCategories throw (DW.js:432-434)") {
@@ -168,6 +186,72 @@ class DataWarehouseSyncSpec extends SparkSpec {
     assert(marked == marked0)
     assert(pass1 == pass10)
     assert(r.creates.count() == 3)
+  }
+
+  test("a steady sync cycle compiles no code") {
+    val root = Files.createTempDirectory("graft-compiles")
+    val out = Files.createTempDirectory("graft-compiles-out")
+    def at(i: Int) = s"D${i % 4}/E${i % 3}/f$i.shp"
+    (1 to 40).foreach(i => write(root, at(i), s"body $i"))
+    val dw = new DataWarehouseSync(spark, GraftConfig(root.toString),
+      new InMemoryGatherClient(spark))
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var ledger: Option[String] = None
+    // the daemon's cycle: sync, then the snapshot, diff and ledger writes
+    val perCycle = (0 until 3).map { i =>
+      if (i > 0) {
+        // churn: an edit, a move and a new file
+        write(root, at(i), s"edited $i")
+        Files.move(root.resolve(at(i + 10)), root.resolve(s"D0/moved$i.shp"))
+        write(root, s"N$i/new.shp", s"new $i")
+      }
+      val c0 = compiles
+      val r = dw.syncFilesystem()
+      dw.syncCategories()
+      val snap = out.resolve(s"snapshot$i").toString
+      r.marked.select("ord", "ino", "size", "file", "md5").write.parquet(snap)
+      if (i > 0) Incremental.diffActions(
+        spark.read.parquet(out.resolve(s"snapshot${i - 1}").toString),
+        spark.read.parquet(snap)).write.parquet(out.resolve(s"diff$i").toString)
+      val next = out.resolve(s"ledger$i").toString
+      Incremental.updateLedger(ledger.fold(Incremental.emptyLedger(spark))(
+        spark.read.parquet(_)), r.pass1, i + 1L).write.parquet(next)
+      ledger = Some(next)
+      compiles - c0
+    }
+    assert(perCycle(2) == 0, s"Janino compiles per cycle: $perCycle")
+  }
+
+  test("the interpreted scope: generated code at its bound, none below it") {
+    val df = spark.range(100).selectExpr("id % 7 as k").groupBy("k").count()
+    def codegen(rows: Long) =
+      GraftSession.interpreted(spark, rows)(s => rowsAndCodegen(GraftSession.bind(s, df)))
+    val (below, belowCodegen) = codegen(GraftSession.InterpretedRows - 1)
+    val (at, atCodegen) = codegen(GraftSession.InterpretedRows)
+    assert(!belowCodegen && atCodegen)
+    assert(below.map(_.toString).sorted == at.map(_.toString).sorted)
+    // a call whose inputs are of unknown size stays on generated code
+    val snap = Seq(("a.shp", "m1"), ("b.shp", "m2")).toDF("file", "md5")
+    val unknown = spark.createDataFrame(snap.rdd, snap.schema)
+    assert(rowsAndCodegen(Incremental.diffActions(unknown, unknown))._2)
+    assert(!rowsAndCodegen(Incremental.diffActions(snap, snap))._2)
+  }
+
+  test("the interpreted scope keeps no dropped caller alive") {
+    // the call plans on the clone but runs no job: a session that has run
+    // one stays reachable through Spark's own thread state, scope or not
+    def caller(): java.lang.ref.WeakReference[SparkSession] = {
+      val s = GraftSession.scoped(spark)(identity)
+      GraftSession.interpreted(s, 0L)(_.range(3).queryExecution.executedPlan)
+      new java.lang.ref.WeakReference(s)
+    }
+    val dropped = caller()
+    val deadline = System.nanoTime() + 20000000000L
+    while (dropped.get != null && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(50)
+    }
+    assert(dropped.get == null, "a caller that made a small call is still reachable")
   }
 
   test("one instance holds one run: each call releases the previous one's relations") {

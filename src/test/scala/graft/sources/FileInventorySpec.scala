@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path}
 import java.security.MessageDigest
 import java.util.concurrent.atomic.AtomicLong
-import graft.{DataWarehouseSync, GraftConfig, InMemoryGatherClient, SparkSpec}
+import graft.{DataWarehouseSync, GraftConfig, GraftSession, InMemoryGatherClient, SparkSpec}
 import graft.sink.Actions
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -90,6 +90,22 @@ class FileInventorySpec extends SparkSpec {
     // folder rows); binaryFile reads whole files, so reading any would add
     // `file` bytes
     assert(cats < file, s"syncCategories read $cats bytes")
+  }
+
+  test("listing packs a skewed tree as Spark's own open cost would") {
+    // one 1 MB file among 100 of 100 bytes: their mean (~10 KB) as the
+    // open cost would split the small files into 15 read partitions
+    val root = Files.createTempDirectory("graft-skewed")
+    Files.write(root.resolve("big.shp"), new Array[Byte](1 << 20))
+    (1 to 100).foreach(i => Files.write(root.resolve(s"f$i.shp"), new Array[Byte](100)))
+    GraftSession.scoped(spark, "spark.sql.files.openCostInBytes" -> "1024",
+        "spark.sql.files.maxPartitionBytes" -> "65536") { s =>
+      val listed = FileInventory.listing(s, root.toString).rdd.getNumPartitions
+      val plain = s.read.format("binaryFile").option("pathGlobFilter", "*.shp")
+        .load(root.toString).rdd.getNumPartitions
+      // the big file alone, then 58 and 42 small files
+      assert(listed == plain && listed == 3, s"listing $listed, Spark's own $plain")
+    }
   }
 
   test("scan feeds the sync pipeline end-to-end (scan -> dedup -> match)") {

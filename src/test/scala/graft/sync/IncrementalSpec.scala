@@ -1,6 +1,6 @@
 package graft.sync
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Cross-run incremental sync: snapshot-diff classification and the SCD2
@@ -50,10 +50,19 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("property: unchanged snapshot => zero incremental actions") {
+    // each call also runs forced onto generated code: same rows both ways
     val files = SyncInputs.files(spark, sf001)
-    assert(Incremental.diffActions(files, files).isEmpty)
+    assert(sameBothWays { s =>
+      val f = GraftSession.bind(s, files)
+      Incremental.diffActions(f, f)
+    }.isEmpty)
     val run2 = SyncInputs.filesRun2(spark, sf001)
-    assert(Incremental.diffActions(run2, run2).isEmpty)
+    assert(sameBothWays { s =>
+      val r = GraftSession.bind(s, run2)
+      Incremental.diffActions(r, r)
+    }.isEmpty)
+    assert(sameBothWays(s => Incremental.diffActions(GraftSession.bind(s, files),
+      GraftSession.bind(s, run2))).nonEmpty)
   }
 
   test("fixture diff: every action class appears and creates/archives are exact") {
@@ -138,6 +147,13 @@ class IncrementalSpec extends SparkSpec {
     val l1Again = Incremental.updateLedger(l1, run1, 99L)
     assert(l1Again.exceptAll(l1).isEmpty && l1.exceptAll(l1Again).isEmpty,
       "folding an identical run must be a no-op")
+    // the same folds forced onto generated code give the same rows
+    val again = sameBothWays { s =>
+      val once = Incremental.updateLedger(Incremental.emptyLedger(s),
+        GraftSession.bind(s, run1), 1L)
+      Incremental.updateLedger(once, GraftSession.bind(s, run1), 99L)
+    }
+    assert(again.map(_.toString).sorted == l1.collect().toSeq.map(_.toString).sorted)
     l1.unpersist()
   }
 }
